@@ -52,7 +52,8 @@ def build():
     shutil.rmtree(tmp, ignore_errors=True)
     tmp.mkdir(parents=True)
     jar_cp = os.pathsep.join(str(j) for j in jars)
-    cmd = ["java", "-Xss8m", "-Xmx2g", "-cp", jar_cp, "scala.tools.nsc.Main",
+    cmd = ["java", "-Xss8m", "-Xmx2g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={OUT}",
+           "-cp", jar_cp, "scala.tools.nsc.Main",
            "-nowarn", "-d", str(tmp), "-classpath", jar_cp] + [str(f) for f in srcs]
     print(f"htabench: compiling {len(srcs)} sources", file=sys.stderr)
     done = subprocess.run(cmd, stdout=sys.stderr, stderr=sys.stderr)

@@ -35,7 +35,8 @@ ADD_OPENS = [
 
 def java(classpath, work, main_class, *args):
     """The JVM command line: fixed heap, temp files under `work`."""
-    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", f"-Djava.io.tmpdir={work / 'tmp'}"]
+    return (["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:-UsePerfData",
+             f"-Djava.io.tmpdir={work / 'tmp'}"]
             + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
             + ["-cp", os.pathsep.join(classpath), main_class, *args, "--work", str(work)])
 
