@@ -36,21 +36,21 @@ object Workloads {
   val chunkPoints = 1000
 
   val all: Map[String, Spec] = Seq(
-    // writes: batches big enough that the fixed, per-metric and per-point
-    // costs each take a visible share of a batch; the only reads are the
-    // freshness LAST_VALUEs on the growing, uncompacted store. Batch time
-    // falls for the first five batches of a JVM, so five small warm-up
-    // rounds come first
+    // writes: batches big enough that the fixed and the per-point costs
+    // each take a visible share of a batch (at 16 metrics the per-metric
+    // cost does not); the only reads are the freshness LAST_VALUEs on the
+    // growing, uncompacted store. Batch time falls for the first five
+    // batches of a JVM, so five small warm-up rounds come first
     Spec("ingest", metrics = 16, periodNs = S / 10,
       warmBatches = 5, warmPoints = 1000,
       buildBatches = 0, buildPoints = 0, compact = false,
       warmRequests = 0, pointsPerBatch = 4000, clients = 0, shapes = None),
     // reads of a compacted store by concurrent clients; every shape has a
-    // fixed cost (only metric and offset are random). Small rounds pay the
-    // JVM's warm-up; the one round that then writes three days is the
-    // measured write
+    // fixed cost (only metric and offset are random). A small round pays
+    // the query's first-batch costs; the one round that then writes three
+    // days is the measured write
     Spec("history", metrics = 12, periodNs = 10 * S,
-      warmBatches = 2, warmPoints = 360,
+      warmBatches = 1, warmPoints = 360,
       buildBatches = 1, buildPoints = 25920, compact = true,
       warmRequests = 8, pointsPerBatch = 0, clients = 4,
       shapes = Some(Shapes(2 * Day, 4000L * S, 600L * S, 10L * S, Day))),

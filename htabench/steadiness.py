@@ -28,19 +28,18 @@ def main():
     ap.add_argument("--workloads", nargs="*", default=[w["name"] for w in spec["workloads"]])
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=spec["run_seconds"])
     ap.add_argument("--out")
     a = ap.parse_args()
 
     record = {"host": {"cpus": len(os.sched_getaffinity(0)),
                        "machine": platform.machine(), "python": platform.python_version()},
-              "run_seconds": a.seconds, "workloads": {}}
+              "run_seconds": spec["run_seconds"], "workloads": {}}
     for w in a.workloads:
         runs = []
         for seed in range(a.first_seed, a.first_seed + a.runs):
             t0 = time.monotonic()
             out = subprocess.run([sys.executable, str(RUN), "--workload", w, "--seed", str(seed),
-                                  "--seconds", str(a.seconds), "--trace", "0"],
+                                  "--seconds", str(spec["run_seconds"]), "--trace", "0"],
                                  stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
             if out.returncode != 0:
                 raise SystemExit(f"{w} seed {seed}: run failed ({out.returncode})")
@@ -57,7 +56,7 @@ def main():
             med = statistics.median(vals)
             q1, _, q3 = statistics.quantiles(vals, n=4)
             spread = (q3 - q1) / med
-            flag = "" if m["name"] == "setup_s" or spread < m["bound"] / 3 else "  <- above bound/3"
+            flag = "" if spread < m["bound"] / 3 else "  <- above bound/3"
             print(f"{m['name']:28s} {med:12.4f} {q1:12.4f} {q3:12.4f} {spread:7.3f} "
                   f"{m['bound']:6.2f}{flag}")
             summary[m["name"]] = {"median": med, "q1": q1, "q3": q3, "spread": spread,
