@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   * still references them.
   *
   * RELEASE CONTRACT: whoever triggers the returned frame's action owns
-  * the release. The repo's drivers (Bench, Verify, PlanDump, the spec
+  * the release. The repo's mains (Bench, Verify, Explain, the spec
   * suites' harness) snapshot `getPersistentRDDs` before each query and
   * call `SparkEntry.releaseNewlyPersisted` after consuming its result.
   * Any other caller — including one invoking these operators
@@ -41,8 +41,8 @@ object CacheScope {
     * session's CacheManager keeps the logical-plan registration — a
     * later query building the same subtree is substituted with the
     * cached relation and re-materializes it on its next action
-    * (correctness-neutral; plan-SHAPE assertions should run before
-    * any matching persist registers, see LayoutSpec's ordering note).
+    * (correctness-neutral; plan-SHAPE assertions should count nodes
+    * through the cached plans, as LayoutSpec's x168/x169 test does).
     */
   def scoped[A](s: SparkSession)(body: => A): A = {
     val before = s.sparkContext.getPersistentRDDs.keySet

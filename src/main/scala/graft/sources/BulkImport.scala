@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.Ingest
+import graft.operators.{Ingest, SideJob}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -77,8 +77,9 @@ object BulkImport {
     * deepen by one window + join + aggregate per chunk, and an
     * importer's thousands of chunks would overflow plan compilation
     * long before data volume mattered. The previous checkpoint's
-    * blocks are released once the next one is materialized, so
-    * executor storage holds exactly one O(metrics) seed at a time.
+    * blocks are released once the next one is materialized and the
+    * chunk's sink (whose anchor rows read the previous seed) has
+    * settled, so executor storage holds at most two O(metrics) seeds.
     * The seed join is a plain (AQE-planned) left join: small seeds
     * broadcast themselves, and a multi-million-metric seed stays a
     * shuffle join instead of an OOM-ing forced broadcast.
@@ -129,14 +130,12 @@ object BulkImport {
         // never the sink's output; chunk i+1 depends only on the
         // fold) — overlap them so the chunk's two jobs back-fill each
         // other's stragglers instead of serializing (guide §2.6).
-        // The await below keeps the loop's observable order: a chunk
-        // is fully delivered before the next chunk starts, and a
-        // failing sink still fails the import on this iteration.
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val sinkF = Future(sink(keptC.unionByName(anchors), i))
-        try {
+        // alongside() returns only once the sink has settled, which
+        // keeps the loop's observable order: a chunk is fully
+        // delivered before the next chunk starts, and a failing sink
+        // still fails the import on this iteration.
+        val oldIds = seedRdds
+        seedDf = SideJob.alongside(spark)(sink(keptC.unionByName(anchors), i)) {
           val before = spark.sparkContext.getPersistentRDDs.keySet
           // one aggregation folds the chunk into the seed: the retired
           // two-step (per-chunk newMax groupBy, then a second fold
@@ -156,17 +155,16 @@ object BulkImport {
           // the snapshot diff may also catch the sink's own transient
           // cache ids (writeBatch caches and releases its batch) —
           // harmless, unpersisting an already-released id is a no-op;
-          // the fold's checkpoint blocks are always inside the window
-          val newIds = (spark.sparkContext.getPersistentRDDs.keySet -- before).toSet
-          release(seedRdds)
-          seedRdds = newIds
-          seedDf = next
-        } finally
-          // never leave the sink job racing a caller's failure-path
-          // scratch delete — settle it before propagating anything,
-          // then surface its own failure
-          Await.ready(sinkF, Duration.Inf)
-        Await.result(sinkF, Duration.Inf)
+          // the fold's checkpoint blocks are always inside the window.
+          // Tracked at once, so a failing sink still frees them below
+          seedRdds ++= (spark.sparkContext.getPersistentRDDs.keySet -- before)
+          next
+        }
+        // only now, with the sink settled, is the old seed unread: the
+        // sink's `anchors` are built from it, and a localCheckpoint
+        // cannot be recomputed once its blocks are gone
+        release(oldIds)
+        seedRdds --= oldIds
       } finally keptC.unpersist()
     } finally release(seedRdds)
   }

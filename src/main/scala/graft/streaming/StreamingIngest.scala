@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.core.Intervals
-import graft.operators.Ingest
+import graft.operators.{Ingest, SideJob}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -697,33 +697,24 @@ class HtaStore(val root: String, val intervalMin: Long) {
       // return — the idempotent-replay contract is untouched, and a
       // crash mid-overlap leaves the same invisible half-batch a
       // crash mid-sequence did.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
       // no repartition: micro-batches are already metric-hashed by the
       // gate's groupByKey shuffle; partitionBy splits directories and the
       // local sort keeps row groups time-ordered for min/max pruning.
       // day is monotone in time, so sorting (metric, day, time) is the
       // same row order as (metric, time) AND satisfies partitionBy's
       // required (metric, day) prefix — no second sort gets inserted
-      val rawF = Future {
+      SideJob.alongside(spark) {
         batch.filter(!col("anchor"))
           .select("metric", "time", "value")
           .withColumn("day", expr(s"time div $DayNs"))
           .sortWithinPartitions("metric", "day", "time")
           .write.mode("overwrite").partitionBy("metric", "day")
           .parquet(s"$rawPath/batch_id=$batchKey")
-      }
-      try {
+      } {
         Ingest.rollupWithAnchors(batch, intervalMin)
           .write.mode("overwrite").partitionBy("interval_ns")
           .parquet(s"$partialsPath/batch_id=$batchKey")
-      } finally
-        // settle the raw job before propagating anything — a caller's
-        // failure-path scratch delete must never race an in-flight
-        // write (its own failure surfaces on the next line)
-        Await.ready(rawF, Duration.Inf)
-      Await.result(rawF, Duration.Inf)
+      }
       markCommitted(spark, batchKey)
     } finally batch.unpersist()
   }

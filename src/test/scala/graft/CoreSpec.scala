@@ -83,4 +83,13 @@ class CoreSpec extends AnyFunSuite {
       assert(Intervals.bucketStart(b, i) == b)
     }
   }
+
+  test("SPARK_GRAFT_CPUS: a positive integer, the processor count when unset") {
+    assert(GraftSession.parseCpus(Some("8")) == 8)
+    assert(GraftSession.parseCpus(None) == Runtime.getRuntime.availableProcessors)
+    Seq("abc", "0", "-2", "", "4.5").foreach { v =>
+      val e = intercept[IllegalArgumentException](GraftSession.parseCpus(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS"), e.getMessage)
+    }
+  }
 }

@@ -497,6 +497,55 @@ class StreamingSpec extends AnyFunSuite {
     assert(gotL0.exceptAll(expectL0).isEmpty && expectL0.exceptAll(gotL0).isEmpty)
   }
 
+  test("chunked backfill keeps each seed until the sink reading its anchors settles") {
+    val all = (batch1 ++ batch2).toDS().toDF()
+      .select(col("metric"), col("time"), col("value"), col("seq"))
+    val sc = spark.sparkContext
+    val anchorRows = scala.collection.mutable.ArrayBuffer.empty[Long]
+    graft.sources.BulkImport.chunkedGatedChunks(spark, all, 3) { (batch, i) =>
+      if (i >= 1) {
+        // the previous seed's checkpoint is persisted on entry; wait
+        // (bounded) for any entry block to go before reading — a seed
+        // released under a running sink shows up here as a lost block
+        val onEntry = sc.getPersistentRDDs.keySet
+        val deadline = System.nanoTime() + 2000000000L
+        while (onEntry.subsetOf(sc.getPersistentRDDs.keySet) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      }
+      anchorRows += batch.filter(col("anchor")).count()
+    }
+    // chunk 0 has no seed; later chunks carry one anchor per seeded metric
+    assert(anchorRows.head == 0L && anchorRows.tail.forall(_ > 0L),
+      s"anchor rows per chunk: $anchorRows")
+  }
+
+  test("SideJob runs the side job under its caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(j.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try Seq("side-a", "side-b").foreach { g =>
+      groups.clear()
+      sc.setJobGroup(g, g)
+      // the main branch runs no job: every job seen is the side job's
+      try graft.operators.SideJob.alongside(spark)(spark.range(100).count())(())
+      finally sc.clearJobGroup()
+      // listener events are async — the record is settled once it is
+      // non-empty and stops growing
+      val deadline = System.nanoTime() + 10000000000L
+      var prev = -1
+      while ((groups.isEmpty || groups.size != prev) &&
+        System.nanoTime() < deadline) { prev = groups.size; Thread.sleep(200) }
+      import scala.jdk.CollectionConverters._
+      val seen = groups.asScala.toSeq
+      assert(seen.nonEmpty && seen.forall(_ == g), s"side jobs under $g ran in $seen")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("restart from the SAME checkpoint resumes batch ids and stays exact") {
     val store = new HtaStore(mkTmp("hta-samechk"), H)
     val ckpt = mkTmp("ck-same")
