@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * docs; same encoding the responses use, `async_hta_service.hpp:
   * 374-380`). These transforms are the encode/decode pair.
   *
-  * Decode = per-chunk prefix sum. The window is per chunk — one AMQP
-  * message, bounded size — so the sort is local and cheap at any scale.
+  * Decode = per-chunk prefix sum, computed inside each chunk row — one
+  * AMQP message, bounded size — so it needs no shuffle or sort and runs
+  * on streaming frames as well as static ones.
   */
 object ChunkDecode {
 
@@ -27,19 +28,35 @@ object ChunkDecode {
     * The default of 2^20 dwarfs any AMQP message while leaving room for
     * ~8.8e12 chunks — 278k years at one chunk per second. Both bounds
     * are enforced: a violating row raises instead of silently
-    * corrupting the gate's order.
+    * corrupting the gate's order. So does a malformed chunk (null
+    * `chunk_id`, null array elements, arrays of different lengths) and
+    * a prefix sum that overflows; a chunk with a null array yields no
+    * points.
     */
   def decode(chunks: DataFrame, posPerChunk: Long = 1L << 20): DataFrame = {
     require(posPerChunk > 0, "posPerChunk must be positive")
     val maxChunk = Long.MaxValue / posPerChunk - 1
-    val w = Window.partitionBy("metric", "chunk_id").orderBy("pos")
-      .rowsBetween(Window.unboundedPreceding, 0)
+    import chunks.sparkSession.implicits._
     chunks
-      .select(col("metric"), col("chunk_id"),
-        posexplode(arrays_zip(col("time_delta"), col("value"))).as(Seq("pos", "z")))
-      .select(col("metric"), col("chunk_id"), col("pos"),
-        col("z.time_delta").as("d"), col("z.value").as("value"))
-      .withColumn("time", sum("d").over(w))
+      .select(col("metric"), col("chunk_id").cast("long"),
+        col("time_delta").cast("array<bigint>"), col("value").cast("array<double>"))
+      .flatMap { r =>
+        if (r.isNullAt(2) || r.isNullAt(3)) Iterator.empty
+        else {
+          val (ds, vs) = (r.getSeq[Any](2), r.getSeq[Any](3))
+          require(!r.isNullAt(1) && ds.length == vs.length &&
+            !ds.contains(null) && !vs.contains(null),
+            s"malformed chunk (metric=${r.getString(0)} chunk_id=${r.get(1)}): " +
+              "chunk_id must be set and time_delta/value must be equally long " +
+              "arrays without nulls")
+          val (metric, chunkId) = (r.getString(0), r.getLong(1))
+          ds.iterator.scanLeft(0L)((t, d) => Math.addExact(t, d.asInstanceOf[Long]))
+            .drop(1).zip(vs.iterator).zipWithIndex
+            .map { case ((t, v), pos) =>
+              (metric, chunkId, pos, t, v.asInstanceOf[Double]) }
+        }
+      }
+      .toDF("metric", "chunk_id", "pos", "time", "value")
       .select(col("metric"), col("time"), col("value"),
         when(col("chunk_id").between(0L, maxChunk) && col("pos") < posPerChunk,
           col("chunk_id") * posPerChunk + col("pos"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.core.Intervals
 import graft.operators.{Ingest, SideJob}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -664,6 +664,18 @@ class HtaStore(val root: String, val intervalMin: Long) {
     }
   }
 
+  /** The one writer of every store file, raw and partials, batch and
+    * compacted. Parquet v2 data pages let parquet-mr encode the int64
+    * columns as DELTA_BINARY_PACKED instead of PLAIN: a regular
+    * series' sorted `time` shrinks from 8 to well under 1 byte per
+    * point, while dictionaries stay where they beat the fallback
+    * (`value`, `metric`). Readers need no setting — parquet decodes
+    * each file by its own footer, so v1 files in older stores stay
+    * readable and [[compact]] rewrites them through this writer.
+    */
+  private def storeWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.write.option("parquet.writer.version", "v2")
+
   /** Write a gated micro-batch idempotently (see class doc). The commit
     * marker lands only after BOTH writes return — a half-written batch
     * stays invisible to every reader until its replay completes it.
@@ -704,15 +716,15 @@ class HtaStore(val root: String, val intervalMin: Long) {
       // same row order as (metric, time) AND satisfies partitionBy's
       // required (metric, day) prefix — no second sort gets inserted
       SideJob.alongside(spark) {
-        batch.filter(!col("anchor"))
+        storeWriter(batch.filter(!col("anchor"))
           .select("metric", "time", "value")
           .withColumn("day", expr(s"time div $DayNs"))
-          .sortWithinPartitions("metric", "day", "time")
-          .write.mode("overwrite").partitionBy("metric", "day")
+          .sortWithinPartitions("metric", "day", "time"))
+          .mode("overwrite").partitionBy("metric", "day")
           .parquet(s"$rawPath/batch_id=$batchKey")
       } {
-        Ingest.rollupWithAnchors(batch, intervalMin)
-          .write.mode("overwrite").partitionBy("interval_ns")
+        storeWriter(Ingest.rollupWithAnchors(batch, intervalMin))
+          .mode("overwrite").partitionBy("interval_ns")
           .parquet(s"$partialsPath/batch_id=$batchKey")
       }
       markCommitted(spark, batchKey)
@@ -978,7 +990,7 @@ class HtaStore(val root: String, val intervalMin: Long) {
         .filter(!col("__marked") || uncommittedTail).drop("__marked")
       val merged = committedMerged.unionByName(
         preserved.select(committedMerged.columns.map(col): _*))
-      merged.write.partitionBy("batch_id", "interval_ns").parquet(ptmp.toString)
+      storeWriter(merged).partitionBy("batch_id", "interval_ns").parquet(ptmp.toString)
       // marker BEFORE the swap: a marker without a directory is
       // harmless, but a swapped-in compacted directory without a marker
       // would hide all merged history. On a legacy store this also
@@ -1017,7 +1029,7 @@ class HtaStore(val root: String, val intervalMin: Long) {
       val merged = committedFolded.unionByName(preserved)
         .repartitionByRange(col("batch_id"), col("metric"), col("time"))
         .sortWithinPartitions("batch_id", "metric", "day", "time")
-      merged.write.partitionBy("batch_id", "metric", "day").parquet(rtmp.toString)
+      storeWriter(merged).partitionBy("batch_id", "metric", "day").parquet(rtmp.toString)
       markerDirInit(spark)
       markCommitted(spark, "compacted")
       swapCompact(rfs, rcur, rbak, rtmp)

@@ -2,13 +2,25 @@ package graft
 
 import graft.operators.{Ingest, Salting}
 import graft.sources.{ChunkDecode, Tables}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+object SaltingChunkSpec {
+  /** One wire chunk row, as [[ChunkDecode.decode]] reads it. */
+  final case class WireChunk(metric: String, chunk_id: Long,
+                             time_delta: Seq[Long], value: Seq[Double])
+}
+
 class SaltingChunkSpec extends AnyFunSuite {
+  import SaltingChunkSpec.WireChunk
   private val spark = SparkTestBase.spark
   import SparkTestBase.sf
   import spark.implicits._
+
+  /** The messages of `e` and of all its causes, joined. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
 
   test("salted two-phase aggregation equals direct aggregation") {
     val pts = Ingest.quantized(Ingest.sanitize(Tables.htaPoints(spark, sf)))
@@ -57,5 +69,41 @@ class SaltingChunkSpec extends AnyFunSuite {
       .select("metric", "time", "value")
     assert(decoded.exceptAll(original).isEmpty &&
       original.exceptAll(decoded).isEmpty)
+  }
+
+  test("decode runs on a streaming frame and returns the batch decode's points") {
+    val chunks = ChunkDecode.encode(Tables.htaPoints(spark, sf), 100)
+      .as[WireChunk].collect().toSeq
+    val ms = MemoryStream[WireChunk](spark)
+    val q = ChunkDecode.decode(ms.toDF()).writeStream
+      .format("memory").queryName("decoded_chunks").start()
+    try {
+      val (first, rest) = chunks.splitAt(chunks.length / 2)
+      ms.addData(first)
+      q.processAllAvailable()
+      ms.addData(rest)
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamed = spark.table("decoded_chunks")
+    val batch = ChunkDecode.decode(chunks.toDF())
+    assert(streamed.count() == Tables.htaPoints(spark, sf).count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+  }
+
+  test("decode raises on a seq it cannot reconstruct and on a malformed chunk") {
+    def decodeError(posPerChunk: Long, c: WireChunk): String = messages(intercept[Exception](
+      ChunkDecode.decode(Seq(c).toDF(), posPerChunk).collect()))
+    // position 2 does not fit posPerChunk = 2
+    assert(decodeError(2L, WireChunk("m", 0L, Seq(5L, 1L, 1L), Seq(1.0, 2.0, 3.0)))
+      .contains("seq reconstruction out of range (posPerChunk=2): chunk_id=0 pos=2"))
+    // chunk ids past Long.MaxValue / posPerChunk - 1, or negative, would wrap seq
+    val tooBig = Long.MaxValue / 4
+    assert(decodeError(4L, WireChunk("m", tooBig, Seq(5L), Seq(1.0)))
+      .contains(s"seq reconstruction out of range (posPerChunk=4): chunk_id=$tooBig pos=0"))
+    assert(decodeError(4L, WireChunk("m", -1L, Seq(5L), Seq(1.0)))
+      .contains("seq reconstruction out of range (posPerChunk=4): chunk_id=-1 pos=0"))
+    // parallel arrays of different lengths
+    assert(decodeError(4L, WireChunk("m", 0L, Seq(5L, 1L), Seq(1.0)))
+      .contains("malformed chunk (metric=m chunk_id=0)"))
   }
 }
