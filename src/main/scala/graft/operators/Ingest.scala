@@ -104,25 +104,12 @@ object Ingest {
     * Integer bucket math uses `time - time % I` — never `floor(time/I)`,
     * whose double intermediate loses precision above 2^53 ns.
     */
-  def rollup(sanitized: DataFrame, intervalNs: Long): DataFrame =
-    rollupImpl(sanitized, intervalNs, hasAnchors = false)
-
-  /** Rollup variant for streaming micro-batches: rows flagged
-    * `anchor = true` are the carried-over previous point of each metric
-    * (already counted in an earlier batch) — they seed the first hold
-    * segment of this batch but are excluded from the point statistics.
-    */
-  def rollupWithAnchors(sanitizedWithAnchor: DataFrame, intervalNs: Long): DataFrame =
-    rollupImpl(sanitizedWithAnchor, intervalNs, hasAnchors = true)
-
-  private def rollupImpl(sanitized: DataFrame, intervalNs: Long,
-                         hasAnchors: Boolean): DataFrame = {
+  def rollup(sanitized: DataFrame, intervalNs: Long): DataFrame = {
     val i = lit(intervalNs)
     val pts = quantized(sanitized)
     val bucket = (col("time") - col("time") % i).as("bucket_start")
 
-    val realPts = if (hasAnchors) pts.filter(!col("anchor")) else pts
-    val pointAgg = realPts.groupBy(col("metric"), bucket).agg(
+    val pointAgg = pts.groupBy(col("metric"), bucket).agg(
       min("value").as("min_v"),
       max("value").as("max_v"),
       sum("value_c").as("sum_c"),
@@ -157,6 +144,95 @@ object Ingest {
         coalesce(col("cnt"), lit(0L)).as("cnt"),
         coalesce(col("integral_cus"), lit(0L)).as("integral_cus"),
         coalesce(col("active_us"), lit(0L)).as("active_us"))
+  }
+
+  /** One level-0 partial bucket: a row of [[rollup]]'s output schema. */
+  case class Partial(metric: String, interval_ns: Long, bucket_start: Long,
+                     min_v: Option[Double], max_v: Option[Double],
+                     sum_c: Long, cnt: Long, integral_cus: Long,
+                     active_us: Long)
+
+  /** A1 + A2 for ONE series in one linear pass — the reference's
+    * per-insert level maintenance (`metric.insert(tv)`,
+    * async_hta_service.hpp:283) applied to a micro-batch. `rows` are
+    * `(time, value, anchor)` sorted by time; an anchor (the carried
+    * previous point of an earlier batch) seeds the hold segment to its
+    * successor and is never counted as a point. The result equals
+    * [[rollup]]'s rows for the series, column for column, with the
+    * engine's own arithmetic:
+    *  - `value_c` rounds `value*100` HALF_UP on the double's shortest
+    *    decimal (Spark's `round`), then casts with an overflow check;
+    *  - sums and products raise on int64 overflow, as ANSI mode does;
+    *  - min/max order doubles as Spark does (NaN greatest, −0.0 equal
+    *    to 0.0, the first of equals kept).
+    * Point buckets and hold segments arrive in bucket order, so one
+    * open bucket accumulates at a time.
+    */
+  def rollupSeries(metric: String, rows: Iterator[(Long, Double, Boolean)],
+                   intervalNs: Long): Iterator[Partial] = {
+    val i = intervalNs
+    val out = scala.collection.mutable.ArrayBuffer.empty[Partial]
+    var open = false
+    var b, sumC, cnt, integral, active = 0L
+    var minV, maxV = 0.0
+    def flush(): Unit = if (open) out += Partial(metric, i, b,
+      if (cnt > 0) Some(minV) else None, if (cnt > 0) Some(maxV) else None,
+      sumC, cnt, integral, active)
+    def at(bucket: Long): Unit =
+      if (!open || bucket != b) {
+        flush()
+        open = true
+        b = bucket; sumC = 0L; cnt = 0L; integral = 0L; active = 0L
+      }
+    var prevT, prevC = 0L
+    var first = true
+    rows.foreach { case (t, v, anchor) =>
+      val c = centi(v)
+      if (!first) { // hold segment [prevT, t) at prevC, split per bucket
+        val last = Math.subtractExact(t, 1L)
+        val stop = last - last % i
+        var bs = prevT - prevT % i
+        while (bs <= stop) {
+          val end = Math.addExact(bs, i)
+          val dur = (Math.subtractExact(math.min(t, end), math.max(prevT, bs))
+            .toDouble / 1000.0).toLong
+          at(bs)
+          integral = Math.addExact(integral, Math.multiplyExact(prevC, dur))
+          active = Math.addExact(active, dur)
+          bs = end
+        }
+      }
+      if (!anchor) {
+        at(t - t % i)
+        if (cnt == 0L) { minV = v; maxV = v }
+        else {
+          if (compareDoubles(v, minV) < 0) minV = v
+          if (compareDoubles(v, maxV) > 0) maxV = v
+        }
+        sumC = Math.addExact(sumC, c)
+        cnt += 1L
+      }
+      prevT = t; prevC = c; first = false
+    }
+    flush()
+    out.iterator
+  }
+
+  /** Spark's double order: NaN above everything, −0.0 equal to 0.0. */
+  private def compareDoubles(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** `round(value*100)` cast to int64 exactly as Spark evaluates it. */
+  private def centi(v: Double): Long = {
+    val x = v * 100.0
+    val r =
+      if (x.isNaN || x.isInfinite) x
+      else java.math.BigDecimal.valueOf(x)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+    if (Math.floor(r) <= Long.MaxValue.toDouble &&
+        Math.ceil(r) >= Long.MinValue.toDouble) r.toLong
+    else throw new ArithmeticException(
+      s"value*100 = $r overflows int64 (value $v)")
   }
 
   /** A3: merge a level into its parent (coarser) level — the Agg monoid.

@@ -35,8 +35,8 @@ object BulkImport {
   /** Arrival-chunked backfill — the importer's 10 M-row chunk loop
     * (`importer.py:197-249`) re-expressed over the streaming store: the
     * input is split into `nChunks` consecutive `seq` (arrival-order)
-    * ranges, and each chunk flows through the SAME gate + anchored
-    * rollup + batch-keyed write as a streaming micro-batch
+    * ranges, and each chunk flows through the SAME gate, per-series
+    * rollup kernel and batch-keyed write as a streaming micro-batch
     * ([[graft.streaming.HtaStore.writeBatch]]).
     *
     * Why this exists (SURVEY §7 hard-part 3 / SCALE.md §2): the one-shot

@@ -18,13 +18,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * The store is append-only (SURVEY §7 hard-part 5): each micro-batch
   * appends (a) its kept raw points and (b) *partial* level-0 bucket rows
-  * computed from the batch. Because the Agg summary is a commutative
-  * monoid (A3), partial bucket rows merge on read — `levels()` is a
-  * groupBy-merge view — and [[HtaStore.compact]] folds them down
-  * physically whenever convenient. No bucket row is ever updated in
-  * place, so there are no upsert races; the only cross-batch coupling is
-  * the hold segment that bridges a batch boundary, carried by the gate
-  * state and replayed as an `anchor` row (segment-only, never re-counted).
+  * computed from the batch by the gate itself. Because the Agg summary
+  * is a commutative monoid (A3), partial bucket rows merge on read —
+  * `levels()` is a groupBy-merge view — and [[HtaStore.compact]] folds
+  * them down physically whenever convenient. No bucket row is ever
+  * updated in place, so there are no upsert races; the only cross-batch
+  * coupling is the hold segment that bridges a batch boundary, seeded
+  * from the gate state's previous point (segment-only, never
+  * re-counted).
   */
 object StreamingIngest {
 
@@ -44,13 +45,40 @@ object StreamingIngest {
     */
   case class GateState(maxTs: Long, lastValue: Double)
 
-  /** A gated output row: `anchor = true` marks the carried previous point
-    * (segment seed), `false` a newly kept point.
+  /** A gated point as batch callers hand it to [[HtaStore.writeBatch]]:
+    * `anchor = true` marks the carried previous point (segment seed),
+    * `false` a newly kept point.
     */
   case class GatedPoint(metric: String, time: Long, value: Double, anchor: Boolean)
 
+  /** A kept point: one row of the store's raw side. */
+  case class Kept(metric: String, time: Long, value: Double)
+
+  /** One row of the gate's output: a kept point or one level-0 partial
+    * bucket of the same batch — exactly one of the two is set.
+    */
+  case class GateRow(kept: Option[Kept], partial: Option[Ingest.Partial])
+
+  /** The gate's output for one metric of one batch: its kept points and
+    * the level-0 partials [[Ingest.rollupSeries]] derives from them.
+    * `series` is `(time, value, anchor)` sorted by time.
+    */
+  private[graft] def gateRows(metric: String,
+                              series: collection.IndexedSeq[(Long, Double, Boolean)],
+                              intervalNs: Long): Iterator[GateRow] = {
+    val partials = Ingest.rollupSeries(metric, series.iterator, intervalNs)
+    series.iterator.collect { case (t, v, false) =>
+      GateRow(Some(Kept(metric, t, v)), None)
+    } ++ partials.map(p => GateRow(None, Some(p)))
+  }
+
   /** The keyed-state monotonic gate (T1/T2). Within a batch, points are
-    * processed in arrival (`seq`) order — the strand semantics. State
+    * processed in arrival (`seq`) order — the strand semantics. The same
+    * per-metric pass maintains level 0, as the reference's strand does
+    * on every insert (async_hta_service.hpp:283): the state's previous
+    * point plus the kept points are already in time order, so the gate
+    * emits the batch's partial buckets of `intervalNs` beside its kept
+    * points and the store writes both without another shuffle. State
     * seeds from the `seed` Dataset via the initial-state overload (the
     * reference seeds from `metric.range().second`, ref :259): Spark
     * co-partitions the seed with the state store and `putState`s every
@@ -68,8 +96,9 @@ object StreamingIngest {
     * deployment's metric cardinality; new checkpoints pass `Map.empty`.
     */
   def gate(points: Dataset[Point], seed: Dataset[(String, GateState)],
+           intervalNs: Long,
            legacyFallback: Map[String, GateState] = Map.empty)(
-      implicit spark: SparkSession): Dataset[GatedPoint] = {
+      implicit spark: SparkSession): Dataset[GateRow] = {
     import spark.implicits._
     points.groupByKey(_.metric)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout,
@@ -78,19 +107,19 @@ object StreamingIngest {
           val st0 = state.getOption.orElse(legacyFallback.get(metric))
           var maxTs = st0.map(_.maxTs).getOrElse(Long.MinValue)
           var lastV = st0.map(_.lastValue).getOrElse(Double.NaN)
-          val anchor = st0.map(s => GatedPoint(metric, s.maxTs, s.lastValue, anchor = true))
-          val kept = scala.collection.mutable.ArrayBuffer.empty[GatedPoint]
+          val series = scala.collection.mutable.ArrayBuffer
+            .from(st0.map(s => (s.maxTs, s.lastValue, true)))
           it.toArray.sortBy(_.seq).foreach { p =>
             if (!p.value.isNaN && !p.value.isInfinite && p.time > maxTs) {
               maxTs = p.time
               lastV = p.value
-              kept += GatedPoint(metric, p.time, p.value, anchor = false)
+              series += ((p.time, p.value, false))
             }
           }
-          if (kept.isEmpty) Iterator.empty
+          if (series.length == st0.size) Iterator.empty // nothing kept
           else {
             state.update(GateState(maxTs, lastV))
-            (anchor.iterator ++ kept.iterator)
+            gateRows(metric, series, intervalNs)
           }
       }
   }
@@ -250,7 +279,7 @@ object StreamingIngest {
       .filter(!isRo)
       .as[Point]
     val seed = store.seedState(spark, ckptTag, committedMax)
-    val gated = gate(observed, seed,
+    val gated = gate(observed, seed, store.intervalMin,
       if (legacySeed) {
         // the legacy fallback is driver-resident by nature (pre-seed-v2
         // checkpoints lost their batch-0 initial-state window) — bounded
@@ -272,7 +301,7 @@ object StreamingIngest {
     val q = store.startIngestGuarded(spark) {
       gated.toDF()
         .observe("ingest_out",
-          sum(when(!col("anchor"), 1L).otherwise(0L)).as("n_kept"))
+          sum(when(col("kept").isNotNull, 1L).otherwise(0L)).as("n_kept"))
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
@@ -281,7 +310,7 @@ object StreamingIngest {
           // restarts of the same checkpoint (replay overwrites the same
           // directory) but distinct between queries (a fresh checkpoint
           // restarts batch ids at 0 and must not clobber prior batches)
-          store.writeBatch(spark, batch, s"${ckptTag}_$batchId")
+          store.writeGateRows(spark, batch, s"${ckptTag}_$batchId")
         }
         .start()
     }
@@ -671,16 +700,39 @@ class HtaStore(val root: String, val intervalMin: Long) {
     * point, while dictionaries stay where they beat the fallback
     * (`value`, `metric`). Readers need no setting — parquet decodes
     * each file by its own footer, so v1 files in older stores stay
-    * readable and [[compact]] rewrites them through this writer.
+    * readable and [[compact]] rewrites them through this writer. No
+    * `_SUCCESS` file: the store's own `batch_commits/` markers say
+    * which directories are complete.
     */
   private def storeWriter(df: DataFrame): DataFrameWriter[Row] =
     df.write.option("parquet.writer.version", "v2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
 
-  /** Write a gated micro-batch idempotently (see class doc). The commit
-    * marker lands only after BOTH writes return — a half-written batch
-    * stays invisible to every reader until its replay completes it.
+  /** Write a batch of gated points (schema of
+    * [[StreamingIngest.GatedPoint]], anchors included) idempotently: one
+    * shuffle groups each metric's points, and the gate's own per-series
+    * rollup derives their partials, so batch callers write exactly what
+    * the streaming gate would.
     */
   def writeBatch(spark: SparkSession, gated: DataFrame, batchKey: String): Unit = {
+    import spark.implicits._
+    val i = intervalMin
+    writeGateRows(spark, gated.select("metric", "time", "value", "anchor")
+      .as[StreamingIngest.GatedPoint]
+      .groupByKey(_.metric)
+      .flatMapGroups { (m, it) =>
+        StreamingIngest.gateRows(m,
+          it.map(p => (p.time, p.value, p.anchor)).toIndexedSeq.sortBy(_._1), i)
+      }.toDF(), batchKey)
+  }
+
+  /** Write one batch of gate output ([[StreamingIngest.GateRow]])
+    * idempotently (see class doc). The commit marker lands only after
+    * BOTH writes return — a half-written batch stays invisible to every
+    * reader until its replay completes it.
+    */
+  private[graft] def writeGateRows(spark: SparkSession, rows: DataFrame,
+                                   batchKey: String): Unit = {
     pendingCompactCheck(spark)
     // a pre-day (v1) store must be migrated before new day-partitioned
     // directories land next to v1 ones — mixed partition-column chains
@@ -699,16 +751,14 @@ class HtaStore(val root: String, val intervalMin: Long) {
     // absence is what distinguishes a legacy pre-marker store (trust
     // everything) from a store with a half-written first batch
     markerDirInit(spark)
-    val batch = gated.cache()
+    val batch = rows.cache()
     try {
       // the raw write and the partials write are INDEPENDENT jobs over
       // the same cached batch (different artifacts, different dirs) —
-      // overlap them so the rollup's aggregation back-fills the raw
-      // write's I/O tail instead of serializing behind it (guide
-      // §2.6). The commit marker still lands only after BOTH writes
-      // return — the idempotent-replay contract is untouched, and a
-      // crash mid-overlap leaves the same invisible half-batch a
-      // crash mid-sequence did.
+      // overlap them (guide §2.6). The commit marker still lands only
+      // after BOTH writes return — the idempotent-replay contract is
+      // untouched, and a crash mid-overlap leaves the same invisible
+      // half-batch a crash mid-sequence did.
       // no repartition: micro-batches are already metric-hashed by the
       // gate's groupByKey shuffle; partitionBy splits directories and the
       // local sort keeps row groups time-ordered for min/max pruning.
@@ -716,14 +766,17 @@ class HtaStore(val root: String, val intervalMin: Long) {
       // same row order as (metric, time) AND satisfies partitionBy's
       // required (metric, day) prefix — no second sort gets inserted
       SideJob.alongside(spark) {
-        storeWriter(batch.filter(!col("anchor"))
-          .select("metric", "time", "value")
+        storeWriter(batch.filter(col("kept").isNotNull).select("kept.*")
           .withColumn("day", expr(s"time div $DayNs"))
           .sortWithinPartitions("metric", "day", "time"))
           .mode("overwrite").partitionBy("metric", "day")
           .parquet(s"$rawPath/batch_id=$batchKey")
       } {
-        storeWriter(Ingest.rollupWithAnchors(batch, intervalMin))
+        // a batch's partials are at most one row per metric and bucket,
+        // already in (metric, bucket) order: one narrow task writes them
+        // as one file
+        storeWriter(batch.filter(col("partial").isNotNull).select("partial.*")
+          .coalesce(1))
           .mode("overwrite").partitionBy("interval_ns")
           .parquet(s"$partialsPath/batch_id=$batchKey")
       }

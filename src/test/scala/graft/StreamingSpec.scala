@@ -837,18 +837,19 @@ class StreamingSpec extends AnyFunSuite {
     // as a Dataset (never a driver map) flows through the
     // flatMapGroupsWithState initial-state overload into the state
     // store. Correctness is asserted at three far-apart keys — a stale
-    // arrival is gated out and the anchor row carries the seeded value,
-    // both impossible unless that key's seed actually reached its state
-    // partition — and, via batch 2, for a key that had NO batch-0 data
-    // (initial state only applies at batch 0, so this proves every
-    // seeded key was putState'd then, not just the observed ones)
-    import StreamingIngest.GatedPoint
+    // arrival is gated out and the hold segment from the seeded point
+    // carries the seeded value into the partials, both impossible unless
+    // that key's seed actually reached its state partition — and, via
+    // batch 2, for a key that had NO batch-0 data (initial state only
+    // applies at batch 0, so this proves every seeded key was
+    // putState'd then, not just the observed ones)
+    import StreamingIngest.{GateRow, Kept}
     val n = 50000L
     val t0 = T0 // local copy: the closure must not capture the suite
     val seed = spark.range(n)
       .map(i => (s"m$i", StreamingIngest.GateState(t0, i.toDouble)))
     val ms = MemoryStream[Point](spark)
-    val gated = StreamingIngest.gate(ms.toDS(), seed)(spark)
+    val gated = StreamingIngest.gate(ms.toDS(), seed, H)(spark)
     val q = gated.writeStream.outputMode("append")
       .format("memory").queryName("hc_seed")
       .option("checkpointLocation", mkTmp("ck-hc"))
@@ -866,15 +867,22 @@ class StreamingSpec extends AnyFunSuite {
       Point("m12345", T0 + H, 6.0, 8))) // fresh → kept, seeded anchor
     q.processAllAvailable()
     q.stop()
-    val got = spark.table("hc_seed").as[GatedPoint].collect().toSet
+    val got = spark.table("hc_seed").as[GateRow].collect().toSet
+    def kept(m: String, t: Long, v: Double) = GateRow(Some(Kept(m, t, v)), None)
+    // a bucket holding one point of value v, or a whole hour held at
+    // the seeded value (no points: cnt 0, null min/max)
+    def point(m: String, b: Long, v: Double) = GateRow(None, Some(Ingest.Partial(
+      m, H, b, Some(v), Some(v), math.round(v * 100), 1L, 0L, 0L)))
+    def held(m: String, b: Long, seeded: Double) = GateRow(None, Some(Ingest.Partial(
+      m, H, b, None, None, 0L, 0L, math.round(seeded * 100) * 3600000000L, 3600000000L)))
     assert(got == Set(
-      GatedPoint("m25000", T0, 25000.0, anchor = true),
-      GatedPoint("m25000", T0 + H, 5.0, anchor = false),
-      GatedPoint("m49999", T0, 49999.0, anchor = true),
-      GatedPoint("m49999", T0 + 2 * H, 2.5, anchor = false),
-      GatedPoint("fresh", T0, 7.0, anchor = false),
-      GatedPoint("m12345", T0, 12345.0, anchor = true),
-      GatedPoint("m12345", T0 + H, 6.0, anchor = false)))
+      kept("m25000", T0 + H, 5.0), held("m25000", T0, 25000.0),
+      point("m25000", T0 + H, 5.0),
+      kept("m49999", T0 + 2 * H, 2.5), held("m49999", T0, 49999.0),
+      held("m49999", T0 + H, 49999.0), point("m49999", T0 + 2 * H, 2.5),
+      kept("fresh", T0, 7.0), point("fresh", T0, 7.0),
+      kept("m12345", T0 + H, 6.0), held("m12345", T0, 12345.0),
+      point("m12345", T0 + H, 6.0)))
   }
 
   test("history reads during active ingest: committed-only, monotone, snapshot-consistent") {

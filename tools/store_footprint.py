@@ -9,13 +9,18 @@ Every regular file under the root is counted once, in one of these sides:
   markers   batch_commits/*         (commit markers)
   crc       any *.crc               (Hadoop checksum side files)
   other     anything else           (_SUCCESS, lock files, ...)
-A point is one row of the raw parquet files. Below the sides, every
-parquet column of raw and partials is listed with its compressed bytes
-(summed over all row groups), bytes per point and the encodings its
-footers name, so a storage change can be sized column by column.
+A point is one row of the raw parquet files. Below the sides, the files
+of each batch directory (`raw/batch_id=<k>` and `partials/batch_id=<k>`
+together) are counted by kind: raw parquet, partials parquet, `.crc`
+and other, one row per batch key and a median row, so a change to the
+files a micro-batch leaves behind shows per batch. Last, every parquet
+column of raw and partials is listed with its compressed bytes (summed
+over all row groups), bytes per point and the encodings its footers
+name, so a storage change can be sized column by column.
 """
 import collections
 import pathlib
+import statistics
 import sys
 
 import pyarrow.parquet as pq
@@ -32,6 +37,21 @@ def side_of(rel):
     if top == "batch_commits":
         return "markers"
     return "other"
+
+
+def batch_files(root):
+    """Files per batch key, by kind: {key: Counter(raw, partials, crc, other)}."""
+    per_batch = collections.defaultdict(collections.Counter)
+    for top in ("raw", "partials"):
+        for d in sorted((root / top).glob("batch_id=*")):
+            key = d.name[len("batch_id="):]
+            for f in d.rglob("*"):
+                if not f.is_file():
+                    continue
+                kind = ("crc" if f.name.endswith(".crc")
+                        else top if f.name.endswith(".parquet") else "other")
+                per_batch[key][kind] += 1
+    return per_batch
 
 
 def main():
@@ -74,6 +94,19 @@ def main():
     for side in SIDES:
         print(f"{side:<10}{side_files[side]:>7}{side_bytes[side]:>14}"
               f"{per_point(side_bytes[side])}")
+    per_batch = batch_files(root)
+    if per_batch:
+        kinds = ("raw", "partials", "crc", "other")
+        print()
+        print(f"{'batch':<24}" + "".join(f"{k:>10}" for k in kinds))
+        def natural(key):  # <tag>_<batch id>: batch 10 after batch 9
+            tag, _, n = key.rpartition("_")
+            return (tag, int(n)) if n.isdigit() else (key, -1)
+        for key, c in sorted(per_batch.items(), key=lambda kv: natural(kv[0])):
+            print(f"{key:<24}" + "".join(f"{c[k]:>10}" for k in kinds))
+        print(f"{'median':<24}" + "".join(
+            f"{statistics.median(c[k] for c in per_batch.values()):>10g}"
+            for k in kinds))
     print()
     print(f"{'column':<24}{'compressed':>12}{'B/point':>10}  encodings")
     for (side, name), b in sorted(col_bytes.items()):
