@@ -1,7 +1,8 @@
 package graft.operators
 
-import graft.core.Intervals
-import org.apache.spark.sql.DataFrame
+import graft.core.{HistoryRequest, HistoryResponse, Intervals}
+import graft.core.{HistoryRequest => R, HistoryResponse => Resp}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,19 +25,12 @@ object HtaService {
   def aggregateRange(sanitized: DataFrame, startNs: Long, endNs: Long): DataFrame =
     presentAgg(rawPartial(sanitized, startNs, endNs, includeEnd = true), startNs)
 
-  /** Shared presentation of an exact partial Agg — ONE copy of the
-    * integer-domain → double formula (a scale change edited in only one
-    * of the A4 paths would silently desynchronize them).
+  /** Presentation of an exact partial Agg over a range starting at
+    * `startNs` ([[Ingest.presented]]).
     */
   private def presentAgg(agg: DataFrame, startNs: Long): DataFrame =
-    agg.select(
-      col("metric"),
-      lit(startNs).as("time_delta"),
-      col("min_v"), col("max_v"),
-      (col("sum_c").cast("double") / 100.0).as("sum_v"),
-      col("cnt"),
-      (col("integral_cus").cast("double") / 1e8).as("integral_vs"),
-      (col("active_us") * 1000L).as("active_ns"))
+    agg.select(Seq(col("metric"), lit(startNs).as("time_delta")) ++
+      Ingest.presented: _*)
 
   /** A4 v2 — the 100 TB-scale path: compose the answer from pre-aggregated
     * interior level buckets plus raw-exact edge partials, instead of
@@ -53,15 +47,9 @@ object HtaService {
     *     clipped to `[iend, end)`.
     * The three partials are disjoint in both points and covered time, so
     * the Agg monoid merge of them equals the raw-exact v1 answer — the
-    * oracle for this query IS the v1 SQL.
-    */
-  def aggregateRangeFast(sanitized: DataFrame, levels: Seq[Long],
-                         startNs: Long, endNs: Long): DataFrame =
-    aggregateRangeFast(sanitized, Ingest.rollup(sanitized, levels.head),
-      levels, startNs, endNs)
-
-  /** Variant reading the interior from a materialized level-0 table (the
-    * deployed path — ingest maintains the levels, queries only read).
+    * oracle for this query IS the v1 SQL. The interior comes from a
+    * materialized level-0 table (ingest maintains the levels, queries
+    * only read).
     */
   def aggregateRangeFast(sanitized: DataFrame, level0: DataFrame,
                          levels: Seq[Long], startNs: Long, endNs: Long): DataFrame = {
@@ -222,46 +210,188 @@ object HtaService {
     * response out (the reference's `read_` switch, ref `:346-512`).
     * Single-metric addressing and W4 delta encoding applied, exactly the
     * response shapes of FIXTURES.md §5.
+    *
+    * Like the reference's one linear pass over the metric on its strand,
+    * each request is ONE job of ONE task with no exchange: the metric's
+    * raw rows ([[series]]) go through one Scala kernel per shape, whose
+    * integer-domain rows [[Ingest.presented]] turns into the response as
+    * a narrow projection. Parallelism comes from concurrent requests.
     */
-  def history(req: graft.core.HistoryRequest, sanitized: DataFrame,
-              levels: Seq[Long]): graft.core.HistoryResponse = {
-    import graft.core.{HistoryRequest => R, HistoryResponse => Resp}
+  def history(req: HistoryRequest, sanitized: DataFrame,
+              levels: Seq[Long]): HistoryResponse = {
+    val spark = sanitized.sparkSession
+    import spark.implicits._
     req match {
       case R.AggregateTimeline(m, s, e, im) =>
-        Resp.Aggregates(deltaEncode(
-          timeline(sanitized.filter(col("metric") === m), levels, s, e, im),
-          "bucket_start"))
+        Resp.Aggregates(timelineOf(sanitized, m, levels, s, e, im))
       case R.FlexTimeline(m, s, e, im) =>
-        val one = sanitized.filter(col("metric") === m)
         if (flexIsRaw(levels, im))
-          Resp.Raw(deltaEncode(flexRaw(one, s, e), "time"))
-        else
-          Resp.Aggregates(deltaEncode(timeline(one, levels, s, e, im), "bucket_start"))
+          Resp.Raw(series(sanitized, m, Some((s, e)))
+            .mapPartitions(deltaKernel(m)).toDF())
+        else Resp.Aggregates(timelineOf(sanitized, m, levels, s, e, im))
       case R.Aggregate(m, s, e) =>
         // the reference unconditionally returns ONE aggregate (count = 0
-        // on a silent range — add_aggregate at ref :454-461), never zero.
-        // Execute ONCE and localize: an isEmpty probe followed by the
-        // caller consuming the lazy frame would run the whole
-        // aggregation job twice per request
-        val df = aggregateRange(sanitized.filter(col("metric") === m), s, e)
-        val rows = df.collect()
-        val spark = sanitized.sparkSession
-        if (rows.isEmpty) {
-          import spark.implicits._
-          Resp.Aggregates(Seq((m, s)).toDF("metric", "time_delta")
-            .withColumn("min_v", lit(null).cast("double"))
-            .withColumn("max_v", lit(null).cast("double"))
-            .withColumn("sum_v", lit(0.0))
-            .withColumn("cnt", lit(0L))
-            .withColumn("integral_vs", lit(0.0))
-            .withColumn("active_ns", lit(0L)))
-        } else Resp.Aggregates(spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), df.schema))
+        // on a silent range — add_aggregate at ref :454-461): the kernel
+        // always emits its one row
+        Resp.Aggregates(presentAgg(
+          series(sanitized, m).mapPartitions(aggregateKernel(m, s, e)).toDF(), s))
       case R.LastValue(m) =>
-        Resp.Raw(lastValue(sanitized.filter(col("metric") === m))
-          .withColumn("time_delta", col("time")))
+        Resp.Raw(series(sanitized, m, timeOrdered = false)
+          .mapPartitions(lastValueKernel(m)).toDF())
     }
   }
+
+  /** A delta-encoded timeline bucket in the exact integer domain: the
+    * columns of [[Ingest.Partial]] plus W4's `time_delta`.
+    */
+  final case class TimelineRow(metric: String, interval_ns: Long,
+                               bucket_start: Long, min_v: Option[Double],
+                               max_v: Option[Double], sum_c: Long, cnt: Long,
+                               integral_cus: Long, active_us: Long,
+                               time_delta: Long)
+
+  /** A raw point of a response, with W4's `time_delta`. */
+  final case class RawRow(metric: String, time: Long, value: Double,
+                          time_delta: Long)
+
+  /** The one job behind every request: `metric`'s rows (its `metric=`
+    * directories on a store read), optionally bounded to the closed
+    * `[start, end]`, in ONE task — `coalesce(1)` is narrow — and, when
+    * `timeOrdered`, sorted by time inside that task: a local sort, not
+    * an exchange, since the files of one metric arrive in no time order.
+    */
+  private def series(sanitized: DataFrame, metric: String,
+                     bound: Option[(Long, Long)] = None,
+                     timeOrdered: Boolean = true): Dataset[(Long, Double)] = {
+    val spark = sanitized.sparkSession
+    import spark.implicits._
+    val one = sanitized.filter(col("metric") === metric)
+    val rows = bound.fold(one) { case (s, e) =>
+      one.filter(col("time") >= s && col("time") <= e)
+    }.select("time", "value").coalesce(1)
+    (if (timeOrdered) rows.sortWithinPartitions("time") else rows)
+      .as[(Long, Double)]
+  }
+
+  /** A5 AGGREGATE_TIMELINE, and FLEX_TIMELINE on a level: the coarsest
+    * level with `interval ≤ intervalMaxNs` (the finest when none fits,
+    * as the reference falls back), its buckets overlapping `[start,
+    * end)`, delta-encoded and presented.
+    */
+  private def timelineOf(sanitized: DataFrame, metric: String,
+                         levels: Seq[Long], startNs: Long, endNs: Long,
+                         intervalMaxNs: Long): DataFrame = {
+    val spark = sanitized.sparkSession
+    import spark.implicits._
+    val interval = Intervals.selectLevel(levels, intervalMaxNs)
+      .getOrElse(levels.min)
+    Ingest.present(series(sanitized, metric)
+      .mapPartitions(timelineKernel(metric, levels.head, interval, startNs, endNs))
+      .toDF(), "time_delta")
+  }
+
+  /** A time-ordered series → its level-0 partials ([[Ingest.rollupSeries]],
+    * the gate's kernel), merged in order to `interval` with the Agg
+    * monoid — [[Ingest.mergeToLevel]]'s arithmetic: min/max in Spark's
+    * double order skipping nulls and keeping the first of equals, int64
+    * sums raising on overflow as ANSI mode does — then the buckets
+    * overlapping `[startNs, endNs)`, delta-encoded.
+    */
+  private def timelineKernel(metric: String, finest: Long, interval: Long,
+                             startNs: Long, endNs: Long)(
+      pts: Iterator[(Long, Double)]): Iterator[TimelineRow] = {
+    val partials = Ingest.rollupSeries(metric,
+      pts.map { case (t, v) => (t, v, false) }, finest).buffered
+    // `b` replaces `a` only when strictly lower (sign 1) or higher (−1)
+    def pick(a: Option[Double], b: Option[Double], sign: Int) =
+      if (a.isEmpty || b.exists(y => sign * Ingest.compareDoubles(y, a.get) < 0)) b
+      else a
+    val merged = Iterator.continually(partials).takeWhile(_.hasNext).map { it =>
+      val p = it.next()
+      var acc = p.copy(interval_ns = interval,
+        bucket_start = p.bucket_start - p.bucket_start % interval)
+      while (it.hasNext && it.head.bucket_start - it.head.bucket_start % interval ==
+          acc.bucket_start) {
+        val q = it.next()
+        acc = acc.copy(min_v = pick(acc.min_v, q.min_v, 1),
+          max_v = pick(acc.max_v, q.max_v, -1),
+          sum_c = Math.addExact(acc.sum_c, q.sum_c),
+          cnt = Math.addExact(acc.cnt, q.cnt),
+          integral_cus = Math.addExact(acc.integral_cus, q.integral_cus),
+          active_us = Math.addExact(acc.active_us, q.active_us))
+      }
+      acc
+    }
+    var prev = 0L
+    merged.filter(b => Math.addExact(b.bucket_start, interval) > startNs &&
+        b.bucket_start < endNs)
+      .map { b =>
+        val row = TimelineRow(b.metric, b.interval_ns, b.bucket_start,
+          b.min_v, b.max_v, b.sum_c, b.cnt, b.integral_cus, b.active_us,
+          Math.subtractExact(b.bucket_start, prev))
+        prev = b.bucket_start
+        row
+      }
+  }
+
+  /** A4 AGGREGATE over a time-ordered series in one fold — the
+    * arithmetic of [[rawPartial]] with `includeEnd`: points in
+    * `[startNs, endNs]` give min/max/`sum_c`/`cnt`, hold segments clipped
+    * to `[startNs, endNs)` give `integral_cus`/`active_us`, with
+    * `value_c` rounded HALF_UP and int64 overflow raising. Always ONE
+    * row, the range's partial (`bucket_start` = start, no level:
+    * `interval_ns` 0): a silent range has `cnt = 0` and null min/max.
+    */
+  private def aggregateKernel(metric: String, startNs: Long, endNs: Long)(
+      pts: Iterator[(Long, Double)]): Iterator[Ingest.Partial] = {
+    var minV, maxV = 0.0
+    var sumC, cnt, integral, active = 0L
+    var prevT, prevC = 0L
+    var first = true
+    pts.foreach { case (t, v) =>
+      val c = Ingest.centi(v)
+      if (!first && prevT < endNs && t > startNs) {
+        val dur = (Math.subtractExact(math.min(t, endNs), math.max(prevT, startNs))
+          .toDouble / 1000.0).toLong
+        integral = Math.addExact(integral, Math.multiplyExact(prevC, dur))
+        active = Math.addExact(active, dur)
+      }
+      if (t >= startNs && t <= endNs) {
+        if (cnt == 0L) { minV = v; maxV = v }
+        else {
+          if (Ingest.compareDoubles(v, minV) < 0) minV = v
+          if (Ingest.compareDoubles(v, maxV) > 0) maxV = v
+        }
+        sumC = Math.addExact(sumC, c)
+        cnt += 1L
+      }
+      prevT = t; prevC = c; first = false
+    }
+    Iterator.single(Ingest.Partial(metric, 0L, startNs,
+      if (cnt > 0) Some(minV) else None, if (cnt > 0) Some(maxV) else None,
+      sumC, cnt, integral, active))
+  }
+
+  /** A6 FLEX_TIMELINE's raw branch over a time-ordered, range-bounded
+    * series: each point with its W4 delta.
+    */
+  private def deltaKernel(metric: String)(
+      pts: Iterator[(Long, Double)]): Iterator[RawRow] = {
+    var prev = 0L
+    pts.map { case (t, v) =>
+      val row = RawRow(metric, t, v, Math.subtractExact(t, prev))
+      prev = t
+      row
+    }
+  }
+
+  /** A7 LAST_VALUE (ref `:465-487`): the newest point, in any row order;
+    * none for an empty metric. Its delta is relative to epoch.
+    */
+  private def lastValueKernel(metric: String)(
+      pts: Iterator[(Long, Double)]): Iterator[RawRow] =
+    pts.reduceOption((a, b) => if (b._1 > a._1) b else a)
+      .iterator.map { case (t, v) => RawRow(metric, t, v, t) }
 
   /** W4: response delta-encoding — `time_delta[i] = t[i] − t[i−1]`, first
     * delta relative to epoch (ref `:374-380`). Presentation-layer, per

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -219,11 +219,11 @@ object Ingest {
   }
 
   /** Spark's double order: NaN above everything, −0.0 equal to 0.0. */
-  private def compareDoubles(x: Double, y: Double): Int =
+  private[operators] def compareDoubles(x: Double, y: Double): Int =
     if (x == y) 0 else java.lang.Double.compare(x, y)
 
   /** `round(value*100)` cast to int64 exactly as Spark evaluates it. */
-  private def centi(v: Double): Long = {
+  private[operators] def centi(v: Double): Long = {
     val x = v * 100.0
     val r =
       if (x.isNaN || x.isInfinite) x
@@ -267,16 +267,24 @@ object Ingest {
     all.reduce(_ unionByName _)
   }
 
-  /** Presentation projection: exact integer domain → user-facing doubles
-    * (`sum_v`, `integral_vs` value·seconds) + ns `active_time`.
-    * Each division is a single correctly-rounded IEEE op — deterministic.
+  /** The aggregate columns of every response, from the exact integer
+    * domain: user-facing doubles (`sum_v`, `integral_vs` value·seconds)
+    * and ns `active_ns`. The ONE copy of the formula — a scale change
+    * edited in only one response shape would silently desynchronize
+    * them. Each division is a single correctly-rounded IEEE op —
+    * deterministic.
     */
-  def present(level: DataFrame): DataFrame =
-    level.select(
-      col("metric"), col("interval_ns"), col("bucket_start"),
-      col("min_v"), col("max_v"),
-      (col("sum_c").cast("double") / 100.0).as("sum_v"),
-      col("cnt"),
-      (col("integral_cus").cast("double") / 1e8).as("integral_vs"),
-      (col("active_us") * 1000L).as("active_ns"))
+  def presented: Seq[Column] = Seq(
+    col("min_v"), col("max_v"),
+    (col("sum_c").cast("double") / 100.0).as("sum_v"),
+    col("cnt"),
+    (col("integral_cus").cast("double") / 1e8).as("integral_vs"),
+    (col("active_us") * 1000L).as("active_ns"))
+
+  /** Presentation projection of a level: its keys, [[presented]], then
+    * the `trailing` columns as they are.
+    */
+  def present(level: DataFrame, trailing: String*): DataFrame =
+    level.select(Seq(col("metric"), col("interval_ns"), col("bucket_start")) ++
+      presented ++ trailing.map(col): _*)
 }

@@ -936,6 +936,9 @@ object Similarity {
     * assigned codeword and the exact int64 quantization error `d2` —
     * the per-subspace distortion a PQ deployment monitors (rising
     * distortion = stale codebooks, same signal as [[kmeansInertia]]).
+    *
+    * Persists the PQ subvector fan behind the returned lazy frame: the
+    * caller releases it after consuming the result ([[CacheScope]]).
     */
   def pqCodes(emb: DataFrame, m: Int = 8, dims: Int = 64): DataFrame =
     pqParts(emb, m, dims)._2
@@ -948,6 +951,9 @@ object Similarity {
     * the current corpus (drifted embeddings, new content domain) —
     * re-learn before recall decays silently. m rows out of ONE
     * partially-aggregated groupBy over [[pqCodes]].
+    *
+    * Persists the PQ subvector fan behind the returned lazy frame: the
+    * caller releases it after consuming the result ([[CacheScope]]).
     */
   def pqDistortion(emb: DataFrame, m: Int = 8, dims: Int = 64): DataFrame =
     pqCodes(emb, m, dims)
@@ -970,6 +976,9 @@ object Similarity {
     * (m rows per vector fanning ×|Q|) and one (q_id, vec_id) partial
     * aggregation; ranking is a per-query window over an
     * already-reduced n-row frame per query.
+    *
+    * Persists the PQ subvector fan behind the returned lazy frame: the
+    * caller releases it after consuming the result ([[CacheScope]]).
     */
   def topKPqAdc(emb: DataFrame, queryIds: Seq[Long], k: Int,
                 m: Int = 8, dims: Int = 64): DataFrame = {
@@ -1042,6 +1051,9 @@ object Similarity {
     * Same plan as [[topKPqAdc]] plus one vec_id equi-join to recover
     * each code row's cell and the `cell == q_cell` filter pushed into
     * the broadcast-join output.
+    *
+    * Persists the PQ subvector fan behind the returned lazy frame: the
+    * caller releases it after consuming the result ([[CacheScope]]).
     */
   def topKIvfPqAdc(emb: DataFrame, queryIds: Seq[Long], k: Int,
                    m: Int = 8, dims: Int = 64): DataFrame = {
@@ -1071,6 +1083,9 @@ object Similarity {
     * broadcast distance table plus the (q_id, cell) semi-restriction —
     * `nprobe/|cells|` of the 32×-compressed code table per query, the
     * original vectors never read.
+    *
+    * Persists the PQ subvector fan behind the returned lazy frame: the
+    * caller releases it after consuming the result ([[CacheScope]]).
     */
   def topKIvfPqAdcProbed(emb: DataFrame, queryIds: Seq[Long], k: Int,
                          nprobe: Int = 2, m: Int = 8,

@@ -115,7 +115,8 @@ class PropertySpec extends AnyFunSuite {
       val a = T0 + r.nextLong(60L * H)
       val b = a + 1 + r.nextLong(12L * H)
       val v1 = HtaService.aggregateRange(clean, a, b)
-      val v2 = HtaService.aggregateRangeFast(clean, SparkEntry.Q.Ladder, a, b)
+      val v2 = HtaService.aggregateRangeFast(clean,
+        Ingest.rollup(clean, SparkEntry.Q.Ladder.head), SparkEntry.Q.Ladder, a, b)
       assert(v1.exceptAll(v2).isEmpty && v2.exceptAll(v1).isEmpty, s"[$a,$b]")
     }
   }

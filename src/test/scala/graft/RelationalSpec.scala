@@ -25,7 +25,8 @@ class RelationalSpec extends AnyFunSuite {
         df.as[(String, Long, Option[Double], Option[Double], Double, Long, Double, Long)]
           .collect().sortBy(_._1).toSeq
       val v1 = rows(HtaService.aggregateRange(sanitized, a, b))
-      val v2 = rows(HtaService.aggregateRangeFast(sanitized, ladder, a, b))
+      val v2 = rows(HtaService.aggregateRangeFast(sanitized,
+        Ingest.rollup(sanitized, ladder.head), ladder, a, b))
       assert(v1 == v2, s"range [$a, $b]")
     }
   }
