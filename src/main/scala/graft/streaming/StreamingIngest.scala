@@ -215,6 +215,30 @@ object StreamingIngest {
     (tag, committedMax, incarnation.contains(":/"))
   }
 
+  /** Refuse to restart a checkpoint whose gate state is behind the
+    * store. Spark applies initial state only at batch 0, so a restarted
+    * query gates from its state alone: a metric with committed history
+    * newer than its state (a backfill, or another checkpoint's batches,
+    * landed while the query was stopped) would let stale points in
+    * behind it. A fresh checkpoint seeds from the store at batch 0.
+    */
+  private def assertStateCovers(spark: SparkSession, checkpoint: String,
+                                seed: Dataset[(String, GateState)]): Unit = {
+    import spark.implicits._
+    val state = spark.read.format("statestore").load(checkpoint)
+      .select(col("key.value").as("metric"),
+        col("value.groupState.maxTs").as("stateTs"))
+    seed.toDF("metric", "seed").join(state, Seq("metric"), "left")
+      .filter(col("stateTs").isNull || col("stateTs") < col("seed.maxTs"))
+      .select("metric").as[String].head(1).headOption.foreach { m =>
+        throw new IllegalStateException(
+          s"checkpoint $checkpoint is behind the store: metric '$m' has " +
+            "committed history newer than its gate state, and a restarted " +
+            "query gates from its state only — restart the ingest on a " +
+            "fresh checkpoint, which seeds every metric from the store")
+      }
+  }
+
   /** Start the ingest query: gate → foreachBatch dual write into `store`.
     * Ack semantics (T4): the checkpoint commit happens after both writes
     * return — a replayed batch re-runs through the gate, whose state
@@ -279,6 +303,7 @@ object StreamingIngest {
       .filter(!isRo)
       .as[Point]
     val seed = store.seedState(spark, ckptTag, committedMax)
+    if (!legacySeed && committedMax >= 0L) assertStateCovers(spark, checkpoint, seed)
     val gated = gate(observed, seed, store.intervalMin,
       if (legacySeed) {
         // the legacy fallback is driver-resident by nature (pre-seed-v2
@@ -484,12 +509,10 @@ class HtaStore(val root: String, val intervalMin: Long) {
 
   // explicit read schemas: partition-column type inference would turn
   // all-numeric metric names (sensor ids like "42") into an int column,
-  // breaking seedState's typed Dataset and every string comparison
+  // breaking seedState's typed Dataset and every string comparison; on
+  // a pre-day (v1) raw tree `day` is a column its files lack: null
   private val rawSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "time LONG, value DOUBLE, metric STRING, day LONG, batch_id STRING")
-  // pre-day (v1) raw layout: batch_id/metric with no day level
-  private val rawSchemaV1 = org.apache.spark.sql.types.StructType.fromDDL(
-    "time LONG, value DOUBLE, metric STRING, batch_id STRING")
   private val partialsSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "metric STRING, bucket_start LONG, min_v DOUBLE, max_v DOUBLE, " +
       "sum_c LONG, cnt LONG, integral_cus LONG, active_us LONG, " +
@@ -579,8 +602,8 @@ class HtaStore(val root: String, val intervalMin: Long) {
     */
   private def committedKeys(spark: SparkSession): Option[Set[String]] = {
     val (hfs, cp) = fs(spark, commitsPath)
-    if (!hfs.exists(cp)) None
-    else Some(hfs.listStatus(cp).map(_.getPath.getName).toSet)
+    try Some(hfs.listStatus(cp).map(_.getPath.getName).toSet)
+    catch { case _: java.io.FileNotFoundException => None }
   }
 
   private def markCommitted(spark: SparkSession, batchKey: String): Unit = {
@@ -606,56 +629,48 @@ class HtaStore(val root: String, val intervalMin: Long) {
     }
   }
 
-  /** An `isin` literal list grows one entry per micro-batch forever and
-    * eventually dominates analysis/codegen; past a small size, switch
-    * to a broadcast left-semi join against the marker table (constant
-    * plan size at any batch count).
+  /** The committed rows of `df` (`None`: a legacy pre-marker store,
+    * every batch trusted). An `isin` literal list grows one entry per
+    * micro-batch forever and eventually dominates analysis/codegen;
+    * past a small size, switch to a broadcast left-semi join against
+    * the marker table (constant plan size at any batch count).
     */
   private def commitFilter(spark: SparkSession, df: DataFrame,
-                           keys: Set[String],
-                           keep: Boolean = true): DataFrame = {
+                           keys: Option[Set[String]]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    if (keys.isEmpty) df.filter(lit(!keep))
-    else if (keys.size <= 128) {
-      // NULL batch_id (impossible by construction — it's a partition
-      // column — but cheap to pin down): `!isin` would drop such a row
-      // while the left_anti branch keeps it; make both plans keep it
-      val in = col("batch_id").isin(keys.toSeq: _*)
-      df.filter(if (keep) in else !in || col("batch_id").isNull)
-    } else {
-      import spark.implicits._
-      df.join(broadcast(keys.toSeq.toDF("batch_id")), Seq("batch_id"),
-        if (keep) "left_semi" else "left_anti")
+    keys match {
+      case None => df
+      case Some(ks) if ks.isEmpty => df.filter(lit(false))
+      case Some(ks) if ks.size <= 128 =>
+        df.filter(col("batch_id").isin(ks.toSeq: _*))
+      case Some(ks) =>
+        import spark.implicits._
+        df.join(broadcast(ks.toSeq.toDF("batch_id")), Seq("batch_id"), "left_semi")
     }
   }
 
   /** One-pass membership tag for [[HtaStore.compact]]: `df` plus a
-    * non-null boolean `flag` column marking committed batch keys —
-    * one broadcast join (or codegen'd isin) regardless of how many
-    * downstream splits consume the flag, where semi+anti filtering
-    * would pay the join twice.
+    * non-null boolean `flag` column marking committed batch keys (all
+    * of them on a legacy pre-marker store) — one broadcast join (or
+    * codegen'd isin) regardless of how many downstream splits consume
+    * the flag, where semi+anti filtering would pay the join twice.
     */
   private def withCommitFlag(spark: SparkSession, df: DataFrame,
-                             keys: Set[String], flag: String): DataFrame = {
+                             keys: Option[Set[String]], flag: String): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
-    if (keys.isEmpty) df.withColumn(flag, lit(false))
-    else if (keys.size <= 128)
-      df.withColumn(flag, col("batch_id").isin(keys.toSeq: _*))
-    else {
-      import spark.implicits._
-      val marks = keys.toSeq.toDF("batch_id").withColumn("__mark", lit(true))
-      df.join(broadcast(marks), Seq("batch_id"), "left")
-        .withColumn(flag, coalesce(col("__mark"), lit(false)))
-        .drop("__mark")
+    keys match {
+      case None => df.withColumn(flag, lit(true))
+      case Some(ks) if ks.isEmpty => df.withColumn(flag, lit(false))
+      case Some(ks) if ks.size <= 128 =>
+        df.withColumn(flag, col("batch_id").isin(ks.toSeq: _*))
+      case Some(ks) =>
+        import spark.implicits._
+        val marks = ks.toSeq.toDF("batch_id").withColumn("__mark", lit(true))
+        df.join(broadcast(marks), Seq("batch_id"), "left")
+          .withColumn(flag, coalesce(col("__mark"), lit(false)))
+          .drop("__mark")
     }
   }
-
-  private def onlyCommittedWith(spark: SparkSession, df: DataFrame,
-                                keys: Option[Set[String]]): DataFrame =
-    keys match {
-      case None => df // legacy pre-marker store: every batch is trusted
-      case Some(ks) => commitFilter(spark, df, ks)
-    }
 
   private def emptyDf(spark: SparkSession,
                       schema: org.apache.spark.sql.types.StructType): DataFrame =
@@ -784,8 +799,8 @@ class HtaStore(val root: String, val intervalMin: Long) {
     } finally batch.unpersist()
   }
 
-  /** Raw layout probe: `Some(true)` = day-partitioned (v2),
-    * `Some(false)` = pre-day legacy (v1), `None` = no raw data yet.
+  /** The write guard's raw layout probe: `Some(true)` = day-partitioned
+    * (v2), `Some(false)` = pre-day legacy (v1), `None` = no raw data yet.
     * Decided from the directory shape itself (a constant number of
     * listings), so no version marker can drift from what is actually
     * on disk. Mixed shapes cannot arise: [[writeBatch]] refuses to
@@ -807,10 +822,11 @@ class HtaStore(val root: String, val intervalMin: Long) {
     }
   }
 
-  /** Layout-aware committed raw frame with a `day` column: from the
-    * partition directories on v2, derived from `time` on a legacy v1
-    * store — correctness identical, directory pruning absent until
-    * [[compact]] migrates the layout (upgrading never hides history).
+  /** Committed raw frame with a `day` column: the partition directories
+    * on v2; null on a legacy v1 tree, whose rows [[rawRangeFrom]] then
+    * bounds by `time` alone — correctness identical, directory pruning
+    * absent until [[compact]] migrates the layout (upgrading never
+    * hides history).
     */
   private def rawAll(spark: SparkSession): Option[DataFrame] =
     rawAllWith(spark, committedKeys(spark))
@@ -818,15 +834,10 @@ class HtaStore(val root: String, val intervalMin: Long) {
   private def rawAllWith(spark: SparkSession,
                          keys: Option[Set[String]]): Option[DataFrame] = {
     pendingCompactCheck(spark)
-    rawLayoutV2(spark).map {
-      case true =>
-        onlyCommittedWith(spark,
-          spark.read.schema(rawSchema).parquet(rawPath), keys)
-      case false =>
-        onlyCommittedWith(spark,
-          spark.read.schema(rawSchemaV1).parquet(rawPath), keys)
-          .withColumn("day", expr(s"time div $DayNs"))
-    }
+    val (hfs, hp) = fs(spark, rawPath)
+    if (!hfs.exists(hp)) None
+    else Some(commitFilter(spark,
+      spark.read.schema(rawSchema).parquet(rawPath), keys))
   }
 
   private def rawFrom(spark: SparkSession,
@@ -842,19 +853,19 @@ class HtaStore(val root: String, val intervalMin: Long) {
     * partition filter — directory-level pruning BEFORE the pushed time
     * predicate skips row groups within each surviving file. Times are
     * non-negative ns since epoch (the engine's TimePoint domain), so
-    * truncating division here agrees with the writer's `div`.
+    * truncating division here agrees with the writer's `div`. The null
+    * arm keeps a legacy v1 tree's rows (no day directories); on v2 every
+    * partition has a day, so the arm matches none of them and the day
+    * pruning holds.
     */
   def rawRange(spark: SparkSession, startNs: Long, endNs: Long): DataFrame =
     rawRangeFrom(spark, rawAll(spark), startNs, endNs)
 
   private def rawRangeFrom(spark: SparkSession, all: Option[DataFrame],
                            startNs: Long, endNs: Long): DataFrame =
-    all.map(
-      _.filter(col("day").between(startNs / DayNs, endNs / DayNs) &&
-          col("time").between(startNs, endNs))
-        .select("metric", "time", "value")).getOrElse(
-      emptyDf(spark, org.apache.spark.sql.types.StructType.fromDDL(
-        "metric STRING, time LONG, value DOUBLE")))
+    rawFrom(spark, all.map(
+      _.filter((col("day").between(startNs / DayNs, endNs / DayNs) ||
+        col("day").isNull) && col("time").between(startNs, endNs))))
 
   /** Merge-on-read level-0 view (exact: Agg is a monoid — same merge as
     * the batch hierarchy builder).
@@ -871,7 +882,7 @@ class HtaStore(val root: String, val intervalMin: Long) {
         "metric STRING, interval_ns LONG, bucket_start LONG, min_v DOUBLE, " +
           "max_v DOUBLE, sum_c LONG, cnt LONG, integral_cus LONG, active_us LONG"))
     else Ingest.mergeToLevel(
-      onlyCommittedWith(spark,
+      commitFilter(spark,
         spark.read.schema(partialsSchema).parquet(partialsPath), keys)
         .filter(col("interval_ns") === intervalMin)
         .drop("interval_ns", "batch_id"),
@@ -934,20 +945,6 @@ class HtaStore(val root: String, val intervalMin: Long) {
     }
   }
 
-  // recoverCompact / swapCompact live on the HtaStore companion now
-  // (shared with the corpus sink's compactCurated); see there.
-  private def recoverCompact(hfs: org.apache.hadoop.fs.FileSystem,
-                             cur: org.apache.hadoop.fs.Path,
-                             bak: org.apache.hadoop.fs.Path,
-                             tmp: org.apache.hadoop.fs.Path): Unit =
-    HtaStore.recoverCompact(hfs, cur, bak, tmp)
-
-  private def swapCompact(hfs: org.apache.hadoop.fs.FileSystem,
-                          cur: org.apache.hadoop.fs.Path,
-                          bak: org.apache.hadoop.fs.Path,
-                          tmp: org.apache.hadoop.fs.Path): Unit =
-    HtaStore.swapCompact(hfs, cur, bak, tmp)
-
   /** Fold partials AND raw batch directories down physically into a
     * single `batch_id=compacted` directory per side. Without the raw
     * fold, continuous ingest grows one raw directory per micro-batch
@@ -993,7 +990,7 @@ class HtaStore(val root: String, val intervalMin: Long) {
 
   private def compactLocked(spark: SparkSession,
                             activeCheckpoint: Option[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     // (the crash guard, pendingCompactCheck, is unmemoized — the backup
     // dirs this compact transiently creates are re-probed on every
     // store use, so a crash below is caught by the next use anywhere)
@@ -1018,16 +1015,13 @@ class HtaStore(val root: String, val intervalMin: Long) {
     // cached: at scale the tables dwarf executor memory and a
     // pushdown-filtered parquet re-scan is cheaper than a spill)
     val keys = committedKeys(spark)
-    def tagged(df: DataFrame): DataFrame = keys match {
-      case None => df.withColumn("__marked", lit(true))
-      case Some(ks) => withCommitFlag(spark, df, ks, "__marked")
-    }
+    def tagged(df: DataFrame) = withCommitFlag(spark, df, keys, "__marked")
 
     // ---- partials side ----
     val (pfs, pcur) = fs(spark, partialsPath)
     val pbak = new org.apache.hadoop.fs.Path(s"$root/partials_old")
     val ptmp = new org.apache.hadoop.fs.Path(s"$root/partials_compacted")
-    recoverCompact(pfs, pcur, pbak, ptmp)
+    HtaStore.recoverCompact(pfs, pcur, pbak, ptmp)
     if (pfs.exists(pcur)) {
       val all = tagged(spark.read.schema(partialsSchema).parquet(partialsPath))
       // preserve = uncommittedTail || !marked
@@ -1051,23 +1045,20 @@ class HtaStore(val root: String, val intervalMin: Long) {
       // marker dir cannot hide pre-marker history
       markerDirInit(spark)
       markCommitted(spark, "compacted")
-      swapCompact(pfs, pcur, pbak, ptmp)
+      HtaStore.swapCompact(pfs, pcur, pbak, ptmp)
     }
 
     // ---- raw side ----
     val (rfs, rcur) = fs(spark, rawPath)
     val rbak = new org.apache.hadoop.fs.Path(s"$root/raw_old")
     val rtmp = new org.apache.hadoop.fs.Path(s"$root/raw_compacted")
-    recoverCompact(rfs, rcur, rbak, rtmp)
+    HtaStore.recoverCompact(rfs, rcur, rbak, rtmp)
     if (rfs.exists(rcur)) {
-      // layout-aware read: a legacy v1 store (no day directories) gets
-      // day derived from time here, and the rewrite below emits v2 —
-      // compact IS the migration path writeBatch's guard points at
-      val all = tagged(rawLayoutV2(spark) match {
-        case Some(false) => spark.read.schema(rawSchemaV1).parquet(rawPath)
-          .withColumn("day", expr(s"time div $DayNs"))
-        case _ => spark.read.schema(rawSchema).parquet(rawPath)
-      })
+      // a legacy v1 tree reads day as null (see rawAllWith): derive it
+      // from time here, and the rewrite below emits v2 — compact IS the
+      // migration path writeBatch's guard points at
+      val all = tagged(spark.read.schema(rawSchema).parquet(rawPath)
+        .withColumn("day", coalesce(col("day"), expr(s"time div $DayNs"))))
       val committedFolded = all.filter(col("__marked") && !uncommittedTail)
         .select("metric", "time", "value", "day")
         .withColumn("batch_id", lit("compacted"))
@@ -1085,7 +1076,7 @@ class HtaStore(val root: String, val intervalMin: Long) {
       storeWriter(merged).partitionBy("batch_id", "metric", "day").parquet(rtmp.toString)
       markerDirInit(spark)
       markCommitted(spark, "compacted")
-      swapCompact(rfs, rcur, rbak, rtmp)
+      HtaStore.swapCompact(rfs, rcur, rbak, rtmp)
     }
 
     // marker GC: a batch folded into `compacted` on BOTH sides has no

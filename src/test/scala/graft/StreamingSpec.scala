@@ -406,6 +406,40 @@ class StreamingSpec extends AnyFunSuite {
       s"stale replay leaked through: $m2")
   }
 
+  test("restart refuses a checkpoint whose gate state is behind the store") {
+    val root = mkTmp("hta-behind")
+    val ckpt = mkTmp("hta-behind-ckpt")
+    val store = new HtaStore(root, H)
+    val minute = 60000000000L
+    val ms = MemoryStream[Point](spark)
+    val q1 = StreamingIngest.start(spark, ms.toDS(), store, ckpt)
+    ms.addData(Seq(Point("m1", T0 + 10 * minute, 1.0, 1)))
+    q1.processAllAvailable()
+    q1.stop()
+    // m2's history is committed while the query is stopped: the
+    // checkpoint's state has never seen it
+    store.writeBatch(spark, Seq(
+      StreamingIngest.GatedPoint("m2", T0 + 50 * minute, 5.0, anchor = false)).toDF(),
+      "backfill_0")
+    // initial state applies only at batch 0, so resuming would let a
+    // stale m2 point behind the backfill through — refuse instead
+    val e = intercept[IllegalStateException](
+      StreamingIngest.start(spark, ms.toDS(), store, ckpt))
+    assert(e.getMessage.contains("'m2'") && e.getMessage.contains("fresh checkpoint"),
+      e.getMessage)
+    // the remedy: a fresh checkpoint seeds m2 from the store
+    val ms2 = MemoryStream[Point](spark)
+    val q2 = StreamingIngest.start(spark, ms2.toDS(), store, mkTmp("hta-behind-ckpt2"))
+    ms2.addData(Seq(
+      Point("m2", T0 + 40 * minute, 4.0, 2), // stale — dropped
+      Point("m2", T0 + 60 * minute, 6.0, 3))) // fresh — kept
+    q2.processAllAvailable()
+    q2.stop()
+    val m2 = store.raw(spark).filter(col("metric") === "m2")
+      .select("time").as[Long].collect().sorted.toSeq
+    assert(m2 == Seq(T0 + 50 * minute, T0 + 60 * minute))
+  }
+
   test("transaction log under churn: write/replay/crash/compact/restart stays exact") {
     // property-style script over the store's transaction log: after
     // EVERY step, the merge-on-read level-0 view must equal the batch
