@@ -103,8 +103,8 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // the measurement protocol rides the durable output so a recorded
-    // round states HOW its numbers were taken (SCALE §8l documents a
-    // multi-second host-drift band on single passes; min-of-N
+    // round states HOW its numbers were taken (single passes on one
+    // host drift by seconds between same-day runs; min-of-N
     // interleaved is what rejects it)
     val protocol = s"min-of-$passes-interleaved"
     val fullLine =

@@ -2,6 +2,7 @@ package graft
 
 import graft.core.Intervals
 import graft.operators.{AsOfJoin, Dedup, HtaService, Ingest, Layout, Multimodal, Similarity, TextAnalysis}
+import graft.operators.Similarity.{CellRule, IvfCodec}
 import graft.oracle.{OracleSql, OracleSqlExt}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -937,7 +938,8 @@ object SparkEntry {
         .orderBy("q_id", "rank")),
     // X3: IVF-cell-restricted top-k (label = centroid assignment)
     "x25_cosine_ivf" -> ((s, dir) =>
-      Similarity.topKIvf(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.ivfSearch(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5,
+        IvfCodec.Cosine, CellRule.Own)
         .orderBy("q_id", "rank")),
     // X24 ANN quality audit: recall@5 of the IVF path vs brute-force
     // ground truth — the production gate before trusting cell pruning
@@ -980,23 +982,24 @@ object SparkEntry {
     // coarse cell prune x SDC over codes — the scan touches an
     // 8x-smaller representation of one cell only
     "x146_ivf_sq_topk" -> ((s, dir) =>
-      Similarity.topKIvfSq(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.ivfSearch(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5,
+        IvfCodec.Sdc, CellRule.Own)
         .orderBy("q_id", "rank")),
     // X3f+X3 multi-probe IVF-SQ: the recall/cost knob on the composed
     // index — SDC over each query's 2 nearest coarse cells (nprobe is
     // THE axis a FAISS-style deployment tunes here; nprobe >= |cells|
     // degenerates to un-pruned SDC, spec-pinned)
     "x147_ivf_sq_probed" -> ((s, dir) =>
-      Similarity.topKIvfSqProbed(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, nprobe = 2)
+      Similarity.ivfSearch(Tables.read(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L), 5, IvfCodec.Sdc, CellRule.Nearest(2))
         .orderBy("q_id", "rank")),
     // X3f+X24 the tuning curve on the composed SQ index: recall vs
     // nprobe against the index's OWN un-pruned SDC truth (pruning
     // cost only — quantization loss is x142's axis); x99's one-plan
     // crk-prefix discipline, over-provisioned point must read 1.0
     "x149_sq_probe_curve" -> ((s, dir) =>
-      Similarity.sqProbedRecallCurve(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, RecallCurveProbes)
+      Similarity.ivfRecallCurve(Tables.read(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L), 5, IvfCodec.Sdc, RecallCurveProbes)
         .orderBy("nprobe", "q_id")),
     // X3: exact squared-euclidean top-k — the L2 ground truth the ADC
     // audit needs (and the metric the reference's range queries use)
@@ -1010,20 +1013,21 @@ object SparkEntry {
     // X3b IVFADC: coarse cell prune × ADC over codes — the composed
     // deployment (partition prune × 32× compression at 100 TB)
     "x118_ivf_adc_topk" -> ((s, dir) =>
-      Similarity.topKIvfPqAdc(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5)
+      Similarity.ivfSearch(Tables.read(s, dir, "embeddings"), Seq(0L, 1L, 2L), 5,
+        IvfCodec.Adc(), CellRule.Own)
         .orderBy("q_id", "rank")),
     // X3b multi-probe IVFADC: same knob on the PQ composition — ADC
     // over each query's 2 nearest coarse cells' code rows, original
     // floats still never read
     "x148_ivfadc_probed" -> ((s, dir) =>
-      Similarity.topKIvfPqAdcProbed(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, nprobe = 2)
+      Similarity.ivfSearch(Tables.read(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L), 5, IvfCodec.Adc(), CellRule.Nearest(2))
         .orderBy("q_id", "rank")),
     // X3c+X24 the same tuning curve on IVFADC (truth = un-pruned ADC;
     // PQ quantization loss stays x117's separate axis)
     "x150_adc_probe_curve" -> ((s, dir) =>
-      Similarity.adcProbedRecallCurve(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, RecallCurveProbes)
+      Similarity.ivfRecallCurve(Tables.read(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L), 5, IvfCodec.Adc(), RecallCurveProbes)
         .orderBy("nprobe", "q_id")),
     // X3f build-once/search-many: the IVF-SQ index persisted to
     // tables (centroids, params, cell-partitioned codes), then
@@ -1186,16 +1190,16 @@ object SparkEntry {
     // 2 nearest centroid cells by exact int64 distance instead of
     // only its own label cell
     "x95_ivf_multiprobe" -> ((s, dir) =>
-      Similarity.topKIvfProbe(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, nprobe = 2)
+      Similarity.ivfSearch(Tables.read(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L), 5, IvfCodec.Cosine, CellRule.Nearest(2))
         .orderBy("q_id", "rank")),
     // X24+X3 the production IVF tuning loop: recall@5 as a function of
     // nprobe (brute truth computed once, shared across curve points);
     // the last probe count exceeds any SF's cell count, so those rows
     // must read recall = 1.0 — the x95 ≡-brute property as data
     "x99_ann_recall_curve" -> ((s, dir) =>
-      Similarity.annRecallCurve(Tables.read(s, dir, "embeddings"),
-        Seq(0L, 1L, 2L), 5, RecallCurveProbes)
+      Similarity.ivfRecallCurve(Tables.read(s, dir, "embeddings"),
+        Seq(0L, 1L, 2L), 5, IvfCodec.Cosine, RecallCurveProbes)
         .orderBy("nprobe", "q_id")),
     // X3e Matryoshka-style truncated-dimension recall curve: how much
     // search quality the first-d-dims index gives up vs full dimension
@@ -1214,7 +1218,8 @@ object SparkEntry {
         Similarity.kmeansIter(emb)
           .select(col("vec_id"), col("new_label").cast("int").as("label")),
         "vec_id")
-      Similarity.topKIvf(relabeled, Seq(0L, 1L, 2L), 5)
+      Similarity.ivfSearch(relabeled, Seq(0L, 1L, 2L), 5, IvfCodec.Cosine,
+        CellRule.Own)
         .orderBy("q_id", "rank")
     }),
     // X28 one deterministic Lloyd iteration: floor-integer-mean

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Similarity}
+import graft.operators.Similarity.{CellRule, IvfCodec}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -251,7 +252,7 @@ object StressProof {
       Similarity.topKBrute(emb, queries, k)
         .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     val (ivfRes, tIvf) = timed(
-      Similarity.topKIvf(emb, queries, k)
+      Similarity.ivfSearch(emb, queries, k, IvfCodec.Cosine, CellRule.Own)
         .select("q_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
     emb.unpersist()
     val recall = (brute & ivfRes).size.toDouble / brute.size
@@ -327,7 +328,7 @@ object StressProof {
       adcDf.select("q_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
     val (ivfadc, tIvfAdc) = timed(
-      Similarity.topKIvfPqAdc(emb, queries, k, m, dim)
+      Similarity.ivfSearch(emb, queries, k, IvfCodec.Adc(m, dim), CellRule.Own)
         .select("q_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet)
     val crossCell = adcDf

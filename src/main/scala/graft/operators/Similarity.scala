@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   *
   * Scale posture: [[topKBrute]] broadcasts the (small) query set and scans
   * the corpus once — the right baseline at any corpus size when |queries|
-  * is small. [[topKIvf]] additionally prunes the scan to the query's
-  * partition cell (here the `label` column standing in for a learned IVF
+  * is small. [[ivfSearch]] additionally prunes the scan to the query's
+  * probed cells (the `label` column standing in for a learned IVF
   * centroid assignment), the standard 10–100× scan reduction.
   */
 object Similarity {
@@ -245,27 +245,25 @@ object Similarity {
       Seq("q_id"))
       .select("q_id", "n_brute", "n_hit", "recall")
 
-  /** IVF-cell-restricted top-k: only candidates in the query's `label`
-    * cell are scanned (partition-pruned at 100 TB when the corpus is
-    * written partitioned by cell).
+  /** Per-cell truncated-integer-mean centroids of a [[quantized]]
+    * corpus: `(c_label, cvec, cn2)` — k rows, broadcast-sized. Shared
+    * by [[kmeansIter]], the index builds and the nearest-cell rule
+    * ([[nearestCells]]).
     */
-  def topKIvf(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = quantized(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("vq").as("qv"), col("n2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("cosine").desc, col("vec_id"))
-    corpus.join(broadcast(q), col("label") === col("q_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "cosine")
-  }
+  private def centroids(q: DataFrame): DataFrame =
+    q.select(col("label"), posexplode(col("vq")).as(Seq("dim", "v")))
+      .groupBy("label", "dim")
+      .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
+      .withColumn("c", expr("s div cnt"))
+      .groupBy("label")
+      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
+        .as("cvec"))
+      .select(col("label").as("c_label"), col("cvec"),
+        VecOps.normSq(col("cvec")).as("cn2"))
 
   /** One deterministic k-means (Lloyd) iteration (SURVEY §2.10 X28) —
     * the centroid-refinement primitive behind the IVF cell assignment
-    * every other embedding operator here consumes ([[topKIvf]],
+    * every other embedding operator here consumes ([[ivfSearch]],
     * [[semanticDedup]], [[embedDecontaminate]] all take the cell
     * column as given; this is the operator that LEARNS it). Computes
     * each current cell's centroid as the element-wise FLOOR integer
@@ -286,21 +284,6 @@ object Similarity {
     * driver loop. Iterating = calling this again on the relabeled
     * output.
     */
-  /** Per-cell truncated-integer-mean centroids of a [[quantized]]
-    * corpus: `(c_label, cvec, cn2)` — k rows, broadcast-sized. Shared
-    * by [[kmeansIter]] and [[topKIvfProbe]].
-    */
-  private def centroids(q: DataFrame): DataFrame =
-    q.select(col("label"), posexplode(col("vq")).as(Seq("dim", "v")))
-      .groupBy("label", "dim")
-      .agg(sum("v").as("s"), count(lit(1)).as("cnt"))
-      .withColumn("c", expr("s div cnt"))
-      .groupBy("label")
-      .agg(expr("transform(sort_array(collect_list(struct(dim, c))), x -> x.c)")
-        .as("cvec"))
-      .select(col("label").as("c_label"), col("cvec"),
-        VecOps.normSq(col("cvec")).as("cn2"))
-
   def kmeansIter(emb: DataFrame): DataFrame = {
     val q = quantized(emb)
     val cent = centroids(q)
@@ -411,97 +394,242 @@ object Similarity {
     (cur.select("vec_id", "label"), it)
   }
 
-  /** Multi-probe IVF top-k (SURVEY §2.10 X3's recall/cost knob): each
-    * query searches its `nprobe` NEAREST centroid cells (by the same
-    * exact int64 squared distance as [[kmeansIter]], ties to the lower
-    * cell label) instead of only its own cell — the standard remedy
-    * when a true neighbor sits just across a cell boundary.
-    * `nprobe = 1` probes the query's closest cell (which may differ
-    * from its stored label if the labels aren't converged);
-    * `nprobe = |cells|` degenerates to brute force.
-    *
-    * Scale shape: the centroid table is k rows; the query→cell
-    * ranking runs on a |queries|·k frame (broadcast-sized, windowed
-    * per query over k candidate cells — tiny by construction); the
-    * corpus then joins the probed (query, cell) pairs on the cell
-    * equi-join, scanning `nprobe/|cells|` of the corpus per query.
-    */
-  def topKIvfProbe(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                   nprobe: Int = 2): DataFrame =
-    topKProbedMulti(emb, queryIds, k, Seq(nprobe)).drop("nprobe")
+  // ----- IVF search: one codec × one cell rule -----------------------
+  //
+  // Every IVF search is two independent choices: the cells each query
+  // scans (its cell rule) and the distance it ranks the scanned rows
+  // by (its codec). Both become data — a probe table and a scored
+  // candidate frame — that meet in one ranking tail, so a codec ranks
+  // identically under either cell rule, inline or from a persisted
+  // index ([[searchIvfSq]], [[searchIvfPqAdc]]).
 
-  /** The probed search over a WHOLE probe-count dimension in one plan:
-    * for every `(nprobe ∈ nprobes, query)`, the top-k over the query's
-    * `nprobe` nearest centroid cells. The query→cell ranking (`crk`)
-    * is computed once and each probe count takes its prefix via the
-    * tiny probes-table cross join, so adding curve points costs probed
-    * candidates, never extra corpus scans or centroid builds —
-    * [[annRecallCurve]] needs exactly this (a union of per-point
-    * searches would replan the shared work per point: Spark does not
-    * share subplans across union branches). [[topKIvfProbe]] is the
-    * single-point specialization.
+  /** The distance an IVF search ranks by — its codec. A codec supplies
+    * its coded corpus and query side, the score column with its sort
+    * order, and its un-pruned search: the truth [[ivfRecallCurve]]
+    * measures cell pruning against, so the codec's own quantization
+    * loss stays the separate x117/x142 audit.
+    *  - [[IvfCodec.Cosine]]: exact int64 cosine over the ×10⁴ `vq`
+    *    vectors, `cosine` descending; truth [[topKBrute]].
+    *  - [[IvfCodec.Sdc]]: SQ symmetric distance over the 8-bit codes
+    *    (the FAISS `IndexIVFScalarQuantizer` deployment), `d2`
+    *    ascending; truth [[topKSq]]. The scan reads code vectors only.
+    *  - [[IvfCodec.Adc]]: PQ asymmetric distance over the `m` subspace
+    *    codes of a `dims`-dim vector (IVFADC, Jégou et al. 2011 §IV),
+    *    `adc_d2` ascending; truth [[topKPqAdc]]. The scan reads the
+    *    code table and the broadcast distance table, never the
+    *    original vectors.
+    * Every codec breaks score ties by the lower `vec_id` — at 8-bit
+    * resolution ties are the norm, so the break is load-bearing.
     */
-  private def topKProbedMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                              nprobes: Seq[Int]): DataFrame = {
-    require(k > 0 && nprobes.nonEmpty && nprobes.forall(_ > 0),
-      s"k and nprobes must be positive, got k=$k nprobes=$nprobes")
+  sealed abstract class IvfCodec(private[Similarity] val score: String,
+                                 private[Similarity] val ascending: Boolean) {
+    /** `(nprobe, q_id, vec_id, <score>)`: every coded corpus row in a
+      * cell the probe table lists for a query, scored against that
+      * query (never against itself).
+      */
+    private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
+                                   probes: DataFrame): DataFrame
+    private[Similarity] def unpruned(emb: DataFrame, queryIds: Seq[Long],
+                                     k: Int): DataFrame
+  }
+
+  object IvfCodec {
+    case object Cosine extends IvfCodec("cosine", ascending = false) {
+      private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
+                                     probes: DataFrame): DataFrame = {
+        val corpus = quantized(emb)
+        inCells(corpus,
+          probes.join(querySide(corpus, queryIds, "vq", "n2"), "q_id"))
+          .withColumn(score, cosExpr)
+      }
+      private[Similarity] def unpruned(emb: DataFrame, queryIds: Seq[Long],
+                                       k: Int): DataFrame =
+        topKBrute(emb, queryIds, k)
+    }
+
+    case object Sdc extends IvfCodec("d2", ascending = true) {
+      private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
+                                     probes: DataFrame): DataFrame = {
+        val corpus = sqCoded(emb)
+        sdcScored(corpus,
+          probes.join(querySide(corpus, queryIds, "cv", "cn2"), "q_id"))
+      }
+      private[Similarity] def unpruned(emb: DataFrame, queryIds: Seq[Long],
+                                       k: Int): DataFrame =
+        topKSq(emb, queryIds, k)
+    }
+
+    final case class Adc(m: Int = 8, dims: Int = 64)
+        extends IvfCodec("adc_d2", ascending = true) {
+      private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
+                                     probes: DataFrame): DataFrame = {
+        val (cb, codes) = pqParts(emb, m, dims)
+        adcScored(
+          codes.join(emb.select(col("vec_id"), col("label")), Seq("vec_id")),
+          adcDistTable(emb, queryIds, m, dims, cb), probes)
+      }
+      private[Similarity] def unpruned(emb: DataFrame, queryIds: Seq[Long],
+                                       k: Int): DataFrame =
+        topKPqAdc(emb, queryIds, k, m, dims)
+    }
+  }
+
+  /** Which cells an IVF search scans for each query — its cell rule.
+    * Either rule becomes one probe table `(nprobe, q_id, c_label)`:
+    *  - [[CellRule.Own]]: the query's own stored `label` cell, a
+    *    one-cell probe (`nprobe = 1`), partition-pruned at 100 TB when
+    *    the corpus is written partitioned by cell;
+    *  - [[CellRule.Nearest]]: the query's `nprobe` nearest centroid
+    *    cells ([[probedCellsCore]]), the remedy when a true neighbor
+    *    sits just across a cell boundary. `nprobe = 1` probes the
+    *    closest centroid, which may differ from the stored label if
+    *    the labels are not converged; `nprobe ≥ |cells|` degenerates
+    *    to the codec's un-pruned search exactly.
+    */
+  sealed abstract class CellRule(private[Similarity] val nprobes: Seq[Int]) {
+    private[Similarity] def probes(emb: DataFrame,
+                                   queryIds: Seq[Long]): DataFrame
+  }
+
+  object CellRule {
+    case object Own extends CellRule(Seq(1)) {
+      private[Similarity] def probes(emb: DataFrame,
+                                     queryIds: Seq[Long]): DataFrame =
+        emb.filter(col("vec_id").isin(queryIds: _*))
+          .select(lit(1L).as("nprobe"), col("vec_id").as("q_id"),
+            col("label").as("c_label"))
+    }
+
+    final case class Nearest(nprobe: Int) extends CellRule(Seq(nprobe)) {
+      private[Similarity] def probes(emb: DataFrame,
+                                     queryIds: Seq[Long]): DataFrame =
+        nearestCells(emb, queryIds, nprobes)
+    }
+  }
+
+  /** IVF top-k: the codec's ranking over the corpus rows in each
+    * query's probed cells, `(q_id, vec_id, rank, <score>)` with rank 1
+    * the nearest. Scale shape: the probe table is broadcast-sized
+    * (|queries| × k centroid candidates in, ≤ |queries| × nprobe pairs
+    * out) and meets the coded corpus on the cell equi-join, so each
+    * query scans `nprobe/|cells|` of the coded corpus.
+    *
+    * An [[IvfCodec.Adc]] search persists the PQ subvector fan behind
+    * the returned lazy frame: the caller releases it after consuming
+    * the result ([[CacheScope]]).
+    */
+  def ivfSearch(emb: DataFrame, queryIds: Seq[Long], k: Int,
+                codec: IvfCodec, cells: CellRule): DataFrame = {
+    requireIvfArgs(k, cells.nprobes)
+    rankIvf(codec.scored(emb, queryIds, cells.probes(emb, queryIds)), codec, k)
+      .drop("nprobe")
+  }
+
+  /** The recall/cost tuning curve an IVF deployment reads: recall@k of
+    * the [[CellRule.Nearest]] search against the codec's un-pruned
+    * truth, one row per (nprobe, query), in ONE plan. The truth runs
+    * once; the query→cell ranking runs once and each probe count takes
+    * its prefix ([[probedCellsCore]]), so a curve point costs probed
+    * candidates, never another corpus scan or centroid build (Spark
+    * does not share subplans across the branches of a union of
+    * per-point searches).
+    *
+    * Probed cell sets are prefixes of one ranking, so recall is
+    * non-decreasing in `nprobe` for every query, and an `nprobe` at or
+    * above the cell count reads exactly 1.0 — the anchor that says the
+    * curve's ceiling is reachable. Both are pinned in ExtensionsSpec.
+    */
+  def ivfRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
+                     codec: IvfCodec, nprobes: Seq[Int]): DataFrame = {
+    requireIvfArgs(k, nprobes)
     val spark = emb.sparkSession
     import spark.implicits._
     val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val corpus = quantized(emb)
-    val cent = centroids(corpus)
-    val qcells = corpus.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("q_id"), col("vq").as("qv"),
-        col("n2").as("qn2"))
-      .crossJoin(broadcast(cent))
-      .withColumn("cd2",
-        col("qn2") - lit(2L) * VecOps.dot(col("qv"), col("cvec")) + col("cn2"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cd2"), col("c_label"))))
-      .crossJoin(broadcast(probes))
-      .filter(col("crk") <= col("nprobe"))
-      .select(col("nprobe"), col("q_id"), col("qv"), col("qn2"),
-        col("c_label"))
-    val w = Window.partitionBy("nprobe", "q_id")
-      .orderBy(col("cosine").desc, col("vec_id"))
-    corpus.join(broadcast(qcells), col("label") === col("c_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine", cosExpr)
-      .withColumn("rank", row_number().over(w).cast("long"))
+    val truth = codec.unpruned(emb, queryIds, k).select("q_id", "vec_id")
+    recallAgainstBrute(truth.crossJoin(broadcast(probes)),
+      rankIvf(codec.scored(emb, queryIds, nearestCells(emb, queryIds, nprobes)),
+        codec, k).select("nprobe", "q_id", "vec_id"),
+      Seq("nprobe", "q_id"))
+      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
+  }
+
+  /** The one argument check of every IVF search, inline or from an
+    * index: `k` positive, and the probe counts non-empty, positive and
+    * distinct (a repeated count would duplicate rows).
+    */
+  private def requireIvfArgs(k: Int, nprobes: Seq[Int]): Unit = {
+    require(k > 0, s"k must be positive, got $k")
+    require(nprobes.nonEmpty && nprobes.forall(_ > 0),
+      s"nprobes must be non-empty positive, got $nprobes")
+    require(nprobes.distinct == nprobes,
+      s"duplicate nprobe values would duplicate rows: $nprobes")
+  }
+
+  /** The ranking tail every IVF search shares: per (nprobe, query), the
+    * top k by the codec's score in its order, ties to the lower
+    * `vec_id` — `(nprobe, q_id, vec_id, rank, <score>)`.
+    */
+  private def rankIvf(scored: DataFrame, codec: IvfCodec, k: Int): DataFrame =
+    topKBy(scored, Seq("nprobe", "q_id"), codec.score, codec.ascending, k)
+
+  private def topKBy(scored: DataFrame, keys: Seq[String], score: String,
+                     ascending: Boolean, k: Int): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order, col("vec_id"))
+    scored.withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= k)
-      .select("nprobe", "q_id", "vec_id", "rank", "cosine")
+      .select((keys ++ Seq("vec_id", "rank", score)).map(col): _*)
+  }
+
+  /** `(q_id, qv, qn2)`: the query rows of a coded corpus, its vector
+    * column `v` and squared norm `n2` renamed to the query side's.
+    */
+  private def querySide(coded: DataFrame, queryIds: Seq[Long], v: String,
+                        n2: String): DataFrame =
+    coded.filter(col("vec_id").isin(queryIds: _*))
+      .select(col("vec_id").as("q_id"), col(v).as("qv"), col(n2).as("qn2"))
+
+  /** The corpus rows in each probed cell, paired with their query:
+    * `probes` carries `(nprobe, q_id, c_label)` and the query side.
+    */
+  private def inCells(corpus: DataFrame, probes: DataFrame): DataFrame =
+    corpus.join(broadcast(probes), col("label") === col("c_label"))
+      .filter(col("vec_id") =!= col("q_id"))
+
+  /** The nearest-cell probe table for an inline search: the queries'
+    * `vq` ranked against the centroids of the corpus itself.
+    */
+  private def nearestCells(emb: DataFrame, queryIds: Seq[Long],
+                           nprobes: Seq[Int]): DataFrame = {
+    val corpus = quantized(emb)
+    probedCellsCore(
+      corpus.filter(col("vec_id").isin(queryIds: _*))
+        .select(col("vec_id").as("q_id"), col("vq").as("pv"),
+          col("n2").as("pn2")),
+      centroids(corpus), nprobes)
   }
 
   /** ANN quality audit (SURVEY §2.10 X24): per-query recall@k of the
-    * IVF-pruned search against the brute-force ground truth — the
-    * metric every production ANN deployment tracks before trusting the
-    * pruned path. `n_hit` counts brute-force neighbors the IVF search
-    * also returned; `recall = n_hit / n_brute` is the ONE double
-    * division (components int64-exact, so the output hash-matches any
-    * engine).
+    * cosine IVF search (own cell, or the `nprobe` nearest cells)
+    * against the brute-force ground truth — the metric every
+    * production ANN deployment tracks before trusting the pruned path.
+    * `n_hit` counts brute-force neighbors the IVF search also
+    * returned; `recall = n_hit / n_brute` is the ONE double division
+    * (components int64-exact, so the output hash-matches any engine).
     *
     * Scale shape: both inputs are top-k result sets — k·|queries| rows
     * — so the audit join is broadcast-sized regardless of corpus size;
-    * the corpus-scan cost is the two searches themselves, each already
-    * scale-shaped (broadcast query set; IVF additionally cell-pruned).
+    * the corpus-scan cost is the two searches themselves.
     */
   def annRecall(emb: DataFrame, queryIds: Seq[Long], k: Int,
                 nprobe: Option[Int] = None): DataFrame = {
-    val approx = nprobe.fold(topKIvf(emb, queryIds, k))(p =>
-      topKIvfProbe(emb, queryIds, k, p))
+    val approx = ivfSearch(emb, queryIds, k, IvfCodec.Cosine,
+      nprobe.fold[CellRule](CellRule.Own)(CellRule.Nearest(_)))
     recallAgainstBrute(topKBrute(emb, queryIds, k).select("q_id", "vec_id"),
       approx.select("q_id", "vec_id"), Seq("q_id"))
       .select("q_id", "n_brute", "n_hit", "recall")
   }
 
-  /** Per-key recall@k of an approximate result set against the
-    * brute-force ground truth — THE audit aggregation, keyed by
-    * `keys` (q_id alone for [[annRecall]]; (nprobe, q_id) for
-    * [[annRecallCurve]]) so the hit-count/coalesce/recall spelling
-    * exists exactly once. Both inputs are top-k result sets
-    * (k·|queries| rows, times |probes| for the curve), so the join is
-    * broadcast-sized regardless of corpus size.
-    */
   /** Scalar (8-bit) quantization codes — the SQ leg of the index-
     * compression family next to PQ (x114): each dimension is affinely
     * mapped to 0..255 by its corpus-wide [min, max] (one code byte per
@@ -570,7 +698,8 @@ object Similarity {
       .drop("dmins", "dmaxs")
 
   /** `(vec_id, label, cv, cn2)` — corpus with the SQ code vector and
-    * its exact squared norm; shared by [[sqCodes]] and [[topKSq]].
+    * its exact squared norm; shared by [[sqCodes]], [[topKSq]] and
+    * [[IvfCodec.Sdc]].
     */
   private def sqCoded(emb: DataFrame): DataFrame = {
     val q = quantized(emb)
@@ -597,67 +726,21 @@ object Similarity {
       .select("q_id", "vec_id", "rank", "d2")
   }
 
-  /** IVF-SQ composed search (the FAISS `IndexIVFScalarQuantizer`
-    * deployment: coarse cell prune × SDC over the codes) — the SQ
-    * sibling of the x118 IVFADC composition: the scan is restricted
-    * to the query's cell AND touches only code vectors, never
-    * original floats. Same SDC distance, rank and tie-break as
-    * [[topKSq]]; at 100 TB a partition-pruned scan of an 8×-smaller
-    * representation.
-    */
-  def topKIvfSq(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val corpus = sqCoded(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("cv").as("qv"), col("cn2").as("qn2"))
-    val w = Window.partitionBy("q_id").orderBy(col("d2").asc, col("vec_id"))
-    corpus.join(broadcast(q), col("label") === col("q_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2",
-        col("cn2") - lit(2L) * VecOps.dot(col("cv"), col("qv")) + col("qn2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "rank", "d2")
-  }
-
-  /** The ONE definition of the coarse-probe rule for the composed
-    * searches ([[topKIvfSqProbed]], [[topKIvfPqAdcProbed]] and their
-    * curves, all via the *ProbedMulti cores): each query's nearest
-    * coarse cells ranked by the same exact int64 squared distance
-    * (ties to the lower cell label) as [[topKProbedMulti]]'s `crk`,
-    * so cell selection cannot drift from the plain IVF multi-probe's.
-    * Broadcast-sized by construction: |queries| × k centroid
-    * candidates in, ≤ |queries| × Σnprobes pairs out, computed over
-    * a WHOLE probe-count dimension in one plan —
-    * `(nprobe, q_id, c_label)`: the query→cell ranking (`crk`) is
-    * computed once and each probe count takes its prefix via the tiny
-    * probes-table cross join, exactly [[topKProbedMulti]]'s trick, so
-    * the composed recall curves cost probed candidates, never extra
-    * centroid builds.
-    */
-  private def probedCellsMulti(emb: DataFrame, queryIds: Seq[Long],
-                               nprobes: Seq[Int]): DataFrame = {
-    val corpus = quantized(emb)
-    probedCellsCore(
-      corpus.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("q_id"), col("vq").as("pv"),
-          col("n2").as("pn2")),
-      centroids(corpus), nprobes)
-  }
-
-  /** The probe rule against an EXPLICIT centroid table — the piece
-    * [[probedCellsMulti]] (inline: centroids derived from the corpus)
-    * and the index searchers ([[searchIvfSq]], [[searchIvfPqAdc]]:
-    * centroids read from the persisted index) share, so the cell
-    * ranking is the same computation whichever side the centroids
-    * came from.
+  /** The coarse-probe rule of every [[CellRule.Nearest]] search, inline
+    * ([[nearestCells]]: centroids derived from the corpus) or from an
+    * index ([[searchIvfSq]], [[searchIvfPqAdc]]: centroids read from
+    * the persisted index): each query's nearest centroid cells, ranked
+    * by exact int64 squared distance in the ORIGINAL quantized space
+    * (the coarse quantizer sees raw vectors, as FAISS's does), ties to
+    * the lower cell label — the same distance as [[kmeansIter]]. Over
+    * a whole probe-count dimension in one plan: the query→cell ranking
+    * (`crk`) is computed once and each probe count takes its prefix
+    * via the tiny probes-table cross join, `(nprobe, q_id, c_label)`
+    * out. Broadcast-sized by construction: |queries| × k centroid
+    * candidates in, ≤ |queries| × Σnprobes pairs out.
     */
   private def probedCellsCore(q: DataFrame, cent: DataFrame,
                               nprobes: Seq[Int]): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(_ > 0),
-      s"nprobes must be non-empty positive, got $nprobes")
-    require(nprobes.distinct == nprobes,
-      s"duplicate nprobe values would duplicate rows: $nprobes")
     val spark = q.sparkSession
     import spark.implicits._
     val probes = nprobes.map(_.toLong).toDF("nprobe")
@@ -671,86 +754,14 @@ object Similarity {
       .select("nprobe", "q_id", "c_label")
   }
 
-  /** Multi-probe IVF-SQ (the recall/cost knob on the composed
-    * `IndexIVFScalarQuantizer` deployment): SDC over the code vectors
-    * restricted to each query's `nprobe` nearest coarse cells —
-    * [[topKIvfSq]] is stuck at single-cell recall; this is THE axis a
-    * FAISS-style deployment tunes on exactly this index. Cell ranking
-    * happens in the ORIGINAL quantized space ([[probedCellsMulti]] — the
-    * coarse quantizer sees raw vectors, as FAISS's does), scoring in
-    * the code space ([[topKSq]]'s SDC distance, rank and tie-break).
-    *
-    * `nprobe ≥ |cells|` degenerates to the un-pruned [[topKSq]]
-    * exactly (the reachable-ceiling anchor), and the probed cell sets
-    * are PREFIXES of one ranking, so recall against any fixed truth is
-    * non-decreasing in `nprobe` by construction — both pinned in
-    * ExtensionsSpec. Scale shape: one centroid build + one
-    * broadcast-sized probe table; the corpus scan joins codes to the
-    * probed (query, cell) pairs on the cell equi-join, touching
-    * `nprobe/|cells|` of the 8×-compressed representation per query
-    * and never the original floats.
+  /** SDC over `(vec_id, label, cv, cn2)` code rows and a probe table
+    * carrying the coded query side — [[topKSq]]'s distance, shared by
+    * [[IvfCodec.Sdc]] and [[searchIvfSq]], so the deployed
+    * search-from-tables path scores exactly like the inline one.
     */
-  def topKIvfSqProbed(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                      nprobe: Int = 2): DataFrame =
-    sqProbedMulti(emb, queryIds, k, Seq(nprobe)).drop("nprobe")
-
-  /** The probed SDC search over the whole probe dimension — shared by
-    * [[topKIvfSqProbed]] (single point) and [[sqProbedRecallCurve]],
-    * so the search the curve audits IS the search a deployment runs.
-    */
-  private def sqProbedMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                            nprobes: Seq[Int]): DataFrame = {
-    val corpus = sqCoded(emb)
-    val q = corpus.filter(col("vec_id").isin(queryIds: _*)).select(
-      col("vec_id").as("q_id"), col("cv").as("qv"), col("cn2").as("qn2"))
-    sdcProbedRank(corpus,
-      probedCellsMulti(emb, queryIds, nprobes).join(q, "q_id"), k)
-  }
-
-  /** The probed SDC scoring/ranking tail over a coded corpus
-    * (`(vec_id, label, cv, cn2)` rows) and a probe table
-    * (`(nprobe, q_id, c_label, qv, qn2)` rows) — ONE spelling shared
-    * by the inline [[sqProbedMulti]] and the index-backed
-    * [[searchIvfSq]], so the deployed search-from-tables path scores
-    * exactly like the audited inline path.
-    */
-  private def sdcProbedRank(codes: DataFrame, probes: DataFrame,
-                            k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val w = Window.partitionBy("nprobe", "q_id")
-      .orderBy(col("d2").asc, col("vec_id"))
-    codes.join(broadcast(probes), col("label") === col("c_label"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("d2",
-        col("cn2") - lit(2L) * VecOps.dot(col("cv"), col("qv")) + col("qn2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("nprobe", "q_id", "vec_id", "rank", "d2")
-  }
-
-  /** Recall-vs-nprobe tuning curve for the composed IVF-SQ index —
-    * the [[annRecallCurve]] (x99) discipline on [[topKIvfSqProbed]]:
-    * one row per (nprobe, query), ONE plan (truth once, probed search
-    * once over the whole probe dimension). The truth is the index's
-    * OWN un-pruned SDC search ([[topKSq]]): the curve measures what
-    * the CELL PRUNING costs in the metric the index actually serves —
-    * monotone in nprobe by prefix nesting, reaching exactly 1.0 at
-    * the over-provisioned point (probed ≡ un-pruned, spec-pinned).
-    * The quantization loss itself is the separate x142 audit; keeping
-    * the two axes apart is what makes either number actionable.
-    */
-  def sqProbedRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                          nprobes: Seq[Int]): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val truth = topKSq(emb, queryIds, k).select("q_id", "vec_id")
-    recallAgainstBrute(truth.crossJoin(broadcast(probes)),
-      sqProbedMulti(emb, queryIds, k, nprobes)
-        .select("nprobe", "q_id", "vec_id"),
-      Seq("nprobe", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
-  }
+  private def sdcScored(codes: DataFrame, probes: DataFrame): DataFrame =
+    inCells(codes, probes).withColumn("d2",
+      col("cn2") - lit(2L) * VecOps.dot(col("cv"), col("qv")) + col("qn2"))
 
   /** SQ recall audit — recall@k of [[topKSq]] vs the exact L2 truth
     * ([[topKBruteL2]], x116): what the 8× compression costs before a
@@ -809,6 +820,14 @@ object Similarity {
       .select("q_id", "n_brute", "n_hit", "recall", "dims")
   }
 
+  /** Per-key recall@k of an approximate result set against the
+    * brute-force ground truth — THE audit aggregation, keyed by
+    * `keys` (q_id alone for [[annRecall]]; (nprobe, q_id) for
+    * [[ivfRecallCurve]]) so the hit-count/coalesce/recall spelling
+    * exists exactly once. Both inputs are top-k result sets
+    * (k·|queries| rows, times |probes| for the curve), so the join is
+    * broadcast-sized regardless of corpus size.
+    */
   private def recallAgainstBrute(brute: DataFrame, approx: DataFrame,
                                  keys: Seq[String]): DataFrame =
     brute.join(broadcast(approx.withColumn("hit", lit(1L))),
@@ -818,43 +837,6 @@ object Similarity {
         coalesce(sum("hit"), lit(0L)).as("n_hit"))
       .withColumn("recall",
         col("n_hit").cast("double") / col("n_brute").cast("double"))
-
-  /** The recall/cost tuning curve a production IVF deployment actually
-    * reads: recall@k of [[topKIvfProbe]] as a function of `nprobe` —
-    * one row per (nprobe, query), in ONE plan: brute-force ground
-    * truth once, the probed search once over the whole probe dimension
-    * ([[topKProbedMulti]]), and the audit join keyed by
-    * (nprobe, q_id, vec_id). An `nprobe` ≥ the cell count degenerates
-    * to brute force (the x95 equivalence), so its rows must read
-    * recall = 1.0 — the property turned into visible data, and the
-    * anchor that says "the curve's ceiling is reachable".
-    *
-    * Monotonicity (recall non-decreasing in nprobe per query) holds by
-    * construction — probing more cells only ADDS candidates, and top-k
-    * over a superset can only improve against the ground truth — and
-    * is pinned in ExtensionsSpec.
-    *
-    * Scale shape: |curve points| is a handful; every per-point search
-    * is the already-scale-shaped probed search (centroid table k rows,
-    * corpus scan pruned to the probed cells), and the audit joins are
-    * k·|queries|-row broadcasts.
-    */
-  def annRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                     nprobes: Seq[Int]): DataFrame = {
-    require(nprobes.nonEmpty && nprobes.forall(_ > 0),
-      s"nprobes must be non-empty positive, got $nprobes")
-    require(nprobes.distinct == nprobes,
-      s"duplicate nprobe values would duplicate curve rows: $nprobes")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val brute = topKBrute(emb, queryIds, k).select("q_id", "vec_id")
-    val probed = topKProbedMulti(emb, queryIds, k, nprobes)
-      .select("nprobe", "q_id", "vec_id")
-    recallAgainstBrute(brute.crossJoin(broadcast(probes)), probed,
-      Seq("nprobe", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
-  }
 
   /** Product quantization (Jégou et al. 2011, "Product Quantization
     * for Nearest Neighbor Search") — the memory-compression leg of
@@ -983,23 +965,21 @@ object Similarity {
   def topKPqAdc(emb: DataFrame, queryIds: Seq[Long], k: Int,
                 m: Int = 8, dims: Int = 64): DataFrame = {
     val (cb, codes) = pqParts(emb, m, dims)
-    val dtable = adcDistTable(emb, queryIds, m, dims, cb, carryLabel = false)
-    adcRank(codes.join(broadcast(dtable), Seq("sub", "code"))
-      .filter(col("vec_id") =!= col("q_id")), k)
+    val dtable = adcDistTable(emb, queryIds, m, dims, cb)
+    topKBy(adcSum(codes.join(broadcast(dtable), Seq("sub", "code"))
+      .filter(col("vec_id") =!= col("q_id")), Seq("q_id")),
+      Seq("q_id"), "adc_d2", ascending = true, k)
   }
 
   /** The query-side ADC distance table — ONE definition shared by
-    * [[topKPqAdc]] and [[topKIvfPqAdc]] (with `carryLabel` adding the
-    * query's coarse cell for the IVFADC prune), so the quantization /
+    * [[topKPqAdc]] and [[IvfCodec.Adc]], so the quantization /
     * distance expression cannot drift between the plain and composed
     * searches.
     */
   private def adcDistTable(emb: DataFrame, queryIds: Seq[Long], m: Int,
-                           dims: Int, cb: DataFrame,
-                           carryLabel: Boolean): DataFrame =
+                           dims: Int, cb: DataFrame): DataFrame =
     adcDistTableFrom(
-      quantized(emb).filter(col("vec_id").isin(queryIds: _*)),
-      m, dims, cb, carryLabel)
+      quantized(emb).filter(col("vec_id").isin(queryIds: _*)), m, dims, cb)
 
   /** The table build against an EXPLICIT quantized query frame — the
     * piece the inline searches (queries selected out of the corpus)
@@ -1007,142 +987,41 @@ object Similarity {
     * codebook read from the persisted index) share.
     */
   private def adcDistTableFrom(qrows: DataFrame, m: Int, dims: Int,
-                               cb: DataFrame,
-                               carryLabel: Boolean): DataFrame = {
+                               cb: DataFrame): DataFrame = {
     val d = dims / m
-    val carry = if (carryLabel) Seq(col("label").as("q_label")) else Nil
-    val qsubs = qrows
-      .select((col("vec_id").as("q_id") +: carry) :+
+    qrows
+      .select(col("vec_id").as("q_id"),
         posexplode(array((0 until m).map(s => slice(col("vq"), s * d + 1, d)): _*))
-          .as(Seq("sub", "qsv")): _*)
+          .as(Seq("sub", "qsv")))
       .withColumn("qsn2", VecOps.normSq(col("qsv")))
-    val keep = (col("q_id") +: (if (carryLabel) Seq(col("q_label")) else Nil)) ++
-      Seq(col("sub").cast("long").as("sub"), col("code"), col("qd2"))
-    qsubs.join(cb, Seq("sub"))
+      .join(cb, Seq("sub"))
       .withColumn("qd2",
         col("qsn2") - lit(2L) * VecOps.dot(col("qsv"), col("cvec")) + col("cn2"))
-      .select(keep: _*)
+      .select(col("q_id"), col("sub").cast("long").as("sub"), col("code"),
+        col("qd2"))
   }
 
-  /** Shared ADC ranking tail: sum the m per-subspace lookups and rank
-    * ascending with the vec_id tie-break. `withNprobe` adds the probe
-    * dimension to the grouping/window for the multi-point searches.
+  /** The ADC distance: the m per-subspace table lookups summed per
+    * (`keys`, vec_id).
     */
-  private def adcRank(scored: DataFrame, k: Int,
-                      withNprobe: Boolean = false): DataFrame = {
-    val keys = if (withNprobe) Seq("nprobe", "q_id") else Seq("q_id")
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(col("adc_d2").asc, col("vec_id"))
-    scored.groupBy((keys :+ "vec_id").map(col): _*)
+  private def adcSum(lookups: DataFrame, keys: Seq[String]): DataFrame =
+    lookups.groupBy((keys :+ "vec_id").map(col): _*)
       .agg(sum("qd2").as("adc_d2"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select((keys ++ Seq("vec_id", "rank", "adc_d2")).map(col): _*)
-  }
 
-  /** IVFADC — the composed deployment (Jégou et al. 2011 §IV; the
-    * classic large-scale ANN layout): coarse IVF cell pruning THEN
-    * asymmetric-distance ranking over PQ codes, so the scan touches
-    * only the query's cell AND only its codes. At 100 TB the code
-    * table is written partitioned by cell, making the cell filter a
-    * partition prune on an already-32×-compressed table — the two
-    * reductions compose multiplicatively.
-    *
-    * Same plan as [[topKPqAdc]] plus one vec_id equi-join to recover
-    * each code row's cell and the `cell == q_cell` filter pushed into
-    * the broadcast-join output.
-    *
-    * Persists the PQ subvector fan behind the returned lazy frame: the
-    * caller releases it after consuming the result ([[CacheScope]]).
+  /** ADC over labeled code rows `(vec_id, label, sub, code)`, a
+    * broadcast distance table and a probe table — shared by
+    * [[IvfCodec.Adc]] and [[searchIvfPqAdc]] (whose persisted code
+    * table carries the cell label directly, where the inline codec
+    * recovers it with a vec_id join). The corpus-side work is the
+    * (sub, code) equi-join against the distance table plus the
+    * (q_id, cell) restriction, both broadcast.
     */
-  def topKIvfPqAdc(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                   m: Int = 8, dims: Int = 64): DataFrame = {
-    val (cb, codes) = pqParts(emb, m, dims)
-    val dtable = adcDistTable(emb, queryIds, m, dims, cb, carryLabel = true)
-    val cellCodes = codes
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-    adcRank(cellCodes.join(broadcast(dtable), Seq("sub", "code"))
-      .filter(col("label") === col("q_label") && col("vec_id") =!= col("q_id")),
-      k)
-  }
-
-  /** Multi-probe IVFADC (Jégou et al. 2011 §IV-C tune in the composed
-    * deployment): the [[topKIvfPqAdc]] chain with the cell restriction
-    * widened to each query's `nprobe` nearest coarse cells
-    * ([[probedCellsMulti]] — the same ranking the plain IVF multi-probe and
-    * the IVF-SQ probe use, so the knob means the same thing across the
-    * whole index family). Everything else is byte-identical to the
-    * single-cell composition: same codebooks, same broadcast ADC
-    * distance table, same rank/tie-break.
-    *
-    * `nprobe ≥ |cells|` degenerates to the un-pruned [[topKPqAdc]]
-    * exactly; probed cell sets are prefixes of one ranking, so recall
-    * against a fixed truth is non-decreasing in `nprobe` — both
-    * spec-pinned. Scale shape: the probe table is broadcast-sized; the
-    * corpus-side work is the (sub, code) equi-join against the
-    * broadcast distance table plus the (q_id, cell) semi-restriction —
-    * `nprobe/|cells|` of the 32×-compressed code table per query, the
-    * original vectors never read.
-    *
-    * Persists the PQ subvector fan behind the returned lazy frame: the
-    * caller releases it after consuming the result ([[CacheScope]]).
-    */
-  def topKIvfPqAdcProbed(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                         nprobe: Int = 2, m: Int = 8,
-                         dims: Int = 64): DataFrame =
-    adcProbedMulti(emb, queryIds, k, Seq(nprobe), m, dims).drop("nprobe")
-
-  /** The probed ADC search over the whole probe dimension — shared by
-    * [[topKIvfPqAdcProbed]] and [[adcProbedRecallCurve]] (the same
-    * no-drift reasoning as [[sqProbedMulti]]).
-    */
-  private def adcProbedMulti(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                             nprobes: Seq[Int], m: Int,
-                             dims: Int): DataFrame = {
-    val (cb, codes) = pqParts(emb, m, dims)
-    val dtable = adcDistTable(emb, queryIds, m, dims, cb, carryLabel = false)
-    val cellCodes = codes
-      .join(emb.select(col("vec_id"), col("label")), Seq("vec_id"))
-    adcProbedRank(cellCodes, dtable,
-      probedCellsMulti(emb, queryIds, nprobes), k)
-  }
-
-  /** The probed ADC scoring/ranking tail over labeled code rows
-    * (`(vec_id, label, sub, code)`), a broadcast distance table and a
-    * probe table — shared by the inline [[adcProbedMulti]] and the
-    * index-backed [[searchIvfPqAdc]] (whose persisted code table
-    * carries the cell label directly, retiring the inline path's
-    * vec_id→label recovery join).
-    */
-  private def adcProbedRank(cellCodes: DataFrame, dtable: DataFrame,
-                            probes: DataFrame, k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    adcRank(cellCodes.join(broadcast(dtable), Seq("sub", "code"))
+  private def adcScored(cellCodes: DataFrame, dtable: DataFrame,
+                        probes: DataFrame): DataFrame =
+    adcSum(cellCodes.join(broadcast(dtable), Seq("sub", "code"))
       .join(broadcast(probes.withColumnRenamed("q_id", "p_qid")),
         col("q_id") === col("p_qid") && col("label") === col("c_label"))
-      .filter(col("vec_id") =!= col("q_id")),
-      k, withNprobe = true)
-  }
-
-  /** Recall-vs-nprobe tuning curve for IVFADC — the x99 discipline on
-    * [[topKIvfPqAdcProbed]], truth = the un-pruned ADC search
-    * ([[topKPqAdc]]) for the same pruning-cost-only reasoning as
-    * [[sqProbedRecallCurve]] (PQ quantization loss is x117's audit).
-    * Monotone in nprobe, exactly 1.0 at the over-provisioned point.
-    */
-  def adcProbedRecallCurve(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                           nprobes: Seq[Int], m: Int = 8,
-                           dims: Int = 64): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val probes = nprobes.map(_.toLong).toDF("nprobe")
-    val truth = topKPqAdc(emb, queryIds, k, m, dims).select("q_id", "vec_id")
-    recallAgainstBrute(truth.crossJoin(broadcast(probes)),
-      adcProbedMulti(emb, queryIds, k, nprobes, m, dims)
-        .select("nprobe", "q_id", "vec_id"),
-      Seq("nprobe", "q_id"))
-      .select("q_id", "n_brute", "n_hit", "recall", "nprobe")
-  }
+      .filter(col("vec_id") =!= col("q_id")), Seq("nprobe", "q_id"))
 
   /** Brute-force exact squared-euclidean top-k — the ground truth ADC
     * approximates (PQ quantizes L2 space, so auditing it against the
@@ -1190,7 +1069,7 @@ object Similarity {
   // no corpus aggregation of any kind appears in its plan
   // (PlanAuditSpec pins that). Every scoring step is the SAME shared
   // core the inline searches run (probedCellsCore, sqCodeWith,
-  // sdcProbedRank, adcDistTableFrom, adcProbedRank), so
+  // sdcScored, adcDistTableFrom, adcScored, rankIvf), so
   // search-from-tables hash-matches the inline search — the x151/x152
   // CORRECTNESS rows state exactly that against the x147/x148 oracles.
   //
@@ -1907,9 +1786,9 @@ object Similarity {
   /** Search a persisted IVF-SQ index: `queries` supplies
     * `(vec_id, embedding)` rows; the coarse ranking
     * ([[probedCellsCore]]), the query coding ([[sqCodeWith]]) and the
-    * SDC scoring ([[sdcProbedRank]]) are the inline
-    * [[topKIvfSqProbed]]'s own cores run against the index's tables,
-    * so the result is row-identical to the inline search over the
+    * SDC ranking ([[sdcScored]], [[rankIvf]]) are the inline
+    * [[IvfCodec.Sdc]] search's own cores run against the index's
+    * tables, so the result is row-identical to the inline search over the
     * corpus the index was built from (the x151 oracle row). Per-query
     * cost: |queries|·k coarse candidates + the probed cells' code
     * rows — nprobe/|cells| of the 8×-compressed corpus, no index
@@ -1930,6 +1809,7 @@ object Similarity {
     */
   def searchIvfSq(spark: org.apache.spark.sql.SparkSession, path: String,
                   queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
+    requireIvfArgs(k, Seq(nprobe))
     val m = resolveManifest(indexFs(spark, path), path)
     require(m.kind == "sq",
       s"index at $path is kind '${m.kind}' — searchIvfSq reads SQ indexes" +
@@ -1951,7 +1831,8 @@ object Similarity {
     val qcodes = sqCodeWith(qq, params)
       .select(col("vec_id").as("q_id"), col("cv").as("qv"),
         col("cn2").as("qn2"))
-    sdcProbedRank(codes, probed.join(qcodes, "q_id"), k).drop("nprobe")
+    rankIvf(sdcScored(codes, probed.join(qcodes, "q_id")), IvfCodec.Sdc, k)
+      .drop("nprobe")
   }
 
   /** Append new vectors to a persisted IVF-SQ index WITHOUT
@@ -2339,9 +2220,9 @@ object Similarity {
     * steady state: coarse ranking against the stored centroids, the
     * ADC distance table from the stored codebook
     * ([[adcDistTableFrom]]), and the probed ADC ranking over the
-    * stored cell-partitioned code rows ([[adcProbedRank]]) — all the
-    * inline [[topKIvfPqAdcProbed]]'s own cores, so results are
-    * row-identical to the inline search (the x152 oracle row). The
+    * stored cell-partitioned code rows ([[adcScored]], [[rankIvf]]) —
+    * all the inline [[IvfCodec.Adc]] search's own cores, so results
+    * are row-identical to the inline search (the x152 oracle row). The
     * original float vectors are read for the QUERIES only; the corpus
     * side touches nothing but nprobe/|cells| of the 32×-compressed
     * code table. [[searchIvfSq]]'s query-id contract and lock-free
@@ -2350,6 +2231,7 @@ object Similarity {
   def searchIvfPqAdc(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, k: Int,
                      nprobe: Int = 2): DataFrame = {
+    requireIvfArgs(k, Seq(nprobe))
     val mf = resolveManifest(indexFs(spark, path), path)
     require(mf.kind == "pq",
       s"index at $path is kind '${mf.kind}' — searchIvfPqAdc reads PQ " +
@@ -2370,7 +2252,7 @@ object Similarity {
       qq.select(col("vec_id").as("q_id"), col("vq").as("pv"),
         col("n2").as("pn2")),
       cent, Seq(nprobe))
-    val dtable = adcDistTableFrom(qq, m, dims, cb, carryLabel = false)
-    adcProbedRank(codes, dtable, probed, k).drop("nprobe")
+    rankIvf(adcScored(codes, adcDistTableFrom(qq, m, dims, cb), probed),
+      IvfCodec.Adc(m, dims), k).drop("nprobe")
   }
 }

@@ -1219,7 +1219,7 @@ object OracleSqlExt {
 
   /** The probe rule over the whole probe dimension —
     * `pcellsm(nprobe, q_id, c_label)`, the crk-prefix-per-curve-point
-    * trick of `Similarity.probedCellsMulti` (and annRecallCurveSql).
+    * trick of `Similarity.probedCellsCore` (and annRecallCurveSql).
     */
   private def probeCtesMulti(queryIds: Seq[Long],
                              nprobes: Seq[Int]): String =
@@ -1282,7 +1282,8 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, adc_d2
          |FROM tadc WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfPqAdc` — the identical ADC chain with
+  /** Mirrors `Similarity.ivfSearch` with `IvfCodec.Adc()`
+    * and `CellRule.Own` — the identical ADC chain with
     * each code row's cell recovered through `e` and restricted to the
     * query's cell before scoring (FAISS-style IVFADC).
     */
@@ -1293,7 +1294,8 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, adc_d2
          |FROM tadc WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfPqAdcProbed` — the IVFADC chain with
+  /** Mirrors `Similarity.ivfSearch` with `IvfCodec.Adc()`
+    * and `CellRule.Nearest(n)` — the IVFADC chain with
     * the stored-cell restriction widened to each query's `nprobe`
     * nearest coarse cells ([[probeCtes]]).
     */
@@ -1405,7 +1407,8 @@ object OracleSqlExt {
          |       CAST(n_hit AS DOUBLE) / CAST(n_brute AS DOUBLE) AS recall
          |FROM agg ORDER BY q_id""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfSq`: cell-pruned SDC over the SQ
+  /** Mirrors `Similarity.ivfSearch` with `IvfCodec.Sdc`
+    * and `CellRule.Own`: cell-pruned SDC over the SQ
     * codes — the sqRecallSql machinery with the label equi-join.
     */
   def ivfSqTopKSql(queryIds: Seq[Long], k: Int, dims: Int = 64): String =
@@ -1436,7 +1439,8 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, d2
          |FROM ranked WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.topKIvfSqProbed`: the ivfSqTopKSql machinery
+  /** Mirrors `Similarity.ivfSearch` with `IvfCodec.Sdc`
+    * and `CellRule.Nearest(n)`: the ivfSqTopKSql machinery
     * with the stored-cell equi-join replaced by the [[probeCtes]]
     * nearest-cells prefix — cell ranking in the original quantized
     * space, SDC scoring in the code space.
@@ -1488,7 +1492,8 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, d2
          |FROM ranked WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.sqProbedRecallCurve`: un-pruned SDC truth
+  /** Mirrors `Similarity.ivfRecallCurve` with
+    * `IvfCodec.Sdc`: un-pruned SDC truth
     * once, the probed SDC search once over the whole probe dimension
     * (crk prefixes), recall per (nprobe, query).
     */
@@ -1545,7 +1550,8 @@ object OracleSqlExt {
          |       nprobe
          |FROM agg ORDER BY nprobe, q_id""".stripMargin
 
-  /** Mirrors `Similarity.adcProbedRecallCurve`: the adcCtes un-pruned
+  /** Mirrors `Similarity.ivfRecallCurve` with
+    * `IvfCodec.Adc()`: the adcCtes un-pruned
     * chain is the truth, the probed scoring joins the pcellsm
     * prefixes, recall per (nprobe, query).
     */
@@ -2756,7 +2762,8 @@ object OracleSqlExt {
          |       CAST(n_hit AS DOUBLE) / CAST(n_brute AS DOUBLE) AS recall
          |FROM agg ORDER BY q_id""".stripMargin
 
-  /** Mirrors `Similarity.annRecallCurve`: brute-force ground truth
+  /** Mirrors `Similarity.ivfRecallCurve` with
+    * `IvfCodec.Cosine`: brute-force ground truth
     * computed ONCE (`tb`), the query→cell ranking computed ONCE
     * (`qc`), then each curve point (`probes` VALUES row) takes its
     * `crk <= nprobe` cell prefix, runs the probed top-k, and joins

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.operators.Similarity.{CellRule, IvfCodec}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -419,7 +420,7 @@ class ExtensionsSpec extends AnyFunSuite {
   test("IVF top-k is the label-restricted subset of brute force ranking") {
     import spark.implicits._
     val qLabel = emb.filter(col("vec_id") === 0L).select("label").head.getInt(0)
-    val ivf = Similarity.topKIvf(emb, Seq(0L), 5)
+    val ivf = Similarity.ivfSearch(emb, Seq(0L), 5, IvfCodec.Cosine, CellRule.Own)
       .select("vec_id").as[Long].collect().toSet
     val labels = emb.select("vec_id", "label").as[(Long, Int)].collect().toMap
     assert(ivf.forall(labels(_) == qLabel))
@@ -1148,7 +1149,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val ids = Seq(0L, 1L, 2L)
     val brute = Similarity.topKBrute(emb, ids, 5)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.topKIvf(emb, ids, 5)
+    val ivf = Similarity.ivfSearch(emb, ids, 5, IvfCodec.Cosine, CellRule.Own)
       .select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     val got = Similarity.annRecall(emb, ids, 5)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
@@ -1278,7 +1279,8 @@ class ExtensionsSpec extends AnyFunSuite {
     // the prune's defining property; (b) the composed search equals
     // the plain ADC ranking restricted to that cell and re-ranked —
     // pruning changes the candidate set, never the metric.
-    val res = Similarity.topKIvfPqAdc(emb, Seq(0L, 1L, 2L), 5)
+    val res = Similarity.ivfSearch(emb, Seq(0L, 1L, 2L), 5, IvfCodec.Adc(),
+      CellRule.Own)
     val lbl = emb.select(col("vec_id"), col("label"))
     val crossCell = res.join(lbl, "vec_id")
       .join(lbl.select(col("vec_id").as("q_id"), col("label").as("q_label")),
@@ -1308,7 +1310,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val vecs = for (g <- 0 until 4; i <- 0 until 5) yield
       (g * 5L + i, g, Array.fill(64)(g * 0.25f + 0.05f))
     val fix = vecs.toDF("vec_id", "label", "embedding")
-    val got = Similarity.topKIvfPqAdc(fix, Seq(0L), 4)
+    val got = Similarity.ivfSearch(fix, Seq(0L), 4, IvfCodec.Adc(), CellRule.Own)
       .as[(Long, Long, Long, Long)].collect().sortBy(_._3).toSeq
     assert(got == Seq((0L, 1L, 1L, 0L), (0L, 2L, 2L, 0L),
       (0L, 3L, 3L, 0L), (0L, 4L, 4L, 0L)))
@@ -1495,13 +1497,14 @@ class ExtensionsSpec extends AnyFunSuite {
       df.as[(Long, Long, Long, Double)].collect().toSet
     val brute = s(Similarity.topKBrute(emb, ids, 5))
     val nCells = emb.select("label").distinct().count().toInt
+    def probed(n: Int) =
+      Similarity.ivfSearch(emb, ids, 5, IvfCodec.Cosine, CellRule.Nearest(n))
     // nprobe = |cells| degenerates to brute force exactly — FULL rows,
     // so ranks and cosines are pinned, not just the neighbor set
-    assert(full(Similarity.topKIvfProbe(emb, ids, 5, nCells)) ==
-      full(Similarity.topKBrute(emb, ids, 5)))
+    assert(full(probed(nCells)) == full(Similarity.topKBrute(emb, ids, 5)))
     // more probes never lose a brute-force hit a narrower probe found
-    val p1 = s(Similarity.topKIvfProbe(emb, ids, 5, 1))
-    val p2 = s(Similarity.topKIvfProbe(emb, ids, 5, 2))
+    val p1 = s(probed(1))
+    val p2 = s(probed(2))
     assert((p1 & brute).subsetOf(p2 & brute),
       "widening the probe set must not lose true neighbors")
   }
@@ -1516,11 +1519,13 @@ class ExtensionsSpec extends AnyFunSuite {
     // discipline applied to both composed indexes)
     def full(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Long, Long)].collect().toSet
-    assert(full(Similarity.topKIvfSqProbed(emb, ids, 5, nCells)) ==
-      full(Similarity.topKSq(emb, ids, 5)),
+    def sdc(n: Int) =
+      Similarity.ivfSearch(emb, ids, 5, IvfCodec.Sdc, CellRule.Nearest(n))
+    def adc(n: Int) =
+      Similarity.ivfSearch(emb, ids, 5, IvfCodec.Adc(), CellRule.Nearest(n))
+    assert(full(sdc(nCells)) == full(Similarity.topKSq(emb, ids, 5)),
       "nprobe >= |cells| must equal un-pruned SDC bit-for-bit")
-    assert(full(Similarity.topKIvfPqAdcProbed(emb, ids, 5, nCells)) ==
-      full(Similarity.topKPqAdc(emb, ids, 5)),
+    assert(full(adc(nCells)) == full(Similarity.topKPqAdc(emb, ids, 5)),
       "nprobe >= |cells| must equal un-pruned ADC bit-for-bit")
     // monotone vs the un-pruned truth IN THE SAME METRIC: probed cell
     // sets are prefixes of one centroid ranking, so a truth member a
@@ -1529,14 +1534,28 @@ class ExtensionsSpec extends AnyFunSuite {
     def s(df: org.apache.spark.sql.DataFrame) =
       df.select("q_id", "vec_id").as[(Long, Long)].collect().toSet
     val sqTruth = s(Similarity.topKSq(emb, ids, 5))
-    assert((s(Similarity.topKIvfSqProbed(emb, ids, 5, 1)) & sqTruth)
-      .subsetOf(s(Similarity.topKIvfSqProbed(emb, ids, 5, 2)) & sqTruth),
+    assert((s(sdc(1)) & sqTruth).subsetOf(s(sdc(2)) & sqTruth),
       "widening the SQ probe set must not lose SDC-truth neighbors")
     val adcTruth = s(Similarity.topKPqAdc(emb, ids, 5))
-    assert((s(Similarity.topKIvfPqAdcProbed(emb, ids, 5, 1)) & adcTruth)
-      .subsetOf(
-        s(Similarity.topKIvfPqAdcProbed(emb, ids, 5, 2)) & adcTruth),
+    assert((s(adc(1)) & adcTruth).subsetOf(s(adc(2)) & adcTruth),
       "widening the ADC probe set must not lose ADC-truth neighbors")
+  }
+
+  test("IVF searches refuse k = 0 for every codec and both cell rules") {
+    val ids = Seq(0L, 1L, 2L)
+    val codecs = Seq(IvfCodec.Cosine, IvfCodec.Sdc, IvfCodec.Adc())
+    for (codec <- codecs; cells <- Seq(CellRule.Own, CellRule.Nearest(2))) {
+      val e = intercept[IllegalArgumentException](
+        Similarity.ivfSearch(emb, ids, 0, codec, cells))
+      assert(e.getMessage.contains("k must be positive"),
+        s"$codec / $cells: ${e.getMessage}")
+    }
+    // the curve shares the check, probe counts included
+    for (codec <- codecs; (k, nprobes) <- Seq((0, Seq(1, 2)), (5, Nil),
+        (5, Seq(0, 2)), (5, Seq(2, 2)))) {
+      intercept[IllegalArgumentException](
+        Similarity.ivfRecallCurve(emb, ids, k, codec, nprobes))
+    }
   }
 
   test("composed probe curves: ceiling reads exactly 1.0, recall monotone per query") {
@@ -1544,13 +1563,14 @@ class ExtensionsSpec extends AnyFunSuite {
     val ids = Seq(0L, 1L, 2L)
     val nCells = emb.select("label").distinct().count().toInt
     // single-point equivalence needs no spec: the curve and the
-    // single searches share sqProbedMulti/adcProbedMulti by
+    // single searches share ivfSearch's ranking by
     // construction — what is pinned here is the curve's CONTENT: the
     // over-provisioned point equals the un-pruned truth (recall 1.0)
     // and recall never decreases as the probe set widens
     for (curve <- Seq(
-      Similarity.sqProbedRecallCurve(emb, ids, 5, Seq(1, 2, nCells)),
-      Similarity.adcProbedRecallCurve(emb, ids, 5, Seq(1, 2, nCells)))) {
+      Similarity.ivfRecallCurve(emb, ids, 5, IvfCodec.Sdc, Seq(1, 2, nCells)),
+      Similarity.ivfRecallCurve(emb, ids, 5, IvfCodec.Adc(),
+        Seq(1, 2, nCells)))) {
       val rows = curve.select("nprobe", "q_id", "recall")
         .as[(Long, Long, Double)].collect()
       assert(rows.length == 9)
@@ -1659,7 +1679,8 @@ class ExtensionsSpec extends AnyFunSuite {
   test("annRecallCurve: monotone per query, ceiling point is brute (recall 1.0)") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 2L)
-    val curve = Similarity.annRecallCurve(emb, ids, 5, SparkEntry.RecallCurveProbes)
+    val curve = Similarity.ivfRecallCurve(emb, ids, 5, IvfCodec.Cosine,
+        SparkEntry.RecallCurveProbes)
       .select("nprobe", "q_id", "n_brute", "n_hit", "recall")
       .as[(Long, Long, Long, Long, Double)].collect()
     assert(curve.length == SparkEntry.RecallCurveProbes.length * ids.length)
@@ -2575,8 +2596,8 @@ class ExtensionsSpec extends AnyFunSuite {
         "a search pinned before the retrain must return the complete " +
           "pre-retrain snapshot")
       assert(rows(search()) ==
-        rows(Similarity.topKIvfSqProbed(emb, Seq(0L, 1L, 2L), 5,
-          nprobe = 2)),
+        rows(Similarity.ivfSearch(emb, Seq(0L, 1L, 2L), 5, IvfCodec.Sdc,
+          CellRule.Nearest(2))),
         "post-retrain searches must serve the retrained index")
       // ... and the grace window is exactly one cycle: the NEXT writer
       // retires everything v4/v5 do not reference — the pre-retrain
@@ -3380,7 +3401,8 @@ class ExtensionsSpec extends AnyFunSuite {
     // with every vector in ONE cell the prune is a no-op, so the
     // composed search must equal plain SDC result-for-result
     val one = emb.withColumn("label", lit(0))
-    val ivf = Similarity.topKIvfSq(one, Seq(0L, 1L, 2L), 5)
+    val ivf = Similarity.ivfSearch(one, Seq(0L, 1L, 2L), 5, IvfCodec.Sdc,
+        CellRule.Own)
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
     val flat = Similarity.topKSq(one, Seq(0L, 1L, 2L), 5)
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._1, r._3)).toSeq
@@ -3431,12 +3453,12 @@ class ExtensionsSpec extends AnyFunSuite {
       Similarity.buildIvfSqIndex(emb, s"$root/sq")
       assert(full(Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
           nprobe = 2)) ==
-        full(Similarity.topKIvfSqProbed(emb, ids, 5, nprobe = 2)),
+        full(Similarity.ivfSearch(emb, ids, 5, IvfCodec.Sdc, CellRule.Nearest(2))),
         "IVF-SQ search-from-tables must equal the inline probed search")
       Similarity.buildIvfPqIndex(emb, s"$root/pq")
       assert(full(Similarity.searchIvfPqAdc(spark, s"$root/pq", queries, 5,
           nprobe = 2)) ==
-        full(Similarity.topKIvfPqAdcProbed(emb, ids, 5, nprobe = 2)),
+        full(Similarity.ivfSearch(emb, ids, 5, IvfCodec.Adc(), CellRule.Nearest(2))),
         "IVFADC search-from-tables must equal the inline probed search")
       // the persisted code tables are cell-partitioned on disk — the
       // layout that makes the probed-cell restriction a partition
