@@ -2,7 +2,7 @@ package graft
 
 import graft.core.Intervals
 import graft.operators.{AsOfJoin, Dedup, HtaService, Ingest, Layout, Multimodal, Similarity, TextAnalysis}
-import graft.operators.Similarity.{CellRule, IvfCodec}
+import graft.operators.Similarity.{CellRule, IndexCodec, IvfCodec}
 import graft.oracle.{OracleSql, OracleSqlExt}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -462,7 +462,7 @@ object SparkEntry {
     root.toString
   }
 
-  /** The ONE built+appended IVF index tree per kind (sq | pq) shared
+  /** The ONE built+appended IVF index tree per codec (SDC | ADC) shared
     * by the append fixture and its compaction sibling — the
     * [[gatePipeTree]] sharing discipline (VERDICT r15 #5) applied to
     * the index lifecycle: x156/x157 re-ran x154/x155's build+append
@@ -488,31 +488,26 @@ object SparkEntry {
     * result before invoking the next fixture).
     */
   private val ivfTreeMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), String]
+    .empty[(SparkSession, String, IndexCodec), String]
   private lazy val ivfTreeCleanup: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       ivfTreeMemo.values.foreach(r => new scala.reflect.io.Directory(
         new java.io.File(r)).deleteRecursively())))
-  private def ivfAppendedTree(s: SparkSession, dir: String, kind: String,
-                              rebuild: Boolean): String = {
+  private def ivfAppendedTree(s: SparkSession, dir: String,
+                              codec: IndexCodec, rebuild: Boolean): String = {
     ivfTreeCleanup
-    val key = (s, dir, kind)
+    val key = (s, dir, codec)
     if (!rebuild) ivfTreeMemo.get(key) match {
       case Some(r) => return r
       case None => ()
     }
-    val root = java.nio.file.Files.createTempDirectory(s"graft-ivf$kind")
+    val root = java.nio.file.Files.createTempDirectory("graft-ivf")
     guardingScratch(root.toString) {
       val emb = Tables.read(s, dir, "embeddings")
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
       val rest = emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
-      if (kind == "sq") {
-        Similarity.buildIvfSqIndex(base, root.toString)
-        Similarity.appendToIvfSqIndex(rest, root.toString, tag = "day2")
-      } else {
-        Similarity.buildIvfPqIndex(base, root.toString)
-        Similarity.appendToIvfPqIndex(rest, root.toString, tag = "day2")
-      }
+      Similarity.buildIvfIndex(base, root.toString, codec)
+      Similarity.appendToIvfIndex(rest, root.toString, tag = "day2")
     }
     // swap AFTER the build succeeds (the gatePipeTree ordering note)
     ivfTreeMemo.put(key, root.toString).foreach { old =>
@@ -1040,9 +1035,9 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft-sqidx")
       guardingScratch(root.toString) {
         val emb = Tables.read(s, dir, "embeddings")
-        Similarity.buildIvfSqIndex(emb, root.toString)
+        Similarity.buildIvfIndex(emb, root.toString, IvfCodec.Sdc)
         materializedWithoutScratch(
-          Similarity.searchIvfSq(s, root.toString,
+          Similarity.searchIvfIndex(s, root.toString,
             emb.filter(col("vec_id").isin(0L, 1L, 2L))
               .select("vec_id", "embedding"),
             5, nprobe = 2).orderBy("q_id", "rank"),
@@ -1056,9 +1051,9 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft-pqidx")
       guardingScratch(root.toString) {
         val emb = Tables.read(s, dir, "embeddings")
-        Similarity.buildIvfPqIndex(emb, root.toString)
+        Similarity.buildIvfIndex(emb, root.toString, IvfCodec.Adc())
         materializedWithoutScratch(
-          Similarity.searchIvfPqAdc(s, root.toString,
+          Similarity.searchIvfIndex(s, root.toString,
             emb.filter(col("vec_id").isin(0L, 1L, 2L))
               .select("vec_id", "embedding"),
             5, nprobe = 2).orderBy("q_id", "rank"),
@@ -1072,7 +1067,7 @@ object SparkEntry {
     // table: params + centroids from the base subset, codes + search
     // over everything
     "x154_ivf_sq_append" -> ((s, dir) =>
-      Similarity.searchIvfSq(s, ivfAppendedTree(s, dir, "sq",
+      Similarity.searchIvfIndex(s, ivfAppendedTree(s, dir, IvfCodec.Sdc,
           rebuild = true),
         Tables.read(s, dir, "embeddings")
           .filter(col("vec_id").isin(0L, 1L, 2L))
@@ -1089,8 +1084,9 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft-sqstr")
       guardingScratch(root.toString) {
         val emb = Tables.read(s, dir, "embeddings")
-        Similarity.buildIvfSqIndex(
-          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L), root.toString)
+        Similarity.buildIvfIndex(
+          emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L), root.toString,
+          IvfCodec.Sdc)
         val rest =
           emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
             .select("vec_id", "embedding", "label")
@@ -1111,7 +1107,7 @@ object SparkEntry {
         }
         q.stop()
         materializedWithoutScratch(
-          Similarity.searchIvfSq(s, root.toString,
+          Similarity.searchIvfIndex(s, root.toString,
             emb.filter(col("vec_id").isin(0L, 1L, 2L))
               .select("vec_id", "embedding"),
             5, nprobe = 2).orderBy("q_id", "rank"),
@@ -1121,7 +1117,7 @@ object SparkEntry {
     // X3b the same lifecycle on IVFADC: frozen codebook + centroids,
     // appended code rows, search over the grown index
     "x155_ivfadc_append" -> ((s, dir) =>
-      Similarity.searchIvfPqAdc(s, ivfAppendedTree(s, dir, "pq",
+      Similarity.searchIvfIndex(s, ivfAppendedTree(s, dir, IvfCodec.Adc(),
           rebuild = true),
         Tables.read(s, dir, "embeddings")
           .filter(col("vec_id").isin(0L, 1L, 2L))
@@ -1133,11 +1129,11 @@ object SparkEntry {
     "x156_sq_index_compact" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-sqcpt")
       guardingScratch(root.toString) {
-        copyTree(ivfAppendedTree(s, dir, "sq", rebuild = false),
+        copyTree(ivfAppendedTree(s, dir, IvfCodec.Sdc, rebuild = false),
           root.toString)
         Similarity.compactIvfIndex(s, root.toString)
         materializedWithoutScratch(
-          Similarity.searchIvfSq(s, root.toString,
+          Similarity.searchIvfIndex(s, root.toString,
             Tables.read(s, dir, "embeddings")
               .filter(col("vec_id").isin(0L, 1L, 2L))
               .select("vec_id", "embedding"),
@@ -1149,11 +1145,11 @@ object SparkEntry {
     "x157_pq_index_compact" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft-pqcpt")
       guardingScratch(root.toString) {
-        copyTree(ivfAppendedTree(s, dir, "pq", rebuild = false),
+        copyTree(ivfAppendedTree(s, dir, IvfCodec.Adc(), rebuild = false),
           root.toString)
         Similarity.compactIvfIndex(s, root.toString)
         materializedWithoutScratch(
-          Similarity.searchIvfPqAdc(s, root.toString,
+          Similarity.searchIvfIndex(s, root.toString,
             Tables.read(s, dir, "embeddings")
               .filter(col("vec_id").isin(0L, 1L, 2L))
               .select("vec_id", "embedding"),

@@ -930,7 +930,8 @@ object StressProof {
     val emb = plantedEmb(spark, nBase + batches * per, dim)
       .withColumn("label",
         pmod(col("vec_id") * 13L + 5L, lit(8L)).cast("int"))
-    Similarity.buildIvfSqIndex(emb.filter(col("vec_id") < nBase), path)
+    Similarity.buildIvfIndex(emb.filter(col("vec_id") < nBase), path,
+      IvfCodec.Sdc)
     val rest = emb.filter(col("vec_id") >= nBase)
       .select("vec_id", "embedding", "label")
       .as[(Long, Array[Float], Int)].collect().sortBy(_._1)

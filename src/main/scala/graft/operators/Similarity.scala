@@ -401,7 +401,7 @@ object Similarity {
   // by (its codec). Both become data — a probe table and a scored
   // candidate frame — that meet in one ranking tail, so a codec ranks
   // identically under either cell rule, inline or from a persisted
-  // index ([[searchIvfSq]], [[searchIvfPqAdc]]).
+  // index ([[searchIvfIndex]]).
 
   /** The distance an IVF search ranks by — its codec. A codec supplies
     * its coded corpus and query side, the score column with its sort
@@ -433,6 +433,42 @@ object Similarity {
                                      k: Int): DataFrame
   }
 
+  /** An [[IvfCodec]] a persisted index can carry: [[IvfCodec.Sdc]]
+    * (manifest kind `sq`) or [[IvfCodec.Adc]] (kind `pq`). Cosine has
+    * no coded corpus to persist, so it is not one, and
+    * [[buildIvfIndex]] does not compile with it. A codec supplies what
+    * its index does differently — the learned tables it writes, how it
+    * codes rows against them once stored, and its scored candidates
+    * from them; its [[IndexKind]] names its codes schema and opens the
+    * stored tables again. Everything else in the lifecycle is written
+    * once in [[buildIvfIndex]], [[appendToIvfIndex]] and
+    * [[searchIvfIndex]].
+    */
+  sealed abstract class IndexCodec(score: String, ascending: Boolean)
+      extends IvfCodec(score, ascending) {
+    private[Similarity] def kind: IndexKind
+    /** The vector width the codec itself fixes (ADC's `dims`); SQ
+      * params fit any one width, so SQ fixes none.
+      */
+    private[Similarity] def fixedDim: Option[Int]
+    /** Learn the codec's tables from the quantized corpus `q` and
+      * write them under the learned-table dir `dir`.
+      */
+    private[Similarity] def learn(q: DataFrame, dir: String): Unit
+    /** `(vec_id, <codes>, label)`: the quantized rows `q` coded against
+      * the tables stored under `dir` — the one coding of build and
+      * append, so the two can never drift.
+      */
+    private[Similarity] def coded(q: DataFrame, dir: String): DataFrame
+    /** `(nprobe, q_id, vec_id, <score>)`: stored code rows in the
+      * probed cells scored against the quantized queries `qq`
+      * `(vec_id, vq, n2)` with the tables stored under `dir`.
+      */
+    private[Similarity] def storedScored(codes: DataFrame, qq: DataFrame,
+                                         probes: DataFrame,
+                                         dir: String): DataFrame
+  }
+
   object IvfCodec {
     case object Cosine extends IvfCodec("cosine", ascending = false) {
       private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
@@ -447,7 +483,7 @@ object Similarity {
         topKBrute(emb, queryIds, k)
     }
 
-    case object Sdc extends IvfCodec("d2", ascending = true) {
+    case object Sdc extends IndexCodec("d2", ascending = true) {
       private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
                                      probes: DataFrame): DataFrame = {
         val corpus = sqCoded(emb)
@@ -457,10 +493,26 @@ object Similarity {
       private[Similarity] def unpruned(emb: DataFrame, queryIds: Seq[Long],
                                        k: Int): DataFrame =
         topKSq(emb, queryIds, k)
+      private[Similarity] def kind = IndexKind.Sq
+      private[Similarity] def fixedDim = None
+      private[Similarity] def learn(q: DataFrame, dir: String): Unit =
+        sqParams(q).coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      private[Similarity] def coded(q: DataFrame, dir: String): DataFrame =
+        sqCodeWith(q, storedParams(q.sparkSession, dir))
+          .select(col("vec_id"), col("cv"), col("cn2"),
+            requireCellLabel(col("label")))
+      private[Similarity] def storedScored(codes: DataFrame, qq: DataFrame,
+                                           probes: DataFrame,
+                                           dir: String): DataFrame =
+        sdcScored(codes, probes.join(
+          sqCodeWith(qq, storedParams(qq.sparkSession, dir))
+            .select(col("vec_id").as("q_id"), col("cv").as("qv"),
+              col("cn2").as("qn2")),
+          "q_id"))
     }
 
     final case class Adc(m: Int = 8, dims: Int = 64)
-        extends IvfCodec("adc_d2", ascending = true) {
+        extends IndexCodec("adc_d2", ascending = true) {
       private[Similarity] def scored(emb: DataFrame, queryIds: Seq[Long],
                                      probes: DataFrame): DataFrame = {
         val (cb, codes) = pqParts(emb, m, dims)
@@ -471,6 +523,27 @@ object Similarity {
       private[Similarity] def unpruned(emb: DataFrame, queryIds: Seq[Long],
                                        k: Int): DataFrame =
         topKPqAdc(emb, queryIds, k, m, dims)
+      private[Similarity] def kind = IndexKind.Pq
+      private[Similarity] def fixedDim = Some(dims)
+      // the codebook and the codes actions each explode their own
+      // subspace fan: a per-row projection of the build's cached `q`
+      private[Similarity] def learn(q: DataFrame, dir: String): Unit = {
+        import q.sparkSession.implicits._
+        pqCodebook(pqSubs(q, m, dims)).coalesce(1).write.mode("overwrite")
+          .parquet(s"$dir/codebook")
+        Seq((m, dims)).toDF("m", "dims").coalesce(1).write.mode("overwrite")
+          .parquet(s"$dir/meta")
+      }
+      private[Similarity] def coded(q: DataFrame, dir: String): DataFrame =
+        pqAssignWith(pqSubs(q, m, dims), storedCodebook(q.sparkSession, dir))
+          .select("vec_id", "sub", "code")
+          .join(q.select(col("vec_id"), requireCellLabel(col("label"))),
+            Seq("vec_id"))
+      private[Similarity] def storedScored(codes: DataFrame, qq: DataFrame,
+                                           probes: DataFrame,
+                                           dir: String): DataFrame =
+        adcScored(codes, adcDistTableFrom(qq, m, dims,
+          storedCodebook(qq.sparkSession, dir)), probes)
     }
   }
 
@@ -652,7 +725,7 @@ object Similarity {
       .withColumn("dim", col("dim").cast("long"))
 
   /** The learned SQ parameters: ONE row of per-dimension [min, max]
-    * arrays over the quantized corpus — the table [[buildIvfSqIndex]]
+    * arrays over the quantized corpus — the table an SQ index build
     * persists and [[sqCodeWith]] broadcasts.
     */
   private def sqParams(q: DataFrame): DataFrame = {
@@ -670,10 +743,10 @@ object Similarity {
 
   /** Code a quantized frame (any frame carrying `vq`) against an SQ
     * params row — appends `cv`/`cn2`. ONE spelling for the corpus
-    * coding ([[sqCoded]], [[buildIvfSqIndex]]), the query-side coding
-    * ([[searchIvfSq]]) and the frozen-params append
-    * ([[appendToIvfSqIndex]]), so the affine map can never drift
-    * between build time and search/append time.
+    * coding ([[sqCoded]], and [[IvfCodec.Sdc]]'s index build and
+    * frozen-params append) and the query-side coding of an SQ index
+    * search, so the affine map can never drift between build time and
+    * search/append time.
     *
     * Codes CLAMP to 0..255 (the FAISS scalar-quantizer rule): at
     * build time every value sits inside the trained [dmin, dmax] and
@@ -728,8 +801,8 @@ object Similarity {
 
   /** The coarse-probe rule of every [[CellRule.Nearest]] search, inline
     * ([[nearestCells]]: centroids derived from the corpus) or from an
-    * index ([[searchIvfSq]], [[searchIvfPqAdc]]: centroids read from
-    * the persisted index): each query's nearest centroid cells, ranked
+    * index ([[searchIvfIndex]]: centroids read from the persisted
+    * index): each query's nearest centroid cells, ranked
     * by exact int64 squared distance in the ORIGINAL quantized space
     * (the coarse quantizer sees raw vectors, as FAISS's does), ties to
     * the lower cell label — the same distance as [[kmeansIter]]. Over
@@ -756,7 +829,7 @@ object Similarity {
 
   /** SDC over `(vec_id, label, cv, cn2)` code rows and a probe table
     * carrying the coded query side — [[topKSq]]'s distance, shared by
-    * [[IvfCodec.Sdc]] and [[searchIvfSq]], so the deployed
+    * [[IvfCodec.Sdc]]'s inline and index searches, so the deployed
     * search-from-tables path scores exactly like the inline one.
     */
   private def sdcScored(codes: DataFrame, probes: DataFrame): DataFrame =
@@ -861,10 +934,8 @@ object Similarity {
   private def pqParts(emb: DataFrame, m: Int, dims: Int): (DataFrame, DataFrame) = {
     // subs feeds BOTH the codebook aggregation and the assignment join
     // — differing projections defeat exchange reuse, so without the
-    // persist the quantize+subspace-explode fan runs once per side
-    // (and once per write action in the index build). Released by the
-    // caller — the CacheScope contract; [[buildIvfPqIndex]] persists
-    // its own copy and releases before returning.
+    // persist the quantize+subspace-explode fan runs once per side.
+    // Released by the caller — the CacheScope contract.
     val subs = pqSubs(quantized(emb), m, dims).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = pqCodebook(subs)
@@ -900,9 +971,9 @@ object Similarity {
 
   /** Assign each (vector, subspace) row its nearest codeword from an
     * EXPLICIT codebook — the piece [[pqParts]] (codebook just learned)
-    * and [[appendToIvfPqIndex]] (codebook read frozen from the index)
-    * share, so code assignment can never drift between build time and
-    * append time.
+    * and [[IvfCodec.Adc]]'s index build and append (codebook read
+    * frozen from the index) share, so code assignment can never drift
+    * between the inline search, build time and append time.
     */
   private def pqAssignWith(subs: DataFrame, cb: DataFrame): DataFrame =
     subs.withColumn("sn2", VecOps.normSq(col("svq")))
@@ -983,7 +1054,7 @@ object Similarity {
 
   /** The table build against an EXPLICIT quantized query frame — the
     * piece the inline searches (queries selected out of the corpus)
-    * and the index-backed [[searchIvfPqAdc]] (queries supplied, the
+    * and the index-backed [[searchIvfIndex]] (queries supplied, the
     * codebook read from the persisted index) share.
     */
   private def adcDistTableFrom(qrows: DataFrame, m: Int, dims: Int,
@@ -1010,7 +1081,7 @@ object Similarity {
 
   /** ADC over labeled code rows `(vec_id, label, sub, code)`, a
     * broadcast distance table and a probe table — shared by
-    * [[IvfCodec.Adc]] and [[searchIvfPqAdc]] (whose persisted code
+    * [[IvfCodec.Adc]]'s inline and index searches (whose persisted code
     * table carries the cell label directly, where the inline codec
     * recovers it with a vec_id join). The corpus-side work is the
     * (sub, code) equi-join against the distance table plus the
@@ -1061,14 +1132,16 @@ object Similarity {
   // The inline searches above derive the coarse quantizer, SQ params
   // and PQ codebook from the corpus INSIDE every call — right for
   // oracle-checkable one-shots, wrong for a deployment, which builds
-  // an index once and searches it many times. These split the two:
-  // build persists the broadcast-sized learned tables plus the coded
-  // corpus (partitioned BY CELL, so the probed search's cell
+  // an index once and searches it many times. One lifecycle splits
+  // the two for either indexable codec ([[IndexCodec]]):
+  // [[buildIvfIndex]] persists the broadcast-sized learned tables plus
+  // the coded corpus (partitioned BY CELL, so the probed search's cell
   // restriction is a partition prune on the 8×/32×-compressed code
-  // table); search reads them and pays ONLY the probed-cells scan —
-  // no corpus aggregation of any kind appears in its plan
-  // (PlanAuditSpec pins that). Every scoring step is the SAME shared
-  // core the inline searches run (probedCellsCore, sqCodeWith,
+  // table); [[appendToIvfIndex]] codes new vectors against the stored
+  // tables; [[searchIvfIndex]] reads them and pays ONLY the
+  // probed-cells scan — no corpus aggregation of any kind appears in
+  // its plan (PlanAuditSpec pins that). Every scoring step is the SAME
+  // shared core the inline searches run (probedCellsCore, sqCodeWith,
   // sdcScored, adcDistTableFrom, adcScored, rankIvf), so
   // search-from-tables hash-matches the inline search — the x151/x152
   // CORRECTNESS rows state exactly that against the x147/x148 oracles.
@@ -1141,12 +1214,66 @@ object Similarity {
     StructField("m", IntegerType),
     StructField("dims", IntegerType)))
 
+  private def storedParams(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): DataFrame =
+    spark.read.schema(SqParamsSchema).parquet(s"$dir/params")
+  private def storedCodebook(spark: org.apache.spark.sql.SparkSession,
+                             dir: String): DataFrame =
+    spark.read.schema(CodebookSchema).parquet(s"$dir/codebook")
+
+  /** What a manifest's `kind` line names — the one kind ↔ codec
+    * mapping. A kind carries its codes schema (all compaction needs)
+    * and the learned tables its codec writes, and [[IndexKind.open]]
+    * turns a snapshot's learned-table dir back into that codec with the
+    * vector width its tables were learned at.
+    */
+  private[Similarity] sealed abstract class IndexKind(
+      val name: String, val codesSchema: StructType, tables: Seq[String]) {
+    protected def stored(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): (IndexCodec, Int)
+    /** The codec and width stored under `<path>/<learned>` — loud when
+      * one of the kind's tables is missing there (a manifest whose kind
+      * line disagrees with its tree), before any code is read.
+      */
+    def open(spark: org.apache.spark.sql.SparkSession, path: String,
+             learned: String): (IndexCodec, Int) = {
+      val hfs = indexFs(spark, path)
+      val missing = tables.filterNot(t =>
+        hfs.exists(new org.apache.hadoop.fs.Path(s"$path/$learned/$t")))
+      require(missing.isEmpty,
+        s"index at $path is kind '$name', but $learned lacks its " +
+          s"${missing.mkString(" and ")} table — the manifest kind and " +
+          "the learned tables disagree")
+      stored(spark, s"$path/$learned")
+    }
+  }
+
+  private[Similarity] object IndexKind {
+    case object Sq extends IndexKind("sq", SqCodesSchema, Seq("params")) {
+      protected def stored(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): (IndexCodec, Int) =
+        (IvfCodec.Sdc, storedParams(spark, dir).head().getSeq[Long](0).size)
+    }
+    case object Pq extends IndexKind("pq", PqCodesSchema,
+                                     Seq("codebook", "meta")) {
+      protected def stored(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): (IndexCodec, Int) = {
+        val meta = spark.read.schema(PqMetaSchema).parquet(s"$dir/meta").head()
+        (IvfCodec.Adc(meta.getInt(0), meta.getInt(1)), meta.getInt(1))
+      }
+    }
+    def apply(name: String, manifest: org.apache.hadoop.fs.Path): IndexKind =
+      Seq(Sq, Pq).find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(
+          s"manifest $manifest carries unknown index kind '$name'"))
+  }
+
   /** One published snapshot of an index: its kind, learned-table dir,
     * absorbed append tags, and the exact cell directories (relative to
     * `gens/`) a reader may scan. The manifest file IS the index — a
     * generation no manifest references does not exist to readers.
     */
-  private case class IndexManifest(version: Int, kind: String,
+  private case class IndexManifest(version: Int, kind: IndexKind,
                                    learned: String, tags: Set[String],
                                    cells: Seq[String])
 
@@ -1231,14 +1358,13 @@ object Similarity {
       // retired format, not a crashed build — say so, with the remedy
       require(!hfs.exists(new org.apache.hadoop.fs.Path(s"$path/codes")),
         s"index at $path uses the retired flat layout (codes/ tree, " +
-          "no manifest) — rebuild it with buildIvfSqIndex / " +
-          "buildIvfPqIndex (a rebuild is zero-downtime under the " +
-          "manifest protocol, but this first one has no old snapshot " +
-          "to serve)")
+          "no manifest) — rebuild it with buildIvfIndex (a rebuild " +
+          "is zero-downtime under the manifest protocol, but this " +
+          "first one has no old snapshot to serve)")
       throw new IllegalArgumentException(
         s"no published index at $path — build one first " +
-          "(buildIvfSqIndex / buildIvfPqIndex); a crash before the " +
-          "manifest publish leaves nothing readable by design")
+          "(buildIvfIndex); a crash before the manifest publish leaves " +
+          "nothing readable by design")
     }
     val m = readManifest(hfs, ms.last._2, ms.last._1)
     manifestVersionHints.put(path, Integer.valueOf(m.version))
@@ -1263,10 +1389,7 @@ object Similarity {
       case other => throw new IllegalArgumentException(
         s"manifest $p must carry exactly one '$k' line, found ${other.length}")
     }
-    val kind = one("kind")
-    require(kind == "sq" || kind == "pq",
-      s"manifest $p carries unknown index kind '$kind'")
-    IndexManifest(version, kind, one("learned"),
+    IndexManifest(version, IndexKind(one("kind"), p), one("learned"),
       vals("tag").toSet, vals("cell"))
   }
 
@@ -1372,7 +1495,7 @@ object Similarity {
       val out = hfs.create(tmp, true)
       try {
         val sb = new StringBuilder("graft-ann-index v1\n")
-        sb ++= s"kind ${m.kind}\n"
+        sb ++= s"kind ${m.kind.name}\n"
         sb ++= s"learned ${m.learned}\n"
         m.tags.toSeq.sorted.foreach(t => sb ++= s"tag $t\n")
         m.cells.sorted.foreach(c => sb ++= s"cell $c\n")
@@ -1659,8 +1782,7 @@ object Similarity {
       "index reads require spark.sql.files.ignoreMissingFiles=false: " +
         "with it set, a search pinned to a retired snapshot would " +
         "silently return an incomplete top-k instead of failing loudly")
-    val schema = if (m.kind == "pq") PqCodesSchema else SqCodesSchema
-    spark.read.option("basePath", s"$path/gens").schema(schema)
+    spark.read.option("basePath", s"$path/gens").schema(m.kind.codesSchema)
       .parquet(m.cells.map(c => s"$path/gens/$c"): _*)
       .drop("gen")
   }
@@ -1737,90 +1859,85 @@ object Similarity {
   private def ledgerTags(prior: Set[String], tag: String): Set[String] =
     if (tag.isEmpty) prior else prior + tag
 
-  /** Build and persist an IVF-SQ index under `path`: the coarse
-    * centroid table (k rows), the SQ params row, and the SQ-coded
-    * corpus partitioned by cell. The coding reads the params BACK from
-    * the persisted table, so what lands on disk is by construction the
-    * pair a later [[searchIvfSq]] will combine. Scale shape: the two
-    * learned tables are broadcast-sized aggregations; the code write
-    * is one corpus pass into |cells| partition dirs — the one-time
-    * cost every later search stops paying. On an EXISTING index this
-    * is the zero-downtime retrain: the new learned tables and code
-    * generation stage invisibly and flip in with the manifest publish;
+  /** Build and persist an IVF index under `path` with `codec`: the
+    * coarse centroid table (k rows), the codec's learned tables (SQ
+    * params, or the PQ codebook plus a one-row `(m, dims)` meta — the
+    * geometry is index metadata, not a search argument to get wrong)
+    * and the coded corpus partitioned by cell. The coding reads the
+    * learned tables BACK from disk, so what lands there is by
+    * construction what a later [[appendToIvfIndex]] codes against and
+    * [[searchIvfIndex]] scores with. Before anything is written, one
+    * pass checks the corpus geometry: every vector non-null and of one
+    * width, and for ADC that width equal to `dims`. Scale shape: the
+    * learned tables are broadcast-sized aggregations; the code write is
+    * one corpus pass into |cells| partition dirs — the one-time cost
+    * every later search stops paying. On an EXISTING index this is the
+    * zero-downtime retrain: the new learned tables and code generation
+    * stage invisibly and flip in with the manifest publish (which
+    * carries the kind, so a tree is never visible without it);
     * searches pinned to the old snapshot finish against it (the
     * read-grace window on [[retireUnreferenced]]).
     */
-  def buildIvfSqIndex(emb: DataFrame, path: String): Unit =
+  def buildIvfIndex(emb: DataFrame, path: String, codec: IndexCodec): Unit =
     indexLock(path).withCompact(emb.sparkSession) {
       val spark = emb.sparkSession
       val hfs = indexFs(spark, path)
-      retireUnreferenced(hfs, path, manifestGraceMs(spark))
-      val (n, priorTags) = buildEntry(hfs, path)
-      val learned = s"learned_v$n"
-      val gen = s"gen=b$n"
-      // three write actions consume the quantized corpus (centroids,
-      // SQ params, the coded cells) — persist so the scan+quantize
-      // pass runs once per build, not once per artifact (the Dedup
-      // prefixPostings discipline); released before returning, the
-      // build is eager anyway
+      // the geometry check, the centroids, the learned tables and the
+      // coded cells all consume the quantized corpus — persist so the
+      // scan+quantize pass runs once per build (the check's pass fills
+      // the cache), not once per artifact; released before returning,
+      // the build is eager anyway
       val q = quantized(emb).persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-      centroids(q).coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/$learned/centroids")
-      sqParams(q).coalesce(1).write.mode("overwrite")
-        .parquet(s"$path/$learned/params")
-      sqCodeWith(q,
-          spark.read.schema(SqParamsSchema).parquet(s"$path/$learned/params"))
-        .select(col("vec_id"), col("cv"), col("cn2"),
-          requireCellLabel(col("label")))
-        .repartition(col("label"))
-        .write.partitionBy("label").mode("overwrite")
-        .parquet(s"$path/gens/$gen")
-      writeManifestFile(hfs, path, IndexManifest(n, "sq", learned,
-        priorTags, stagedCells(hfs, path, gen)))
-      retireUnreferenced(hfs, path, manifestGraceMs(spark))
+        requireDim(q, "vq", codec.fixedDim, "buildIvfIndex: corpus")
+        retireUnreferenced(hfs, path, manifestGraceMs(spark))
+        val (n, priorTags) = buildEntry(hfs, path)
+        val learned = s"learned_v$n"
+        centroids(q).coalesce(1).write.mode("overwrite")
+          .parquet(s"$path/$learned/centroids")
+        codec.learn(q, s"$path/$learned")
+        publishGeneration(hfs, path,
+          IndexManifest(n, codec.kind, learned, priorTags, Seq.empty),
+          s"gen=b$n", codec.coded(q, s"$path/$learned"))
       } finally q.unpersist()
     }
 
-  /** Search a persisted IVF-SQ index: `queries` supplies
-    * `(vec_id, embedding)` rows; the coarse ranking
-    * ([[probedCellsCore]]), the query coding ([[sqCodeWith]]) and the
-    * SDC ranking ([[sdcScored]], [[rankIvf]]) are the inline
-    * [[IvfCodec.Sdc]] search's own cores run against the index's
-    * tables, so the result is row-identical to the inline search over the
-    * corpus the index was built from (the x151 oracle row). Per-query
-    * cost: |queries|·k coarse candidates + the probed cells' code
-    * rows — nprobe/|cells| of the 8×-compressed corpus, no index
-    * rebuild, no aggregation over corpus-sized data anywhere in the
-    * plan. Reads are lock-free AND consistent: the search resolves the
-    * newest manifest once and scans exactly that snapshot's cell dirs,
-    * complete even while a concurrent compact or retrain publishes the
-    * next version (see the publication-protocol note above).
+  /** Search a persisted IVF index: `queries` supplies `(vec_id,
+    * embedding)` rows; the manifest's kind opens the codec the index
+    * was built with. The coarse ranking ([[probedCellsCore]]) and the
+    * codec's scoring ([[sdcScored]], or [[adcDistTableFrom]] and
+    * [[adcScored]]) and ranking ([[rankIvf]]) are the inline
+    * [[ivfSearch]]'s own cores run against the index's tables, so the
+    * result is row-identical to the inline [[CellRule.Nearest]] search
+    * over the corpus the index was built from (the x151/x152 oracle
+    * rows). Per-query cost: |queries|·k coarse candidates + the probed
+    * cells' code rows — nprobe/|cells| of the compressed corpus, no
+    * index rebuild, and no aggregation over corpus-sized data anywhere
+    * in the plan beyond ADC's one lookup sum. The original float
+    * vectors are read for the QUERIES only. Reads are lock-free AND
+    * consistent: the search resolves the newest manifest once and scans
+    * exactly that snapshot's cell dirs, complete even while a
+    * concurrent compact or retrain publishes the next version (see the
+    * publication-protocol note above).
     *
-    * Query-id contract (both searchers): `vec_id` lives in the CORPUS
-    * id space — a corpus row whose id equals the query's is excluded
-    * from its results (the inline searches' rule, which keeps
-    * corpus-drawn queries from returning themselves; the x151/x152
-    * oracles state exactly that). A caller with an EXTERNAL query-id
-    * space must use ids no corpus vector carries (e.g. negatives) or
-    * the colliding corpus vector is silently unretrievable for that
-    * one query.
+    * Query-id contract: `vec_id` lives in the CORPUS id space — a
+    * corpus row whose id equals the query's is excluded from its
+    * results (the inline searches' rule, which keeps corpus-drawn
+    * queries from returning themselves; the x151/x152 oracles state
+    * exactly that). A caller with an EXTERNAL query-id space must use
+    * ids no corpus vector carries (e.g. negatives) or the colliding
+    * corpus vector is silently unretrievable for that one query.
     */
-  def searchIvfSq(spark: org.apache.spark.sql.SparkSession, path: String,
-                  queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
+  def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                     queries: DataFrame, k: Int, nprobe: Int = 2): DataFrame = {
     requireIvfArgs(k, Seq(nprobe))
     val m = resolveManifest(indexFs(spark, path), path)
-    require(m.kind == "sq",
-      s"index at $path is kind '${m.kind}' — searchIvfSq reads SQ indexes" +
-        " (use searchIvfPqAdc)")
+    val (codec, dim) = m.kind.open(spark, path, m.learned)
     val cent = spark.read.schema(CentroidsSchema)
       .parquet(s"$path/${m.learned}/centroids")
-    val params = spark.read.schema(SqParamsSchema)
-      .parquet(s"$path/${m.learned}/params")
     val codes = readCodes(spark, path, m)
-    requireDim(queries, "embedding", paramsDim(params),
-      "searchIvfSq: query")
+    requireDim(queries, "embedding", Some(dim), "searchIvfIndex: query")
     val qq = queries
       .select(col("vec_id"), VecOps.quantize(col("embedding")).as("vq"))
       .withColumn("n2", VecOps.normSq(col("vq")))
@@ -1828,21 +1945,18 @@ object Similarity {
       qq.select(col("vec_id").as("q_id"), col("vq").as("pv"),
         col("n2").as("pn2")),
       cent, Seq(nprobe))
-    val qcodes = sqCodeWith(qq, params)
-      .select(col("vec_id").as("q_id"), col("cv").as("qv"),
-        col("cn2").as("qn2"))
-    rankIvf(sdcScored(codes, probed.join(qcodes, "q_id")), IvfCodec.Sdc, k)
-      .drop("nprobe")
+    rankIvf(codec.storedScored(codes, qq, probed, s"$path/${m.learned}"),
+      codec, k).drop("nprobe")
   }
 
-  /** Append new vectors to a persisted IVF-SQ index WITHOUT
-    * retraining — the FAISS `add` vs `train` split, and the
-    * deployment's daily reality: a crawl adds vectors continuously,
-    * the quantizer retrains on a drift schedule. The new vectors are
-    * coded with the STORED params (the frozen quantizer —
-    * `learned_v*` is not touched, spec-pinned by snapshot) into a
-    * fresh immutable generation, made visible by the manifest publish;
-    * every later [[searchIvfSq]] sees them.
+  /** Append new vectors to a persisted IVF index WITHOUT retraining —
+    * the FAISS `add` vs `train` split, and the deployment's daily
+    * reality: a crawl adds vectors continuously, the quantizer
+    * retrains on a drift schedule. The new vectors are coded against
+    * the STORED tables of the codec the manifest's kind names (the
+    * frozen quantizer — `learned_v*` is not touched, spec-pinned by
+    * snapshot) into a fresh immutable generation, made visible by the
+    * manifest publish; every later [[searchIvfIndex]] sees them.
     *
     * Delivery is EXACTLY-ONCE under a caller-supplied `tag`: the
     * staging dir is tag-derived (a crashed retry overwrites its own
@@ -1854,35 +1968,38 @@ object Similarity {
     * born at build time — drift monitoring via [[kmeansInertia]] says
     * when to rebuild, and the rebuild is zero-downtime).
     */
-  def appendToIvfSqIndex(emb: DataFrame, path: String,
-                         tag: String = ""): Unit =
+  def appendToIvfIndex(emb: DataFrame, path: String, tag: String = ""): Unit =
     indexLock(path).withCompact(emb.sparkSession) {
       val spark = emb.sparkSession
       val hfs = indexFs(spark, path)
       val m = resolveManifest(hfs, path)
-      require(m.kind == "sq",
-        s"index at $path is kind '${m.kind}' — use appendToIvfPqIndex")
       val t = effectiveTag(tag)
       if (!m.tags.contains(t)) {
         retireUnreferenced(hfs, path, manifestGraceMs(spark))
-        val params = spark.read.schema(SqParamsSchema)
-          .parquet(s"$path/${m.learned}/params")
-        requireDim(emb, "embedding", paramsDim(params),
-          "appendToIvfSqIndex: new vectors")
+        val (codec, dim) = m.kind.open(spark, path, m.learned)
+        requireDim(emb, "embedding", Some(dim), "appendToIvfIndex: new vectors")
         val n = m.version + 1
-        val gen = s"gen=a$n-$t"
-        sqCodeWith(quantized(emb), params)
-          .select(col("vec_id"), col("cv"), col("cn2"),
-            requireCellLabel(col("label")))
-          .repartition(col("label"))
-          .write.partitionBy("label").mode("overwrite")
-          .parquet(s"$path/gens/$gen")
-        writeManifestFile(hfs, path, m.copy(version = n,
-          tags = ledgerTags(m.tags, tag),
-          cells = (m.cells ++ stagedCells(hfs, path, gen)).sorted))
-        retireUnreferenced(hfs, path, manifestGraceMs(spark))
+        publishGeneration(hfs, path,
+          m.copy(version = n, tags = ledgerTags(m.tags, tag)),
+          s"gen=a$n-$t", codec.coded(quantized(emb), s"$path/${m.learned}"))
       }
     }
+
+  /** The write tail every index writer shares: stage `rows` (labelled
+    * code rows) as the cell-partitioned generation `gen`, publish `m`
+    * with the staged cells added to its own, then retire what the
+    * retained manifests no longer reference.
+    */
+  private def publishGeneration(hfs: org.apache.hadoop.fs.FileSystem,
+                                path: String, m: IndexManifest, gen: String,
+                                rows: DataFrame): Unit = {
+    rows.repartition(col("label"))
+      .write.partitionBy("label").mode("overwrite")
+      .parquet(s"$path/gens/$gen")
+    writeManifestFile(hfs, path,
+      m.copy(cells = (m.cells ++ stagedCells(hfs, path, gen)).sorted))
+    retireUnreferenced(hfs, path, manifestGraceMs(rows.sparkSession))
+  }
 
   /** Stream embeddings INTO a persisted IVF index — the serving
     * loop's last edge: a crawl's embedder emits `(vec_id, embedding,
@@ -1896,12 +2013,12 @@ object Similarity {
     * for the same reason it does on the sinks: a wiped-and-recreated
     * checkpoint restarts batch ids at 0, and a bare-id tag would make
     * the new incarnation's batch 0 silently alias the old one's.
-    * Kind-dispatched from the manifest (SQ/PQ) per batch; empty
-    * batches publish nothing. Each appended batch is one immutable
-    * generation — run [[compactIvfIndex]] on the cadence you would
-    * for daily appends (writers serialize on the index SinkLock, and
-    * searches are lock-free-consistent throughout, so maintenance
-    * never blocks reads). Ledger growth: one ~40-byte manifest line
+    * Each batch is an [[appendToIvfIndex]], so the manifest's kind
+    * picks the codec; empty batches publish nothing. Each appended
+    * batch is one immutable generation — run [[compactIvfIndex]] on
+    * the cadence you would for daily appends (writers serialize on the
+    * index SinkLock, and searches are lock-free-consistent throughout,
+    * so maintenance never blocks reads). Ledger growth: one ~40-byte manifest line
     * per micro-batch — size triggers accordingly (a trigger per few
     * minutes, not per second; an ANN index wants batched absorption
     * anyway).
@@ -1924,7 +2041,7 @@ object Similarity {
     val spark = emb.sparkSession
     require(emb.isStreaming,
       "streamAppendToIvfIndex takes a STREAMING frame — for a batch " +
-        "append call appendToIvfSqIndex/appendToIvfPqIndex directly")
+        "append call appendToIvfIndex directly")
     require(compactRatio == 0L || compactRatio >= 2L,
       s"compactRatio must be 0 (off) or >= 2, got $compactRatio")
     val (ckptTag, _, _) = graft.streaming.StreamingIngest
@@ -1934,11 +2051,7 @@ object Similarity {
       .foreachBatch { (b: org.apache.spark.sql.Dataset[
           org.apache.spark.sql.Row], batchId: Long) =>
         if (!b.isEmpty) {
-          val batch = b.toDF()
-          val tag = s"s${ckptTag}_$batchId"
-          val kind = resolveManifest(indexFs(spark, path), path).kind
-          if (kind == "sq") appendToIvfSqIndex(batch, path, tag = tag)
-          else appendToIvfPqIndex(batch, path, tag = tag)
+          appendToIvfIndex(b.toDF(), path, tag = s"s${ckptTag}_$batchId")
           if (compactRatio >= 2L) {
             maybeCompactIvfIndex(spark, path, compactRatio)
             ()
@@ -1948,13 +2061,6 @@ object Similarity {
       }
       .start()
   }
-
-  /** The trained dimensionality of a persisted SQ params row — the
-    * params array length IS the index geometry (the SQ sibling of the
-    * PQ meta table).
-    */
-  private def paramsDim(params: DataFrame): Int =
-    params.head().getSeq[Long](0).size
 
   /** The index maintenance lock — the same [[graft.streaming
     * .SinkLock]] mutual exclusion the metric store and corpus sink
@@ -2049,7 +2155,7 @@ object Similarity {
           s"$path/gens/${dirs.head}")).count(isData) > 1
       }.flatten.toSeq.sorted
       if (frag.nonEmpty) {
-        val schema = if (m.kind == "pq") PqCodesSchema else SqCodesSchema
+        val schema = m.kind.codesSchema
         // loud kind check BEFORE any rewrite, on EVERY fragmented
         // cell's own footers (label comes from the dir) — still
         // O(fragmented cells), never O(corpus)
@@ -2059,21 +2165,16 @@ object Similarity {
             .schema.fieldNames.toSet
           require(payload.subsetOf(actual),
             s"cell $cell carries columns $actual but the " +
-              s"${m.kind.toUpperCase} schema expects $payload — index " +
+              s"${m.kind.name.toUpperCase} schema expects $payload — index " +
               "kind/manifest and code tree disagree; refusing to rewrite")
         }
         val n = m.version + 1
-        val gen = s"gen=c$n"
-        spark.read.option("basePath", s"$path/gens").schema(schema)
-          .parquet(frag.map(c => s"$path/gens/$c"): _*)
-          .drop("gen")
-          .repartition(col("label"))
-          .write.partitionBy("label").mode("overwrite")
-          .parquet(s"$path/gens/$gen")
-        val untouched = m.cells.filterNot(frag.toSet)
-        writeManifestFile(hfs, path, m.copy(version = n,
-          cells = (untouched ++ stagedCells(hfs, path, gen)).sorted))
-        retireUnreferenced(hfs, path, manifestGraceMs(spark))
+        publishGeneration(hfs, path,
+          m.copy(version = n, cells = m.cells.filterNot(frag.toSet)),
+          s"gen=c$n",
+          spark.read.option("basePath", s"$path/gens").schema(schema)
+            .parquet(frag.map(c => s"$path/gens/$c"): _*)
+            .drop("gen"))
       }
     }
 
@@ -2090,19 +2191,21 @@ object Similarity {
       "null label: every index vector needs a cell — the label IS the " +
         "index's partition key"))).as("label")
 
-  /** Loud geometry check for the index searchers/appenders: a
+  /** Loud geometry check for every index build, append and search: a
     * wrong-dimension vector would otherwise code/slice SILENTLY into
     * truncated arrays and wrong distances — the one failure an index
     * API must never make quiet. Aggregates min/max width AND the
     * null count over the whole frame in one cheap pass (queries are
-    * small, and an append batch is one day's adds), so a MIXED-width
-    * frame is refused too, and so are NULL embeddings — min/max
-    * ignore nulls, so without the explicit count a frame null on
-    * some rows would pass on its non-null rows alone, against the
-    * guard's refuse-bad-geometry-loudly contract. An empty frame is
-    * a no-op.
+    * small, an append batch is one day's adds, and a build's pass
+    * fills its persisted corpus), so a MIXED-width frame is refused
+    * too, and so are NULL embeddings — min/max ignore nulls, so
+    * without the explicit count a frame null on some rows would pass
+    * on its non-null rows alone, against the guard's
+    * refuse-bad-geometry-loudly contract. With no `expected` width
+    * (an SQ build, whose params fit any one width) the widest vector
+    * sets it. An empty frame is a no-op.
     */
-  private def requireDim(df: DataFrame, c: String, expected: Int,
+  private def requireDim(df: DataFrame, c: String, expected: Option[Int],
                          ctx: String): Unit = {
     val r = df.agg(min(size(col(c))).as("mn"), max(size(col(c))).as("mx"),
       count(lit(1)).as("all"), count(col(c)).as("nonnull")).head()
@@ -2112,147 +2215,10 @@ object Similarity {
         "every vector needs real geometry")
     if (!r.isNullAt(0)) {
       val (mn, mx) = (r.getInt(0), r.getInt(1))
-      require(mn == expected && mx == expected,
+      val dim = expected.getOrElse(mx)
+      require(mn == dim && mx == dim,
         s"$ctx embedding dim ${if (mn == mx) mn.toString else s"$mn..$mx"}" +
-          s" != index dim $expected")
+          s" != index dim $dim")
     }
-  }
-
-  /** The IVFADC sibling of [[appendToIvfSqIndex]]: new vectors are
-    * assigned codes against the STORED codebook ([[pqAssignWith]] —
-    * the build path's own assignment core) under the stored (m, dims)
-    * geometry, staged into a fresh generation and published;
-    * centroids/codebook/meta are not touched. Same exactly-once tag
-    * and unborn-cell semantics.
-    */
-  def appendToIvfPqIndex(emb: DataFrame, path: String,
-                         tag: String = ""): Unit =
-    indexLock(path).withCompact(emb.sparkSession) {
-      val spark = emb.sparkSession
-      val hfs = indexFs(spark, path)
-      val mf = resolveManifest(hfs, path)
-      require(mf.kind == "pq",
-        s"index at $path is kind '${mf.kind}' — use appendToIvfSqIndex")
-      val t = effectiveTag(tag)
-      if (!mf.tags.contains(t)) {
-        retireUnreferenced(hfs, path, manifestGraceMs(spark))
-        val meta = spark.read.schema(PqMetaSchema)
-          .parquet(s"$path/${mf.learned}/meta").head()
-        val (m, dims) = (meta.getInt(0), meta.getInt(1))
-        val cb = spark.read.schema(CodebookSchema)
-          .parquet(s"$path/${mf.learned}/codebook")
-        requireDim(emb, "embedding", dims, "appendToIvfPqIndex: new vectors")
-        val n = mf.version + 1
-        val gen = s"gen=a$n-$t"
-        val q = quantized(emb)
-        pqAssignWith(pqSubs(q, m, dims), cb)
-          .select("vec_id", "sub", "code")
-          .join(emb.select(col("vec_id"),
-            requireCellLabel(col("label"))), Seq("vec_id"))
-          .repartition(col("label"))
-          .write.partitionBy("label").mode("overwrite")
-          .parquet(s"$path/gens/$gen")
-        writeManifestFile(hfs, path, mf.copy(version = n,
-          tags = ledgerTags(mf.tags, tag),
-          cells = (mf.cells ++ stagedCells(hfs, path, gen)).sorted))
-        retireUnreferenced(hfs, path, manifestGraceMs(spark))
-      }
-    }
-
-  /** Build and persist an IVFADC index under `path`: coarse centroids,
-    * the per-subspace PQ codebook, the PQ code table partitioned by
-    * cell (the label each code row's vector belongs to — persisted, so
-    * search never re-joins to recover it), and a one-row meta table
-    * carrying (m, dims) — search must slice query vectors exactly as
-    * the codebook was trained, so the geometry is index metadata, not
-    * a caller argument to get wrong. The index kind rides the
-    * manifest, published atomically WITH the tree it describes — a
-    * crash can never leave a PQ code tree whose kind marker is
-    * missing (the round-12 meta-before-codes ordering, made structural).
-    */
-  def buildIvfPqIndex(emb: DataFrame, path: String, m: Int = 8,
-                      dims: Int = 64): Unit =
-    indexLock(path).withCompact(emb.sparkSession) {
-      val spark = emb.sparkSession
-      import spark.implicits._
-      val hfs = indexFs(spark, path)
-      retireUnreferenced(hfs, path, manifestGraceMs(spark))
-      val (n, priorTags) = buildEntry(hfs, path)
-      val learned = s"learned_v$n"
-      val gen = s"gen=b$n"
-      // three write actions consume the quantized corpus (centroids,
-      // codebook, coded cells) and two of them its subspace fan —
-      // persist both so the scan+quantize(+explode) passes run once
-      // per build, not once per artifact (the buildIvfSqIndex
-      // discipline); released before returning, the build is eager.
-      // The codes action assigns against the codebook READ BACK from
-      // the artifact just written (what appendToIvfPqIndex assigns
-      // against too — one frozen-codebook spelling, and it truncates
-      // the cb aggregation out of the codes action's plan).
-      val q = quantized(emb).persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        centroids(q).coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/$learned/centroids")
-        val subs = pqSubs(q, m, dims).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          pqCodebook(subs).coalesce(1).write.mode("overwrite")
-            .parquet(s"$path/$learned/codebook")
-          Seq((m, dims)).toDF("m", "dims").coalesce(1).write.mode("overwrite")
-            .parquet(s"$path/$learned/meta")
-          val cbStored = spark.read.schema(CodebookSchema)
-            .parquet(s"$path/$learned/codebook")
-          pqAssignWith(subs, cbStored).select("vec_id", "sub", "code")
-            .join(q.select(col("vec_id"),
-              requireCellLabel(col("label"))), Seq("vec_id"))
-            .repartition(col("label"))
-            .write.partitionBy("label").mode("overwrite")
-            .parquet(s"$path/gens/$gen")
-        } finally subs.unpersist()
-        writeManifestFile(hfs, path, IndexManifest(n, "pq", learned,
-          priorTags, stagedCells(hfs, path, gen)))
-        retireUnreferenced(hfs, path, manifestGraceMs(spark))
-      } finally q.unpersist()
-    }
-
-  /** Search a persisted IVFADC index — the composed deployment's
-    * steady state: coarse ranking against the stored centroids, the
-    * ADC distance table from the stored codebook
-    * ([[adcDistTableFrom]]), and the probed ADC ranking over the
-    * stored cell-partitioned code rows ([[adcScored]], [[rankIvf]]) —
-    * all the inline [[IvfCodec.Adc]] search's own cores, so results
-    * are row-identical to the inline search (the x152 oracle row). The
-    * original float vectors are read for the QUERIES only; the corpus
-    * side touches nothing but nprobe/|cells| of the 32×-compressed
-    * code table. [[searchIvfSq]]'s query-id contract and lock-free
-    * consistent-snapshot semantics apply here verbatim.
-    */
-  def searchIvfPqAdc(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, k: Int,
-                     nprobe: Int = 2): DataFrame = {
-    requireIvfArgs(k, Seq(nprobe))
-    val mf = resolveManifest(indexFs(spark, path), path)
-    require(mf.kind == "pq",
-      s"index at $path is kind '${mf.kind}' — searchIvfPqAdc reads PQ " +
-        "indexes (use searchIvfSq)")
-    val meta = spark.read.schema(PqMetaSchema)
-      .parquet(s"$path/${mf.learned}/meta").head()
-    val (m, dims) = (meta.getInt(0), meta.getInt(1))
-    val cent = spark.read.schema(CentroidsSchema)
-      .parquet(s"$path/${mf.learned}/centroids")
-    val cb = spark.read.schema(CodebookSchema)
-      .parquet(s"$path/${mf.learned}/codebook")
-    val codes = readCodes(spark, path, mf)
-    requireDim(queries, "embedding", dims, "searchIvfPqAdc: query")
-    val qq = queries
-      .select(col("vec_id"), VecOps.quantize(col("embedding")).as("vq"))
-      .withColumn("n2", VecOps.normSq(col("vq")))
-    val probed = probedCellsCore(
-      qq.select(col("vec_id").as("q_id"), col("vq").as("pv"),
-        col("n2").as("pn2")),
-      cent, Seq(nprobe))
-    rankIvf(adcScored(codes, adcDistTableFrom(qq, m, dims, cb), probed),
-      IvfCodec.Adc(m, dims), k).drop("nprobe")
   }
 }

@@ -1307,11 +1307,11 @@ object OracleSqlExt {
          |SELECT q_id, vec_id, CAST(rn AS BIGINT) AS rank, adc_d2
          |FROM tadc WHERE rn <= $k ORDER BY q_id, rank""".stripMargin
 
-  /** Mirrors `Similarity.searchIvfPqAdc` over an APPENDED index
-    * (x155): PQ codebook and coarse centroids learned from the BASE
-    * subset only (`basePred` — the frozen quantizer
-    * `buildIvfPqIndex` persisted), code assignment and search over
-    * ALL vectors.
+  /** Mirrors `Similarity.searchIvfIndex` over an APPENDED
+    * `IvfCodec.Adc()` index (x155): PQ codebook and coarse centroids
+    * learned from the BASE subset only (`basePred` — the frozen
+    * quantizer `buildIvfIndex` persisted), code assignment and search
+    * over ALL vectors.
     */
   def pqIvfAdcAppendTopKSql(queryIds: Seq[Long], k: Int, nprobe: Int,
                             basePred: String, m: Int = 8,
@@ -1450,9 +1450,10 @@ object OracleSqlExt {
     embQuantCte + sqCtes() + probeCtes(queryIds, nprobe) +
       sqProbedTail(queryIds, k, dims)
 
-  /** Mirrors `Similarity.searchIvfSq` over an APPENDED index (x154):
-    * SQ params and coarse centroids learned from the BASE subset only
-    * (`basePred` — the frozen quantizer `buildIvfSqIndex` persisted),
+  /** Mirrors `Similarity.searchIvfIndex` over an APPENDED
+    * `IvfCodec.Sdc` index (x154): SQ params and coarse centroids
+    * learned from the BASE subset only (`basePred` — the frozen
+    * quantizer `buildIvfIndex` persisted),
     * codes and search over ALL vectors — exactly what build + append
     * + search computes, restated from the raw table.
     */

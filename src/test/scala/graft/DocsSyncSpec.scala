@@ -59,6 +59,39 @@ class DocsSyncSpec extends AnyFunSuite {
       s"stale keys in SURVEY's registry index: ${stale.toSeq.sorted}")
   }
 
+  test("every `Object.member` COVERAGE.md names is defined under src/main") {
+    import scala.jdk.CollectionConverters._
+    val sources = {
+      val stream = Files.walk(Paths.get("src/main"))
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(Files.readString).toList
+      finally stream.close()
+    }
+    def q(name: String) = java.util.regex.Pattern.quote(name)
+    // a member counts when a file that defines the object also
+    // defines the member: a def, val, var, class, object, trait, or a
+    // case-class field (`CorpusIngestStats.nLateDroppedRows` is a
+    // field of the BatchStats record inside that object)
+    def resolves(obj: String, member: String): Boolean = sources.exists { src =>
+      s"\\b(?:object|class|trait)\\s+${q(obj)}\\b".r.findFirstIn(src).isDefined &&
+        (s"\\b(?:def|val|var|class|object|trait)\\s+${q(member)}\\b".r
+          .findFirstIn(src).isDefined ||
+          s"\\bcase\\s+class\\s+\\w+\\s*\\([^)]*\\b${q(member)}\\s*:".r
+            .findFirstIn(src).isDefined)
+    }
+    val named = "`(([A-Z]\\w*)\\.([A-Za-z_]\\w*)[^`]*)`".r
+      .findAllMatchIn(Files.readString(Paths.get("COVERAGE.md")))
+      // a file name such as `BENCH_FULL.json` is not a member
+      .filterNot(m => m.group(1).matches("[\\w.-]+") &&
+        Files.exists(Paths.get(m.group(1))))
+      .map(m => (m.group(2), m.group(3))).toSet
+    assert(named.nonEmpty, "no `Object.member` names found in COVERAGE.md")
+    val stale = named.filterNot { case (o, m) => resolves(o, m) }
+    assert(stale.isEmpty,
+      s"COVERAGE.md names code that src/main does not define: " +
+        stale.map { case (o, m) => s"$o.$m" }.toSeq.sorted.mkString(", "))
+  }
+
   test("README headline counts equal the registry and the spec tree") {
     val readme = Files.readString(Paths.get("README.md"))
     val counts = "(\\d+) queries \\((\\d+) DuckDB-oracle-checked".r

@@ -2482,7 +2482,7 @@ class ExtensionsSpec extends AnyFunSuite {
       }
       def snapshot(dir: String) = parquets(new java.io.File(dir))
         .map(f => (f.getPath, f.lastModified, f.length)).toSet
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
       // two tagged appends fragment ONLY the touched cell (label 0) —
       // the other cells must stay single-dir so the
       // cost-∝-fragmentation pin below has untouched cells to watch
@@ -2492,14 +2492,14 @@ class ExtensionsSpec extends AnyFunSuite {
       val extra2 = emb.filter(col("vec_id") < 50L && col("label") === 0)
         .select((col("vec_id") + 300000L).as("vec_id"),
           col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(extra1, s"$root/sq", tag = "d1")
-      Similarity.appendToIvfSqIndex(extra2, s"$root/sq", tag = "d2")
+      Similarity.appendToIvfIndex(extra1, s"$root/sq", tag = "d1")
+      Similarity.appendToIvfIndex(extra2, s"$root/sq", tag = "d2")
       assert(new java.io.File(s"$root/sq/gens").listFiles()
         .count(_.getName.startsWith("gen=")) == 3,
         "fixture must stage three generations (build + two appends)")
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
         .select("vec_id", "embedding")
-      def hits() = Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
+      def hits() = Similarity.searchIvfIndex(spark, s"$root/sq", queries, 5,
           nprobe = 2)
         .as[(Long, Long, Long, Long)].collect().toSet
       val before = hits()
@@ -2541,7 +2541,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // published, the index is untouched (snapshot isolation also
       // isolates failures)
       val eNull = intercept[Exception](
-        Similarity.appendToIvfSqIndex(
+        Similarity.appendToIvfIndex(
           emb.filter(col("vec_id") === 1L)
             .select(lit(500000L).as("vec_id"), col("embedding"),
               lit(null).cast("int").as("label")),
@@ -2569,12 +2569,12 @@ class ExtensionsSpec extends AnyFunSuite {
       val rest = emb.filter(pmod(col("vec_id"), lit(5L)) === 4L)
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
         .select("vec_id", "embedding")
-      def search() = Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
+      def search() = Similarity.searchIvfIndex(spark, s"$root/sq", queries, 5,
         nprobe = 2)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Long, Long)].collect().toSet
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                  // v1
-      Similarity.appendToIvfSqIndex(rest, s"$root/sq", tag = "d1")   // v2
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)      // v1
+      Similarity.appendToIvfIndex(rest, s"$root/sq", tag = "d1")     // v2
       val expected = rows(search())
       // pin a search against v2, THEN let a compact publish v3: the
       // pinned plan's file list must stay complete and consistent —
@@ -2590,7 +2590,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // learned tables) as v4 — the pinned search still completes
       // against v3's tree, new searches see the retrained index
       val pinned3 = search()
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")                   // v4
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)       // v4
       assert(Similarity.currentIndexVersion(spark, s"$root/sq") == 4)
       assert(rows(pinned3) == expected,
         "a search pinned before the retrain must return the complete " +
@@ -2604,7 +2604,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // generations and learned tables are reclaimed, not leaked
       val extra = emb.filter(col("vec_id") === 0L)
         .select(lit(700000L).as("vec_id"), col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(extra, s"$root/sq", tag = "d2")  // v5
+      Similarity.appendToIvfIndex(extra, s"$root/sq", tag = "d2")    // v5
       val top = new java.io.File(s"$root/sq").listFiles().map(_.getName)
       assert(top.count(_.startsWith("manifest_v")) == 2,
         s"only the newest two manifests may remain: ${top.toSeq}")
@@ -2628,11 +2628,11 @@ class ExtensionsSpec extends AnyFunSuite {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
         .select("vec_id", "embedding")
-      def search() = Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
+      def search() = Similarity.searchIvfIndex(spark, s"$root/sq", queries, 5,
         nprobe = 2)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Long, Long)].collect().toSet
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                  // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)      // v1
       val expected = rows(search())
       // pin a plan against v1, then publish THREE more versions in
       // quick succession — append + compact + retrain, the worst-case
@@ -2644,9 +2644,9 @@ class ExtensionsSpec extends AnyFunSuite {
       val pinned = search()
       val extra = emb.filter(col("vec_id") === 0L)
         .select(lit(900000L).as("vec_id"), col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(extra, s"$root/sq", tag = "g1") // v2
+      Similarity.appendToIvfIndex(extra, s"$root/sq", tag = "g1")   // v2
       Similarity.compactIvfIndex(spark, s"$root/sq")                // v3
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                 // v4
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)     // v4
       assert(Similarity.currentIndexVersion(spark, s"$root/sq") == 4)
       assert(rows(pinned) == expected,
         "a pinned search younger than the grace window must survive " +
@@ -2668,7 +2668,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-annmint")
     try {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
-      Similarity.buildIvfSqIndex(base, s"$root/sq") // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc) // v1
       // another JVM's LIVE claim on v2: fresh mint marker, no
       // manifest — on the POSIX local FS the retired probe→rename
       // tripwire was weakest exactly here (rename overwrites), so
@@ -2680,7 +2680,7 @@ class ExtensionsSpec extends AnyFunSuite {
         .select((col("vec_id") + 910000L).as("vec_id"),
           col("embedding"), col("label"))
       val e = intercept[java.util.ConcurrentModificationException] {
-        Similarity.appendToIvfSqIndex(day, s"$root/sq", tag = "mint1")
+        Similarity.appendToIvfIndex(day, s"$root/sq", tag = "mint1")
       }
       assert(e.getMessage.contains("minted right now"), e.getMessage)
       assert(Similarity.currentIndexVersion(spark, s"$root/sq") == 1,
@@ -2690,7 +2690,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // publishes (a crash cannot poison the version)
       assert(mint.toFile.setLastModified(
         System.currentTimeMillis() - Similarity.MintStaleMs - 60000L))
-      Similarity.appendToIvfSqIndex(day, s"$root/sq", tag = "mint1")
+      Similarity.appendToIvfIndex(day, s"$root/sq", tag = "mint1")
       assert(Similarity.currentIndexVersion(spark, s"$root/sq") == 2)
       // the winner's marker now guards the published v2: a late
       // same-version minter refuses at the CLAIM, before any rename
@@ -2709,7 +2709,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-annfence")
     try {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
-      Similarity.buildIvfSqIndex(base, s"$root/sq") // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc) // v1
       val mint = java.nio.file.Paths.get(s"$root/sq/_mint_v2")
       // simulate the unfenced-lease hazard: this writer pauses past
       // MintStaleMs between claim and rename; a successor heals the
@@ -2754,7 +2754,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-annrelease")
     try {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
-      Similarity.buildIvfSqIndex(base, s"$root/sq") // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc) // v1
       // a transient failure between claim and rename (a staging write
       // error in the wild) — the old code released the marker only
       // after a successful rename, so the failure leaked the claim and
@@ -2784,7 +2784,7 @@ class ExtensionsSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-annrace")
     try {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                  // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)      // v1
       // a SECOND driver's in-flight staging (version ahead of the
       // published tip) — a writer outside this driver's SinkLock
       // lease (or inside its heal residual) may stage concurrently,
@@ -2820,7 +2820,7 @@ class ExtensionsSpec extends AnyFunSuite {
         s"expected the named race refusal, got: ${e.getMessage}")
       // ...and the ordinary writer path simply lands AFTER the
       // winner: the append re-enters against v2 and publishes v3
-      Similarity.appendToIvfSqIndex(day, s"$root/sq", tag = "r1")
+      Similarity.appendToIvfIndex(day, s"$root/sq", tag = "r1")
       assert(Similarity.currentIndexVersion(spark, s"$root/sq") == 3)
       // once the tip passes the foreign staging's version, it is a
       // crashed writer's remnant and IS reclaimed (one publish later)
@@ -2840,9 +2840,9 @@ class ExtensionsSpec extends AnyFunSuite {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
         .select("vec_id", "embedding")
-      def search() = Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
+      def search() = Similarity.searchIvfIndex(spark, s"$root/sq", queries, 5,
         nprobe = 2).collect().length
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                  // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)      // v1
       assert(search() > 0)
       // repeat searches ride the version hint: existence probes plus
       // one manifest read, zero LISTs of the index root (on an object
@@ -2855,7 +2855,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // a publish advances the hint by existence-walk, still no LIST
       val extra = emb.filter(col("vec_id") === 0L)
         .select(lit(920000L).as("vec_id"), col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(extra, s"$root/sq", tag = "h1") // v2
+      Similarity.appendToIvfIndex(extra, s"$root/sq", tag = "h1")   // v2
       // simulate a reader JVM whose hint lags the publish (same-JVM
       // publishes refresh the local hint, so force it back)
       Similarity.resetManifestHintForSpec(s"$root/sq", 1)
@@ -2878,16 +2878,16 @@ class ExtensionsSpec extends AnyFunSuite {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
       def codeCount() = Similarity.readIndexCodes(spark, s"$root/sq").count()
       def version() = Similarity.currentIndexVersion(spark, s"$root/sq")
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                  // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)      // v1
       val n0 = codeCount()
       val day1 = emb.filter(col("vec_id") < 50L)
         .select((col("vec_id") + 200000L).as("vec_id"),
           col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(day1, s"$root/sq", tag = "d1")   // v2
+      Similarity.appendToIvfIndex(day1, s"$root/sq", tag = "d1")     // v2
       assert(codeCount() == n0 + 50 && version() == 2)
       // verbatim replay of a published tag: a no-op — no duplicate
       // rows, no version bump (the delivery ledger IS the manifest)
-      Similarity.appendToIvfSqIndex(day1, s"$root/sq", tag = "d1")
+      Similarity.appendToIvfIndex(day1, s"$root/sq", tag = "d1")
       assert(codeCount() == n0 + 50 && version() == 2,
         "replaying a published append tag must be a no-op")
       // crash-replay: the publish is the LAST step of an append, so a
@@ -2898,24 +2898,24 @@ class ExtensionsSpec extends AnyFunSuite {
       val day2 = emb.filter(col("vec_id") < 30L)
         .select((col("vec_id") + 300000L).as("vec_id"),
           col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(day2, s"$root/sq", tag = "d2")   // v3
+      Similarity.appendToIvfIndex(day2, s"$root/sq", tag = "d2")     // v3
       assert(new java.io.File(s"$root/sq/manifest_v3").delete(),
         "fixture: simulate a crash between staging and publish")
       assert(codeCount() == n0 + 50 && version() == 2,
         "an unpublished staging must be invisible to readers")
-      Similarity.appendToIvfSqIndex(day2, s"$root/sq", tag = "d2")   // v3
+      Similarity.appendToIvfIndex(day2, s"$root/sq", tag = "d2")     // v3
       assert(codeCount() == n0 + 50 + 30 && version() == 3,
         "replaying the crashed append must converge to exactly-once")
       // a REBUILD carries the tag ledger forward: the retrain reads a
       // corpus that already contains every delivered append's vectors,
       // so a queued replay of a pre-rebuild tag must stay a no-op —
       // wiping the ledger would re-admit it as a double delivery
-      Similarity.buildIvfSqIndex(
+      Similarity.buildIvfIndex(
         base.select("vec_id", "embedding", "label")
-          .union(day1).union(day2), s"$root/sq")                      // v4
+          .union(day1).union(day2), s"$root/sq", IvfCodec.Sdc)        // v4
       val n4 = codeCount()
       assert(version() == 4 && n4 == n0 + 50 + 30)
-      Similarity.appendToIvfSqIndex(day1, s"$root/sq", tag = "d1")
+      Similarity.appendToIvfIndex(day1, s"$root/sq", tag = "d1")
       assert(codeCount() == n4 && version() == 4,
         "a rebuild must carry the append-tag ledger — replaying a " +
           "pre-rebuild tag re-delivered its rows")
@@ -2931,7 +2931,7 @@ class ExtensionsSpec extends AnyFunSuite {
       val base = emb.filter(pmod(col("vec_id"), lit(5L)) =!= 4L)
       def codeCount() = Similarity.readIndexCodes(spark, s"$root/sq").count()
       def version() = Similarity.currentIndexVersion(spark, s"$root/sq")
-      Similarity.buildIvfSqIndex(base, s"$root/sq")                  // v1
+      Similarity.buildIvfIndex(base, s"$root/sq", IvfCodec.Sdc)      // v1
       val n0 = codeCount()
       def chunk(lo: Long, hi: Long) = emb
         .filter(col("vec_id") >= lo && col("vec_id") < hi)
@@ -2984,7 +2984,7 @@ class ExtensionsSpec extends AnyFunSuite {
       // same way the stream derives it)
       val tag = graft.streaming.StreamingIngest
         .checkpointIdentityFull(spark, s"$root/ck")._1
-      Similarity.appendToIvfSqIndex(chunk(20L, 30L), s"$root/sq",
+      Similarity.appendToIvfIndex(chunk(20L, 30L), s"$root/sq",
         tag = s"s${tag}_1")
       assert(codeCount() == n0 + 30 && version() == 3,
         "replaying a streamed batch's tag must be a no-op — the " +
@@ -2998,7 +2998,7 @@ class ExtensionsSpec extends AnyFunSuite {
         s"the restarted stream must keep absorbing: ${codeCount() - n0}")
       // the PQ dispatch leg: the same stream absorbed into an IVFADC
       // index (kind read from the manifest per batch)
-      Similarity.buildIvfPqIndex(base, s"$root/pq")
+      Similarity.buildIvfIndex(base, s"$root/pq", IvfCodec.Adc())
       val p0 = Similarity.readIndexCodes(spark, s"$root/pq").count()
       val q3 = Similarity.streamAppendToIvfIndex(
         ss.readStream.schema(schema).parquet(inDir),
@@ -3024,7 +3024,7 @@ class ExtensionsSpec extends AnyFunSuite {
         .as[(Long, Array[Float], Int)].collect().sortBy(_._1)
       val chunks = rest.grouped(math.max(1, rest.length / 8)).toSeq
       def drive(path: String, ratio: Long): Seq[Int] = {
-        Similarity.buildIvfSqIndex(base, path)
+        Similarity.buildIvfIndex(base, path, IvfCodec.Sdc)
         val ss = spark.newSession()
         ss.conf.set("spark.sql.shuffle.partitions", "4")
         val ms = org.apache.spark.sql.execution.streaming.runtime
@@ -3060,7 +3060,7 @@ class ExtensionsSpec extends AnyFunSuite {
         Similarity.readIndexCodes(spark, s"$root/off").count())
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
         .select("vec_id", "embedding")
-      def top(path: String) = Similarity.searchIvfSq(spark, path,
+      def top(path: String) = Similarity.searchIvfIndex(spark, path,
           queries, 5, nprobe = 2)
         .select("q_id", "rank", "vec_id").as[(Long, Long, Long)]
         .collect().sortBy(r => (r._1, r._2))
@@ -3079,24 +3079,24 @@ class ExtensionsSpec extends AnyFunSuite {
       // the format and the remedy instead of claiming nothing exists
       assert(new java.io.File(s"$root/sq/codes/label=0").mkdirs())
       val e = intercept[IllegalArgumentException](
-        Similarity.searchIvfSq(spark, s"$root/sq",
+        Similarity.searchIvfIndex(spark, s"$root/sq",
           emb.filter(col("vec_id") === 0L).select("vec_id", "embedding"),
           5))
       assert(e.getMessage.contains("retired flat layout"),
         s"legacy tree must be diagnosed by name: ${e.getMessage}")
       // a genuinely absent index keeps the never-built message
       val e2 = intercept[IllegalArgumentException](
-        Similarity.searchIvfSq(spark, s"$root/nothing",
+        Similarity.searchIvfIndex(spark, s"$root/nothing",
           emb.filter(col("vec_id") === 0L).select("vec_id", "embedding"),
           5))
       assert(e2.getMessage.contains("no published index"),
         s"absent index must say never-built: ${e2.getMessage}")
       // ... and the instructed rebuild RECLAIMS the flat tree instead
       // of leaving a corpus-sized copy at the root forever
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
       assert(!new java.io.File(s"$root/sq/codes").exists(),
         "rebuild must reclaim the retired flat codes/ tree")
-      assert(Similarity.searchIvfSq(spark, s"$root/sq",
+      assert(Similarity.searchIvfIndex(spark, s"$root/sq",
         emb.filter(col("vec_id") === 0L).select("vec_id", "embedding"),
         5).count() == 5L)
     } finally {
@@ -3108,11 +3108,11 @@ class ExtensionsSpec extends AnyFunSuite {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-annkind")
     try {
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
       val extra = emb.filter(col("vec_id") < 50L && col("label") === 0)
         .select((col("vec_id") + 200000L).as("vec_id"),
           col("embedding"), col("label"))
-      Similarity.appendToIvfSqIndex(extra, s"$root/sq", tag = "d1")
+      Similarity.appendToIvfIndex(extra, s"$root/sq", tag = "d1")
       // hand-tamper the published manifest: flip its kind line — the
       // rewrite would then read SQ files through the PQ schema and
       // null the payload columns, silent and irrecoverable, so the
@@ -3130,12 +3130,13 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("refusing to rewrite"),
         s"kind mismatch must refuse the rewrite: ${e.getMessage}")
       // the kind gate guards searches too — a PQ-claiming manifest
-      // routes searchIvfSq callers away before any wrong-schema read
+      // opens the PQ tables, finds them missing and refuses by name
+      // before any code read (never as Spark's PATH_NOT_FOUND)
       val eS = intercept[IllegalArgumentException](
-        Similarity.searchIvfSq(spark, s"$root/sq",
+        Similarity.searchIvfIndex(spark, s"$root/sq",
           emb.filter(col("vec_id") === 0L).select("vec_id", "embedding"),
           5))
-      assert(eS.getMessage.contains("searchIvfSq reads SQ indexes"),
+      assert(eS.getMessage.contains("is kind 'pq', but learned_v1 lacks"),
         s"kind mismatch must refuse the search: ${eS.getMessage}")
     } finally {
       val _ = new scala.reflect.io.Directory(root.toFile).deleteRecursively()
@@ -3145,25 +3146,31 @@ class ExtensionsSpec extends AnyFunSuite {
   test("index geometry is validated loudly: wrong-dimension vectors are refused") {
     val root = java.nio.file.Files.createTempDirectory("graft-anndim")
     try {
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")
-      Similarity.buildIvfPqIndex(emb, s"$root/pq")
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
+      Similarity.buildIvfIndex(emb, s"$root/pq", IvfCodec.Adc())
       // a 32-dim frame against the 64-dim index: without the check
       // the SQ transform would code truncated vectors and the PQ
       // slice would fan short subvectors — silently wrong distances,
-      // the one failure an index API must never make quiet
+      // the one failure an index API must never make quiet. A build
+      // is checked too: a 32-dim corpus under the default (8, 64)
+      // geometry would slice past its end into empty subvectors and
+      // publish an index every 32-dim append and search then refuses
       val shortEmb = emb.select(col("vec_id"),
         slice(col("embedding"), 1, 32).as("embedding"), col("label"))
       for ((name, op) <- Seq[(String, () => Any)](
-        ("appendToIvfSqIndex", () =>
-          Similarity.appendToIvfSqIndex(shortEmb, s"$root/sq", tag = "g1")),
-        ("appendToIvfPqIndex", () =>
-          Similarity.appendToIvfPqIndex(shortEmb, s"$root/pq", tag = "g2")),
-        ("searchIvfSq", () =>
-          Similarity.searchIvfSq(spark, s"$root/sq",
+        ("SQ append", () =>
+          Similarity.appendToIvfIndex(shortEmb, s"$root/sq", tag = "g1")),
+        ("PQ append", () =>
+          Similarity.appendToIvfIndex(shortEmb, s"$root/pq", tag = "g2")),
+        ("SQ search", () =>
+          Similarity.searchIvfIndex(spark, s"$root/sq",
             shortEmb.select("vec_id", "embedding"), 5)),
-        ("searchIvfPqAdc", () =>
-          Similarity.searchIvfPqAdc(spark, s"$root/pq",
-            shortEmb.select("vec_id", "embedding"), 5)))) {
+        ("PQ search", () =>
+          Similarity.searchIvfIndex(spark, s"$root/pq",
+            shortEmb.select("vec_id", "embedding"), 5)),
+        ("PQ build", () =>
+          Similarity.buildIvfIndex(shortEmb, s"$root/pq32",
+            IvfCodec.Adc(8, 64))))) {
         val e = intercept[IllegalArgumentException] { op(); () }
         assert(e.getMessage.contains("dim 32 != index dim 64"),
           s"$name must refuse the geometry mismatch: ${e.getMessage}")
@@ -3174,10 +3181,19 @@ class ExtensionsSpec extends AnyFunSuite {
       val mixed = emb.filter(col("vec_id") < 10L)
         .select(col("vec_id"), col("embedding"), col("label"))
         .union(shortEmb.filter(col("vec_id") >= 10L && col("vec_id") < 20L))
-      val eMx = intercept[IllegalArgumentException](
-        Similarity.appendToIvfSqIndex(mixed, s"$root/sq", tag = "g3"))
-      assert(eMx.getMessage.contains("dim 32..64 != index dim 64"),
-        s"mixed-width frame must be refused: ${eMx.getMessage}")
+      for ((name, op) <- Seq[(String, () => Any)](
+        ("SQ append", () =>
+          Similarity.appendToIvfIndex(mixed, s"$root/sq", tag = "g3")),
+        ("SQ build", () =>
+          Similarity.buildIvfIndex(mixed, s"$root/sqmix", IvfCodec.Sdc)))) {
+        val eMx = intercept[IllegalArgumentException] { op(); () }
+        assert(eMx.getMessage.contains("dim 32..64 != index dim 64"),
+          s"$name must refuse the mixed-width frame: ${eMx.getMessage}")
+      }
+      // a refused build publishes nothing
+      for (idx <- Seq("pq32", "sqmix"))
+        assert(!new java.io.File(s"$root/$idx/manifest_v1").exists(),
+          s"a refused build must not publish $idx")
     } finally {
       val _ = new scala.reflect.io.Directory(root.toFile).deleteRecursively()
     }
@@ -3450,16 +3466,28 @@ class ExtensionsSpec extends AnyFunSuite {
       // cores against the persisted tables, so nothing may drift
       def full(df: org.apache.spark.sql.DataFrame) =
         df.as[(Long, Long, Long, Long)].collect().toSet
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")
-      assert(full(Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
+      assert(full(Similarity.searchIvfIndex(spark, s"$root/sq", queries, 5,
           nprobe = 2)) ==
         full(Similarity.ivfSearch(emb, ids, 5, IvfCodec.Sdc, CellRule.Nearest(2))),
         "IVF-SQ search-from-tables must equal the inline probed search")
-      Similarity.buildIvfPqIndex(emb, s"$root/pq")
-      assert(full(Similarity.searchIvfPqAdc(spark, s"$root/pq", queries, 5,
+      Similarity.buildIvfIndex(emb, s"$root/pq", IvfCodec.Adc())
+      assert(full(Similarity.searchIvfIndex(spark, s"$root/pq", queries, 5,
           nprobe = 2)) ==
         full(Similarity.ivfSearch(emb, ids, 5, IvfCodec.Adc(), CellRule.Nearest(2))),
         "IVFADC search-from-tables must equal the inline probed search")
+      // a non-default geometry round-trips through the meta table:
+      // search reads (m, dims) back from the index, never a default
+      Similarity.buildIvfIndex(emb, s"$root/pq4", IvfCodec.Adc(4, 64))
+      assert(full(Similarity.searchIvfIndex(spark, s"$root/pq4", queries, 5,
+          nprobe = 2)) ==
+        full(Similarity.ivfSearch(emb, ids, 5, IvfCodec.Adc(4, 64),
+          CellRule.Nearest(2))),
+        "IVFADC(4, 64) search-from-tables must equal the inline probed search")
+      // only SDC and ADC have a coded corpus to persist: the build's
+      // codec parameter is an IndexCodec, so cosine is a type error
+      assertTypeError(
+        """Similarity.buildIvfIndex(emb, s"$root/cos", IvfCodec.Cosine)""")
       // the persisted code tables are cell-partitioned on disk — the
       // layout that makes the probed-cell restriction a partition
       // prune over the compressed representation at 100 TB
@@ -3493,12 +3521,12 @@ class ExtensionsSpec extends AnyFunSuite {
         .select(lit(100000L).as("vec_id"), col("embedding"), col("label"))
       val queries = emb.filter(col("vec_id") === 0L)
         .select("vec_id", "embedding")
-      Similarity.buildIvfSqIndex(emb, s"$root/sq")
-      Similarity.buildIvfPqIndex(emb, s"$root/pq")
+      Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
+      Similarity.buildIvfIndex(emb, s"$root/pq", IvfCodec.Adc())
       val frozen = Seq(s"$root/sq/learned_v1", s"$root/pq/learned_v1")
       val before = frozen.map(d => d -> snapshot(d)).toMap
-      Similarity.appendToIvfSqIndex(clone, s"$root/sq", tag = "d1")
-      Similarity.appendToIvfPqIndex(clone, s"$root/pq", tag = "d1")
+      Similarity.appendToIvfIndex(clone, s"$root/sq", tag = "d1")
+      Similarity.appendToIvfIndex(clone, s"$root/pq", tag = "d1")
       // the frozen-quantizer proof: not one learned-table byte moved
       frozen.foreach { d =>
         assert(snapshot(d) == before(d),
@@ -3510,12 +3538,12 @@ class ExtensionsSpec extends AnyFunSuite {
       // cells, so q0's own cell need not rank in its 2 nearest —
       // cell-ranking quality is the recall curves' axis, not this
       // test's)
-      val sqHits = Similarity.searchIvfSq(spark, s"$root/sq", queries, 5,
+      val sqHits = Similarity.searchIvfIndex(spark, s"$root/sq", queries, 5,
           nprobe = 1000)
         .select("vec_id").as[Long].collect().toSet
       assert(sqHits.contains(100000L),
         s"appended exact clone missing from SQ top-k: $sqHits")
-      val pqHits = Similarity.searchIvfPqAdc(spark, s"$root/pq", queries, 5,
+      val pqHits = Similarity.searchIvfIndex(spark, s"$root/pq", queries, 5,
           nprobe = 1000)
         .select("vec_id").as[Long].collect().toSet
       assert(pqHits.contains(100000L),

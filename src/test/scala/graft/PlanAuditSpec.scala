@@ -369,7 +369,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("x147/x148 probed composed searches: only the deliberate broadcast NLJs") {
     // every allowed nested loop is a broadcast of a ≤ k-row frame: the
-    // |queries| × k centroid candidate fan of probedCellsMulti (the
+    // |queries| × k centroid candidate fan of nearestCells (the
     // same deliberate crossJoin(broadcast(cent)) as x92's Lloyd
     // assignment) and its 1-row probes table, plus — on the SQ side
     // only — the 1-row quantization-params broadcast of sqCoded,
@@ -710,8 +710,9 @@ class PlanAuditSpec extends AnyFunSuite {
       val emb = graft.sources.Tables.read(spark, sf, "embeddings")
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
         .select("vec_id", "embedding")
-      graft.operators.Similarity.buildIvfSqIndex(emb, s"$root/sq")
-      graft.operators.Similarity.buildIvfPqIndex(emb, s"$root/pq")
+      import graft.operators.Similarity.IvfCodec
+      graft.operators.Similarity.buildIvfIndex(emb, s"$root/sq", IvfCodec.Sdc)
+      graft.operators.Similarity.buildIvfIndex(emb, s"$root/pq", IvfCodec.Adc())
       // append a second generation on each side: the plan pins below
       // (and the DPP pin especially) must hold on the MULTI-generation
       // cell layout a deployed index always has, not just a fresh
@@ -719,14 +720,14 @@ class PlanAuditSpec extends AnyFunSuite {
       val extra = emb.filter(col("vec_id") < 20L)
         .select((col("vec_id") + 900000L).as("vec_id"),
           col("embedding"), col("label"))
-      graft.operators.Similarity.appendToIvfSqIndex(extra, s"$root/sq",
+      graft.operators.Similarity.appendToIvfIndex(extra, s"$root/sq",
         tag = "p1")
-      graft.operators.Similarity.appendToIvfPqIndex(extra, s"$root/pq",
+      graft.operators.Similarity.appendToIvfIndex(extra, s"$root/pq",
         tag = "p1")
       val sq = graft.operators.Similarity
-        .searchIvfSq(spark, s"$root/sq", queries, 5, nprobe = 2)
+        .searchIvfIndex(spark, s"$root/sq", queries, 5, nprobe = 2)
       val pq = graft.operators.Similarity
-        .searchIvfPqAdc(spark, s"$root/pq", queries, 5, nprobe = 2)
+        .searchIvfIndex(spark, s"$root/pq", queries, 5, nprobe = 2)
       // the build/search split's whole point, enforced: every
       // aggregation in the inline searches was index-BUILD work
       // (centroids, SQ params, PQ codebook) — the searchers must plan
@@ -737,13 +738,13 @@ class PlanAuditSpec extends AnyFunSuite {
         df.queryExecution.optimizedPlan
           .collect { case a: Aggregate => a }.length
       assert(nAgg(sq) == 0,
-        s"searchIvfSq must not aggregate anything:\n${sq.queryExecution.optimizedPlan}")
+        s"the SQ index search must not aggregate anything:\n${sq.queryExecution.optimizedPlan}")
       assert(nAgg(pq) == 1,
-        s"searchIvfPqAdc must keep only the ADC sum:\n${pq.queryExecution.optimizedPlan}")
+        s"the PQ index search must keep only the ADC sum:\n${pq.queryExecution.optimizedPlan}")
       // every file scan reads an index table or the vec_id-filtered
       // query rows — a scan of the raw corpus (un-filtered
       // embeddings) would mean the searcher is rebuilding something
-      for ((df, name) <- Seq((sq, "searchIvfSq"), (pq, "searchIvfPqAdc"))) {
+      for ((df, name) <- Seq((sq, "SQ index search"), (pq, "PQ index search"))) {
         val p = df.queryExecution.sparkPlan.toString
         assert(!p.contains("CartesianProduct"), s"$name cartesians:\n$p")
         val leaves = df.queryExecution.sparkPlan.collectLeaves()
