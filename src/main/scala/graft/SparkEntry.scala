@@ -522,11 +522,11 @@ object SparkEntry {
     * same state machine — the [[gatePipeTree]] sharing discipline
     * (VERDICT r15 #5) applied to the gates themselves, legitimate
     * because the views are code-identical by construction:
-    * `streamingNearDupGate(Ttl)` IS
-    * `streamingNearDupVerdictsTagged(Ttl).filter(admitted).map(doc)`
-    * and `streamingNearDupVerdicts` IS the tagged stream with the
-    * reason collapsed to a bit (one state machine, three views —
-    * the r15 design), so driving the tagged stream once and deriving
+    * `streamingNearDupGate` IS
+    * `streamingNearDupVerdictsTagged.filter(admitted).map(doc)` under
+    * either horizon, and x109's admitted bit IS the tagged stream with
+    * the reason collapsed to a bit (one state machine, several
+    * views), so driving the tagged stream once and deriving
     * each fixture's projection relationally computes the identical
     * result while running each CONFIGURATION's state machine once,
     * not once per view. Discipline, stated precisely:
@@ -571,14 +571,10 @@ object SparkEntry {
       val ss = gateFixtureSession(s)
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.sources.CorpusIO.CuratedDoc](ss)
-      val tagged = (ttlMicros match {
-        case Some(h) => Dedup.streamingNearDupVerdictsTaggedTtl(
-          ms.toDS(), ClusterJaccard, h, hotBucketCap = cap)(
-          _.text, _.doc_id)
-        case None => Dedup.streamingNearDupVerdictsTagged(
-          ms.toDS(), ClusterJaccard, hotBucketCap = cap)(
-          _.text, _.doc_id)
-      }).map(v => (v._1, v._2, v._3))
+      val tagged = Dedup.streamingNearDupVerdictsTagged(
+          ms.toDS(), ClusterJaccard, hotBucketCap = cap,
+          horizonMicros = ttlMicros)(_.text, _.doc_id)
+        .map(v => (v._1, v._2, v._3))
       // memory-sink view names must be identifiers — no '-' (the
       // unbounded config's TTL key is -1)
       val qn = s"graft_gate_run_${cfg.replace("-", "m")}"
@@ -605,7 +601,7 @@ object SparkEntry {
   }
 
   /** The kept-docs view of a [[taggedGateRun]] tree — the gate
-    * fixtures' projection (`streamingNearDupGate(Ttl)` ≡ tagged
+    * fixtures' projection (`streamingNearDupGate` ≡ tagged
     * filtered to admitted, payload re-attached from the fixture's own
     * input table by unique doc_id).
     */
@@ -1251,7 +1247,7 @@ object SparkEntry {
       ss.conf.set("spark.sql.shuffle.partitions", "4")
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, Long)](ss)
-      val q = Dedup.streamingFirstOccurrence(ms.toDS())
+      val q = Dedup.streamingFirstOccurrenceBy(ms.toDS())(_._1, _._2)
         .toDF("fp", "doc_id")
         .writeStream.outputMode("append")
         .format("memory").queryName("graft_stream_dedup")
@@ -1344,7 +1340,7 @@ object SparkEntry {
     // and x109 passing together pin that the filter loses nothing
     // Consumes the unbounded tagged run (x108 carries construction):
     // the boolean verdicts ARE the tagged stream with the reason
-    // collapsed to a bit (streamingNearDupVerdicts ≡ that map)
+    // collapsed to a bit
     "x109_stream_gate_audit" -> ((s, dir) =>
       s.read.parquet(
           s"${taggedGateRun(s, dir, None, Int.MaxValue, rebuild = false)}/tagged")
@@ -1361,8 +1357,8 @@ object SparkEntry {
     // within-horizon rejection and the beyond-horizon re-admission
     // are exercised. Oracle: x108's closed form + the gap predicate
     // Consumes the TTL configuration's tagged run (x162 is that
-    // run's designated carrier): streamingNearDupGateTtl ≡ the
-    // TaggedTtl stream filtered to admitted — one definition
+    // run's designated carrier): the gate under a horizon ≡ the
+    // tagged stream under it filtered to admitted — one definition
     "x129_stream_gate_ttl" -> ((s, dir) =>
       gateKeptView(s, dir,
         taggedGateRun(s, dir, Some(GateHorizonMicros), Int.MaxValue,
@@ -1428,9 +1424,9 @@ object SparkEntry {
       val ss = gateFixtureSession(s)
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[graft.sources.CorpusIO.CuratedDoc](ss)
-      val tagged = Dedup.streamingNearDupVerdictsTaggedTtl(
-          ms.toDS(), ClusterJaccard, GateDegenerateHorizonMicros,
-          hotBucketCap = 3)(_.text, _.doc_id)
+      val tagged = Dedup.streamingNearDupVerdictsTagged(
+          ms.toDS(), ClusterJaccard, hotBucketCap = 3,
+          horizonMicros = Some(GateDegenerateHorizonMicros))(_.text, _.doc_id)
         .map(v => (v._1, v._2, v._3))
       val q = tagged.toDF("doc_id", "reason", "of_ord")
         .writeStream.outputMode("append")

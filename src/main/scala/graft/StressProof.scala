@@ -347,7 +347,7 @@ object StressProof {
   }
 
   /** 1.2 M rows / 1 M distinct fingerprints through
-    * [[Dedup.streamingFirstOccurrence]] with the RocksDB state store
+    * [[Dedup.streamingFirstOccurrenceBy]] with the RocksDB state store
     * provider — the state-scale claim SCALE.md makes for X23 (state =
     * one boolean per distinct key, output = distinct keys, per-batch
     * latency stable as state grows), held three orders of magnitude
@@ -373,7 +373,7 @@ object StressProof {
     val raw = ss.readStream.schema(schema).parquet(inDir).as[(String, Long)]
     var out = 0L
     var late = 0L
-    val q = Dedup.streamingFirstOccurrence(raw)
+    val q = Dedup.streamingFirstOccurrenceBy(raw)(_._1, _._2)
       .toDF("fp", "kept_id")
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$root/ck")
@@ -517,8 +517,7 @@ object StressProof {
     // band store = buckets), which are pairwise distinct here.
     val shingledDocs = Dedup.shingled(docs)
       .filter(size(col("sh")) > 0).count()
-    val shapes = (0 to 2).map(i =>
-      scala.util.Try(gateStoreShape(ss, s"$root/ck", i)).getOrElse((0L, 0L)))
+    val shapes = gateStoreShapes(ss, s"$root/ck")
     val docStoreLongs = shapes.find(_._1 == shingledDocs).map(_._2)
       .getOrElse(-1L)
     val bandLongs = shapes.find(_._1 == buckets).map(_._2).getOrElse(-1L)
@@ -571,40 +570,35 @@ object StressProof {
         "2.38 KB/doc; round-12's fan-out was 2.99 KB/doc)")
   }
 
-  /** Shared state-store read-back of a gate checkpoint's operator
-    * `opId` as a (rows, longs) shape: operator ids are planner-
-    * assigned, so callers classify the three stores by their measured
-    * shape rather than by id. The Try cascade covers the three
-    * operator types across both gates: the stateless reduce's
-    * flatMapGroupsWithState groupState (never written — 0 rows), the
-    * band op's named ListState `ords` (flattened one row per element:
-    * buckets = distinct keys, ord-long payload = row count), and the
-    * TTL doc store's named ValueState `sh` (one row per doc, longs =
-    * summed hash-array sizes; the unbounded doc store is
-    * flatMapGroupsWithState and reads through the first arm).
+  /** Shared state-store read-back of a near-dup gate checkpoint: the
+    * (rows, longs) shape of each of its three stateful operators,
+    * sorted. Operator ids are planner-assigned, so callers classify
+    * the stores by their measured shape rather than by id. Each
+    * operator reads through the spelling its type supports: the band
+    * op's named ListState `ords` (flattened one row per element:
+    * buckets = distinct keys, ord-long payload = row count), the doc
+    * store's named ValueState `sh` (one row per doc, longs = summed
+    * hash-array sizes) and the reduce's flatMapGroupsWithState state
+    * (rows counted, no longs — it is never written).
     */
-  private def gateStoreShape(ss: SparkSession, ckpt: String,
-                             opId: Int): (Long, Long) = {
-    def base = ss.read.format("statestore")
-      .option("path", ckpt).option("operatorId", opId.toString)
-    scala.util.Try {
-      val st = base.load()
-      (st.count(), st.select(coalesce(
-        sum(size(col("value.groupState.value"))), lit(0)).cast("long"))
-        .head.getLong(0))
-    }.orElse(scala.util.Try {
-      val st = base.option("stateVarName", "ords").load()
-      (st.select(col("key")).distinct().count(), st.count())
-    }).orElse(scala.util.Try {
-      val st = base.option("stateVarName", "sh").load()
-      val longs = scala.util.Try(
-        st.select(coalesce(sum(size(col("value.value"))), lit(0))
-          .cast("long")).head.getLong(0))
-        .getOrElse(st.select(coalesce(sum(size(col("value"))), lit(0))
-          .cast("long")).head.getLong(0))
-      (st.count(), longs)
-    }).getOrElse((0L, 0L))
-  }
+  private[graft] def gateStoreShapes(ss: SparkSession,
+                                     ckpt: String): Seq[(Long, Long)] =
+    (0 to 2).map { opId =>
+      def base = ss.read.format("statestore")
+        .option("path", ckpt).option("operatorId", opId.toString)
+      def longs(st: DataFrame, c: String): Long =
+        st.select(coalesce(sum(size(col(c))), lit(0)).cast("long"))
+          .head.getLong(0)
+      scala.util.Try {
+        val st = base.option("stateVarName", "ords").load()
+        (st.select(col("key")).distinct().count(), st.count())
+      }.orElse(scala.util.Try {
+        val st = base.option("stateVarName", "sh").load()
+        (st.count(), scala.util.Try(longs(st, "value.value"))
+          .getOrElse(longs(st, "value")))
+      }).orElse(scala.util.Try((base.load().count(), 0L)))
+        .getOrElse((0L, 0L))
+    }.sorted
 
   /** The TTL gate at the same 52 500-doc planted corpus as
     * [[nearDupGate]], horizon wider than the corpus — the round-14
@@ -634,7 +628,8 @@ object StressProof {
     import ss.implicits._
     val raw = ss.readStream.schema(schema).parquet(inDir).as[(String, Long)]
     var kept = 0L
-    val q = Dedup.streamingNearDupGateTtl(raw, 0.8, Long.MaxValue / 4)(_._1, _._2)
+    val q = Dedup.streamingNearDupGate(raw, 0.8,
+        horizonMicros = Some(Long.MaxValue / 4))(_._1, _._2)
       .toDF("text", "doc_id")
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$root/ck")
@@ -661,8 +656,7 @@ object StressProof {
       .select(col("doc_id"),
         graft.functions.Md5Longs(col("s"), Seq((1, 14))).getItem(0).as("g1"))
       .distinct().count()
-    val shapes = (0 to 2).map(i =>
-      scala.util.Try(gateStoreShape(ss, s"$root/ck", i)).getOrElse((0L, 0L)))
+    val shapes = gateStoreShapes(ss, s"$root/ck")
     val docStoreLongs = shapes.find(_._1 == shingledDocs).map(_._2)
       .getOrElse(-1L)
     val bandShape = shapes.find(s =>
@@ -799,18 +793,16 @@ object StressProof {
     */
   private def hotBucketGate(spark: SparkSession): Unit = {
     val text = (1 to 40).map(i => s"hot$i").mkString(" ")
-    def tailUpdateRows(b: Int, ttl: Boolean): Long = {
+    def tailUpdateRows(b: Int, horizon: Option[Long]): Long = {
       val ss = spark.newSession()
       ss.conf.set("spark.sql.shuffle.partitions", "8")
       Dedup.useRocksDbStateStore(ss)
       import ss.implicits._
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, Long)](ss)
-      val gated =
-        if (ttl) Dedup.streamingNearDupGateTtl(
-          ms.toDS(), 0.8, Long.MaxValue / 4)(_._1, _._2)
-        else Dedup.streamingNearDupGate(ms.toDS(), 0.8)(_._1, _._2)
-      val q = gated.toDF("text", "doc_id")
+      val q = Dedup.streamingNearDupGate(ms.toDS(), 0.8,
+          horizonMicros = horizon)(_._1, _._2)
+        .toDF("text", "doc_id")
         .writeStream.outputMode("append")
         .foreachBatch { (b: org.apache.spark.sql.Dataset[
             org.apache.spark.sql.Row], _: Long) =>
@@ -822,10 +814,10 @@ object StressProof {
       q.processAllAvailable()
       // the band op's tail-batch updated-row count IS the state-write
       // accounting (one updated row per appended ord element). The
-      // unbounded chain has ONE transformWithState op (the band op);
-      // the TTL chain has two — the band op is the one whose updates
-      // scale with appends, the doc store writes one row per NEW doc,
-      // so summing both still counts O(new) rows only.
+      // chain has two transformWithState ops under either horizon —
+      // the band op is the one whose updates scale with appends, the
+      // doc store writes one row per NEW doc, so summing both still
+      // counts O(new) rows only.
       val ops = q.lastProgress.stateOperators
       val tws = ops.filter(_.operatorName.toLowerCase
         .contains("transformwithstate"))
@@ -836,10 +828,10 @@ object StressProof {
       q.stop()
       updated
     }
-    Seq(false, true).foreach { ttl =>
-      val label = if (ttl) "ttl" else "unbounded"
-      val small = tailUpdateRows(300, ttl)
-      val big = tailUpdateRows(600, ttl)
+    Seq(None, Some(Long.MaxValue / 4)).foreach { horizon =>
+      val label = if (horizon.isDefined) "ttl" else "unbounded"
+      val small = tailUpdateRows(300, horizon)
+      val big = tailUpdateRows(600, horizon)
       println(s"STRESS hotbucket gate=$label tail_updates_at_300=$small " +
         s"tail_updates_at_600=$big")
       // relative bound (big vs small in the same run), not an exact
@@ -850,10 +842,10 @@ object StressProof {
         s"hot-bucket tail-batch state writes scale with the bucket " +
           s"($small at 300 ords vs $big at 600, $label gate) — the " +
           "O(new) ListState append has regressed to a bucket rewrite")
-      // structural per-row ceiling: 10 docs × 4 band appends + (TTL
-      // only) 10 doc-store rows — a row-count invariant of the
-      // layout, not an environment-sensitive byte measurement
-      val cap = if (ttl) 50L else 40L
+      // structural per-row ceiling: 10 docs × 4 band appends + 10
+      // doc-store rows — a row-count invariant of the layout, not an
+      // environment-sensitive byte measurement
+      val cap = 50L
       require(small <= cap,
         s"tail batch of 10 docs wrote $small state rows ($label gate) — " +
           s"more than the layout's $cap-row structural ceiling")

@@ -382,10 +382,13 @@ object Dedup {
       s"thresholds must be in (0, 1], got $thresholds")
     require(thresholds.distinct == thresholds,
       s"duplicate thresholds would double-count every row: $thresholds")
-    val ts = {
+    val seed = {
       import docs.sparkSession.implicits._
-      broadcast(thresholds.sorted.toDF("threshold"))
+      thresholds.sorted.toDF("threshold")
     }
+    // the hint serves the two crossJoins; the left outer joins below
+    // cannot build their LEFT side, so they take the unhinted seed
+    val ts = broadcast(seed)
     val sh = shingled(docs)
     val candJ = verifyJaccard(lshCandidatePairs(docs, k, r), sh, 0.0)
     val truth = jaccardPairs(docs, thresholds.min, band)
@@ -403,7 +406,7 @@ object Dedup {
     val truthAgg = truth.crossJoin(ts).groupBy("threshold").agg(
       sum(when(col("jaccard") >= col("threshold"), 1L).otherwise(0L))
         .as("n_true"))
-    ts.join(candAgg, Seq("threshold"), "left")
+    seed.join(candAgg, Seq("threshold"), "left")
       .join(truthAgg, Seq("threshold"), "left")
       .select(col("threshold"),
         coalesce(col("n_cand"), lit(0L)).as("n_cand"),
@@ -904,37 +907,27 @@ object Dedup {
   }
 
   /** Streaming exact dedup (SURVEY §2.10 X23) — first-occurrence keep
-    * over an unbounded stream of `(fingerprint, id)` rows, the
-    * crawl-pipeline shape of X1: the state store remembers every
-    * fingerprint ever admitted; a batch's group emits its MINIMUM id
-    * iff the fingerprint is new, else nothing. Compared to
-    * `dropDuplicates` (whose within-batch survivor is
-    * partition-order-dependent), the explicit min makes the output
-    * DETERMINISTIC: when the stream arrives id-ascending, the kept id
-    * is exactly the batch oracle's `min(id) GROUP BY fp` — the q31
-    * trick of proving stream ≡ batch by sharing one oracle.
+    * over an unbounded stream keyed by `key`, the crawl-pipeline shape
+    * of X1: the state store remembers every key ever admitted; a
+    * batch's group emits its row of MINIMUM `ord` iff the key is new,
+    * else nothing. Compared to `dropDuplicates` (whose within-batch
+    * survivor is partition-order-dependent), the explicit min makes
+    * the output DETERMINISTIC: when the stream arrives ord-ascending,
+    * the kept row is exactly the batch oracle's `min(id) GROUP BY fp`
+    * — the q31 trick of proving stream ≡ batch by sharing one oracle.
+    * The WHOLE row is kept, so a streaming corpus pipeline passes full
+    * documents through the gate instead of joining kept ids back
+    * against a replay of the source
+    * ([[graft.sources.CorpusIO.streamCurated]] composes it this way);
+    * a `(fingerprint, id)` stream is
+    * `streamingFirstOccurrenceBy(ds)(_._1, _._2)`.
     *
-    * Scale shape: one keyed-state exchange on the fingerprint; state is
-    * one boolean per distinct fingerprint (RocksDB-backed at real
-    * cardinality); output volume = distinct keys, not input rows. No
-    * watermark: dedup state is intentionally forever (a duplicate a
-    * year later is still a duplicate) — callers who want bounded state
-    * compose [[decontaminateBloom]]-style sketches upstream instead.
-    */
-  def streamingFirstOccurrence(
-      ds: org.apache.spark.sql.Dataset[(String, Long)])
-    : org.apache.spark.sql.Dataset[(String, Long)] = {
-    import ds.sparkSession.implicits._
-    streamingFirstOccurrenceBy(ds)(_._1, _._2)
-  }
-
-  /** Row-carrying generalization of [[streamingFirstOccurrence]]: the
-    * first occurrence keeps the WHOLE row (the batch group's minimum
-    * by `ord`), so a streaming corpus pipeline can pass full documents
-    * through the dedup gate instead of joining kept ids back against
-    * a replay of the source ([[graft.sources.CorpusIO.streamCurated]]
-    * composes it this way). Same state contract: one boolean per
-    * distinct key, forever.
+    * Scale shape: one keyed-state exchange on the key; state is one
+    * boolean per distinct key (RocksDB-backed at real cardinality);
+    * output volume = distinct keys, not input rows. No watermark:
+    * dedup state is intentionally forever (a duplicate a year later is
+    * still a duplicate) — callers who want bounded state compose
+    * [[decontaminateBloom]]-style sketches upstream instead.
     */
   def streamingFirstOccurrenceBy[T](ds: org.apache.spark.sql.Dataset[T])(
       key: T => String, ord: T => Long,
@@ -1063,6 +1056,8 @@ object Dedup {
     * PREVIOUSLY SEEN document is a verified near-duplicate of it. A
     * crawl wants near-dup rejection at the gate, not in nightly batch;
     * this was the last batch/stream asymmetry in the pipeline block.
+    * The gate is [[streamingNearDupVerdictsTagged]] filtered to
+    * `admitted` — one state machine, two views, so they cannot drift.
     *
     * Semantics (exactly the batch construction, applied online): doc f
     * is REJECTED iff some earlier doc e (smaller `ord`; earlier batch
@@ -1080,134 +1075,110 @@ object Dedup {
     * member has a direct verified edge to an earlier member, e.g.
     * mutated-copy near-dup groups).
     *
+    * `horizonMicros` is the eviction policy. `None` keeps state
+    * forever. `Some(h)` is the state answer for an INFINITE crawl:
+    * only priors with `ord(f) − ord(e) ≤ h` count, so an identical
+    * re-crawl arriving after the horizon is ADMITTED again
+    * (re-admission is the semantic point, not a leak — spec-pinned,
+    * and with a horizon wider than the corpus the verdicts equal
+    * `None`'s). Under a horizon `ord` must be event-time MICROSECONDS
+    * and arrival must be ord-ordered across batches (the crawl
+    * contract every other streaming op here assumes); see
+    * [[BandOrdsProcessor]] and [[DocShinglesProcessor]] for how state
+    * is bounded without ever changing a verdict.
+    *
     * Shingle-less docs (fewer words than the shingle width) have no
     * signature on either side of the batch pipeline and pass through
     * ungated — including EXACT duplicates of each other; compose
     * [[streamingFirstOccurrenceBy]] upstream if tiny-doc exact dedup
     * matters.
     *
-    * Shape: three chained append-mode keyed-state ops (Spark supports
-    * multiple flatMapGroupsWithState when all are append), laid out so
-    * each doc's shingle set is STORED EXACTLY ONCE (the round-11
-    * design stored it once per band bucket — k/r = 4 copies; at crawl
-    * cardinality the 4× was the difference between a RocksDB instance
-    * that fits and one that doesn't):
-    *  1. keyed on band bucket — state holds only the ORDS of seen
-    *     docs in the bucket (8 B per doc per band, ~32 B/doc total);
-    *     in-batch rows are processed in `ord` order against state ∪
-    *     earlier in-batch rows, emitting one CANDIDATE-PAIR probe row
-    *     `(prior_ord, ord, shingles)` per (prior, new) bucket
-    *     cohabitation, plus — from the band-0 bucket only (every
-    *     shingled doc has one; shingle-less docs' per-doc `e\|` key
-    *     stands in) — exactly one SELF row per doc, the ONLY row that
-    *     carries the doc payload;
-    *  2. keyed on `ord` — the doc-keyed shingle store: a doc's SELF
-    *     row stores its shingle set once and passes the payload
-    *     through; a probe row `(e, f, sh_f)` arriving at group
-    *     `e` verifies exact Jaccard(state(e), sh_f) and emits a
-    *     payload-free reject vote for `f` on a hit. A doc's shingles
-    *     are in state (earlier batch) or on its self row (this
-    *     batch) — never absent, because band state only ever holds
-    *     shingled docs' ords, written in the same batch their
-    *     shingles reach this store;
-    *  3. keyed on `ord` — the STATELESS per-batch reduce (state never
-    *     written): admitted iff no vote, exactly one payload row out,
-    *     the payload taken from the doc's self row (guaranteed to
-    *     arrive — it throws otherwise).
-    *     Sound because a doc's probes/votes are all produced within
-    *     its own micro-batch (band rows never cross batches).
+    * Shape: three chained append-mode keyed-state ops, laid out so
+    * each doc's shingle set is STORED EXACTLY ONCE (a per-band-bucket
+    * copy would cost k/r = 4× — at crawl cardinality the difference
+    * between a RocksDB instance that fits and one that doesn't):
+    *  1. keyed on band bucket ([[BandOrdsProcessor]]) — state holds
+    *     only the ORDS of seen docs in the bucket (8 B per doc per
+    *     band, ~32 B/doc total) in a ListState, so absorbing a batch
+    *     appends O(new) ords; in-batch rows are processed in `ord`
+    *     order against state ∪ earlier in-batch rows, emitting one
+    *     CANDIDATE-PAIR probe row `(prior_ord, ord, shingles)` per
+    *     (prior, new) bucket cohabitation, plus — from the band-0
+    *     bucket only (every shingled doc has one; shingle-less docs'
+    *     per-doc `e\|` key stands in) — exactly one SELF row per doc,
+    *     the ONLY row that carries the doc payload;
+    *  2. keyed on `ord` ([[DocShinglesProcessor]]) — the doc-keyed
+    *     shingle store: a doc's SELF row stores its shingle set once
+    *     (ValueState `sh`) and passes the payload through; a probe row
+    *     `(e, f, sh_f)` arriving at group `e` verifies exact
+    *     Jaccard(state(e), sh_f) and emits a payload-free reject vote
+    *     for `f` on a hit. A doc's shingles are in state (earlier
+    *     batch) or on its self row (this batch) — never absent,
+    *     because band state only ever holds shingled docs' ords,
+    *     written in the same batch their shingles reach this store;
+    *  3. keyed on `ord` ([[reduceByOrdTagged]]) — the STATELESS
+    *     per-batch reduce: admitted iff no vote, exactly one payload
+    *     row out. Sound because a doc's probes/votes are all produced
+    *     within its own micro-batch (band rows never cross batches).
     * Per batch: one exchange on bucket + two on ord; output rows =
     * admitted docs. No batch-over-batch joins, no driver-side data.
-    * vs the 2-op layout this trades one extra (small) exchange and
-    * per-candidate probe shuffle rows for 4× less state AND a lighter
-    * steady-state shuffle (a non-colliding doc ships its payload on 1
-    * band row + 1 self row, not k/r verdict rows). The payload rides
-    * EXACTLY ONE row through every exchange (band fan-out, probes,
-    * votes are all payload-free — round 13): a doc colliding with n
-    * priors ships its shingles n times but its text ONCE, so a
+    * The payload rides EXACTLY ONE row through every exchange (band
+    * fan-out, probes and votes are payload-free): a doc colliding with
+    * n priors ships its shingles n times but its text ONCE, so a
     * boilerplate-band heavy hitter costs O(pairs · shingles), not
-    * O(pairs · document) — StressProof measures the shuffle-bytes
-    * drop at stress cardinality. A pair cohabiting in several bands
-    * emits one probe per shared band — at most k/r duplicates, each
-    * re-verified cheaply in op 2 (deduplicating them would need an
-    * extra (prior, new)-keyed exchange, a worse trade than ≤ k/r
-    * spare Jaccards on ~40-long arrays). Heavy-hitter buckets still
+    * O(pairs · document) — StressProof measures the shuffle bytes at
+    * stress cardinality. A pair cohabiting in several bands emits one
+    * probe per shared band — at most k/r duplicates, each re-verified
+    * cheaply in op 2 (deduplicating them would need an extra
+    * (prior, new)-keyed exchange, a worse trade than ≤ k/r spare
+    * Jaccards on ~40-long arrays). Heavy-hitter buckets still
     * concentrate probe fan-out the same way they concentrate
-    * [[lshCandidatePairs]]'s bucket join — the shared hazard of the
-    * construction, bounded by the same banding choices.
+    * [[lshCandidatePairs]]'s bucket join — `hotBucketCap` bounds it.
     *
-    * Checkpoint compatibility: the operator chain changed in round 12
-    * (2 → 3 stateful ops, new state schemas) — a checkpoint written by
-    * the old gate cannot resume into this one (Spark fails loudly on
-    * the operator mismatch); drain-and-restart with a fresh checkpoint,
-    * or replay the crawl window. Round 13 changed op 1's operator
-    * type (flatMapGroupsWithState → transformWithState ListState), so
-    * round-12 checkpoints do not resume into this chain either —
-    * Spark refuses the operator mismatch loudly; same remedy.
+    * Under a horizon the band rows carry an event-time column `_5`
+    * (the ord lifted by [[TtlOrdLiftMicros]]) with a 1 ms watermark,
+    * which drives the eviction timers of both stateful ops and rides
+    * INTO op 2 through `transformWithState`'s event-time-column output
+    * contract (op 1 re-stamps each output row with its new doc's
+    * lifted ord, always ≥ the late-events watermark that row just
+    * passed). Delay 1 ms, not 0: the watermark is ms-floored, so under
+    * a 0 delay a doc whose lifted ord lands EXACTLY on the previous
+    * batch's watermark would be dropped as late and VANISH. The chain
+    * starts under Spark's DEFAULT static correctness checker, no
+    * opt-out (a spec pins it). Without a horizon there is no watermark
+    * and no timer; `_5` is null and `ord` may be any Long.
+    *
+    * Late arrivals (horizon only): a band row whose lifted ord falls at
+    * or below the watermark is dropped by Spark BEFORE the verify op —
+    * the doc silently vanishes from the output, the ordered-arrival
+    * contract's failure mode. Operators see the volume instead of
+    * inferring it: the drop count rides each progress event's
+    * `stateOperators.numRowsDroppedByWatermark`, surfaced as
+    * `CorpusIngestStats.nLateDroppedRows` (spec-reconciled with a
+    * planted late doc).
+    *
+    * Checkpoint compatibility: both stateful ops before the reduce are
+    * `transformWithState` under either policy. A checkpoint written
+    * while the unbounded chain's doc store was a
+    * flatMapGroupsWithState op does not resume into this chain — Spark
+    * refuses the operator mismatch loudly; drain and restart with a
+    * fresh checkpoint, or replay the crawl window.
     * Requires the RocksDB state-store provider
-    * (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider`) — transformWithState
-    * supports no other, and it is the only provider that fits at
-    * crawl cardinality regardless (SCALE §8d).
+    * ([[useRocksDbStateStore]], checked at construction) —
+    * transformWithState supports no other, and it is the only
+    * provider that fits at crawl cardinality regardless (SCALE §8d).
     */
   def streamingNearDupGate[T](ds: org.apache.spark.sql.Dataset[T],
                               threshold: Double, k: Int = 12, r: Int = 3,
-                              hotBucketCap: Int = Int.MaxValue)(
+                              hotBucketCap: Int = Int.MaxValue,
+                              horizonMicros: Option[Long] = None)(
       text: T => String, ord: T => Long)(
       implicit enc: org.apache.spark.sql.Encoder[T])
-    : org.apache.spark.sql.Dataset[T] = {
-    streamingNearDupVerdicts(ds, threshold, k, r, hotBucketCap)(text, ord)
-      .filter((v: (Long, Boolean, T)) => v._2)
-      .map((v: (Long, Boolean, T)) => v._3)(enc)
-  }
-
-  /** Audit variant of [[streamingNearDupGate]]: every doc flows
-    * through with its verdict — `(ord, admitted, doc)` — instead of
-    * rejected docs vanishing. The streaming sibling of the x97
-    * drop-reason discipline: a crawl operator asking "why did intake
-    * drop N % this hour" needs the rejected rows with their identity,
-    * not just the survivors. Same state, same two-exchange shape,
-    * exactly one output row per input doc; the gate is this stream
-    * filtered to admitted (one definition — they cannot drift).
-    *
-    * `hotBucketCap` is the heavy-hitter circuit breaker (FAISS's
-    * max-list-length, applied to LSH band buckets): probe emission
-    * per arrival is O(bucket) — inherent to bucket cohabitation — so
-    * one boilerplate band bucket concentrates unbounded per-arrival
-    * work. With a cap, a doc landing in a band bucket already holding
-    * ≥ cap ords is auto-REJECTED (a bucket that large is boilerplate
-    * by construction) at O(1): no probes are emitted, and the
-    * bucket's ord list stops growing (frozen at the cap — every later
-    * lander auto-rejects too). The rejection is an ordinary reject
-    * verdict, so the audit stream carries the dropped doc with its
-    * identity like any other rejection (the x97/x109 drop-reason
-    * discipline: bucket ≥ cap ⇒ boilerplate auto-reject is the
-    * documented, deterministic reason). The default cap = MaxValue is
-    * bit-identical to the uncapped gate (x108/x109/x110's
-    * configuration); StressProof plants a megabucket and measures the
-    * tail-batch row emission dropping from O(bucket) to O(cap).
-    * Honest residual: a capped doc's SELF row still stores its
-    * shingles in the doc store (the payload path and the store share
-    * the row, and band buckets freeze independently — op 2 cannot
-    * know whether every bucket capped), so a boilerplate storm still
-    * grows the doc store O(storm docs) at ~336 B each; the breaker
-    * bounds the band lists and the per-arrival probe work, which are
-    * the terms that scale with bucket × arrival, not doc count.
-    */
-  def streamingNearDupVerdicts[T](ds: org.apache.spark.sql.Dataset[T],
-                                  threshold: Double, k: Int = 12,
-                                  r: Int = 3,
-                                  hotBucketCap: Int = Int.MaxValue)(
-      text: T => String, ord: T => Long)(
-      implicit enc: org.apache.spark.sql.Encoder[T])
-    : org.apache.spark.sql.Dataset[(Long, Boolean, T)] = {
-    import org.apache.spark.sql.{Encoder, Encoders}
-    val outEnc: Encoder[(Long, Boolean, T)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaBoolean, enc)
-    streamingNearDupVerdictsTagged(ds, threshold, k, r, hotBucketCap)(
-        text, ord)
-      .map(v => (v._1, v._2 == ReasonAdmitted, v._4))(outEnc)
-  }
+    : org.apache.spark.sql.Dataset[T] =
+    streamingNearDupVerdictsTagged(ds, threshold, k, r, hotBucketCap,
+        horizonMicros)(text, ord)
+      .filter((v: (Long, String, Option[Long], T)) => v._2 == ReasonAdmitted)
+      .map((v: (Long, String, Option[Long], T)) => v._4)(enc)
 
   /** The audit reason labels — one definition so the gate verdicts,
     * the fixtures and the specs cannot drift on spelling. A doc's
@@ -1226,32 +1197,64 @@ object Dedup {
   val ReasonNearDup = "near_dup"
   val ReasonHotBucket = "hot_bucket"
 
-  /** Reason-tagged audit variant of [[streamingNearDupVerdicts]]:
-    * `(ord, reason, of_ord, doc)` — the x97 batch drop-reason
-    * discipline on the streaming gate. With the breaker armed, an
-    * admitted/rejected bit cannot say WHY intake dropped; operators
-    * triaging a drop spike need `near_dup(of_ord)` vs `hot_bucket`
+  /** Reason-tagged audit view of [[streamingNearDupGate]]: every doc
+    * flows out as `(ord, reason, of_ord, doc)` — the x97 batch
+    * drop-reason discipline on the streaming gate — instead of
+    * rejected docs vanishing. A crawl operator asking "why did intake
+    * drop N % this hour" needs `near_dup(of_ord)` vs `hot_bucket`
     * (boilerplate storm) spelled out per doc (see the reason-label
-    * contract above). Same state machine and exchanges as the plain
-    * verdicts — which ARE this stream with the reason collapsed to a
-    * bit (one definition, they cannot drift); both reject reasons
-    * have closed batch forms (the smaller-id verified pair rule and
-    * the row_number-per-band-signature freeze rule), so the whole
-    * stream is oracle-checkable at full scale.
+    * contract above). Under a horizon a near-dup of something BEYOND
+    * it is `admitted` (the re-admission contract). Exactly one output
+    * row per input doc.
+    *
+    * `hotBucketCap` is the heavy-hitter circuit breaker (FAISS's
+    * max-list-length, applied to LSH band buckets): probe emission
+    * per arrival is O(bucket) — inherent to bucket cohabitation — so
+    * one boilerplate band bucket concentrates unbounded per-arrival
+    * work. With a cap, a doc landing in a band bucket already holding
+    * ≥ cap live ords (every ord without a horizon; the ords within
+    * the horizon of the doc's own ord under one) is auto-REJECTED
+    * (a bucket that large is boilerplate by construction) without
+    * probing, and is not appended — the bucket freezes, and under a
+    * horizon un-freezes as entries age out. The rejection is an
+    * ordinary `hot_bucket` verdict. The default cap = MaxValue is
+    * bit-identical to the uncapped gate (x108/x109/x110's
+    * configuration); StressProof plants a megabucket and measures the
+    * tail-batch row emission dropping from O(bucket) to O(cap).
+    * Honest residual: a capped doc's SELF row still stores its
+    * shingles in the doc store (the payload path and the store share
+    * the row, and band buckets freeze independently — op 2 cannot
+    * know whether every bucket capped), so a boilerplate storm still
+    * grows the doc store O(storm docs) at ~336 B each; the breaker
+    * bounds the band lists and the per-arrival probe work, which are
+    * the terms that scale with bucket × arrival, not doc count.
+    *
+    * Oracles: both reject reasons have closed batch forms without a
+    * horizon (the smaller-id verified pair rule and the
+    * row_number-per-band-signature freeze rule), and so does the
+    * uncapped horizon gate (x129's rule with the min-prior projection
+    * — x162). With the breaker ARMED under a horizon, bucket
+    * membership becomes a sequential recurrence (a capped doc is not
+    * appended, and entries age out) that plain SQL does not express;
+    * those runs are spec-verified (eviction-independent under three
+    * lag schedules), EXCEPT at a horizon wider than the corpus span,
+    * where the recurrence collapses to the unbounded armed rule (x165,
+    * hash-equal to x161's closed form).
     *
     * Shingle-less docs (under one k-shingle of words) flow through as
-    * `admitted` with ZERO state rows and ZERO probes: no band rows ⇒
-    * no bucket entry, no shingle-store entry. The audited corpus
-    * pipe leans on exactly this — its quality-door drops ride the
-    * gate as PASSENGERS with their text emptied
+    * `admitted` with ZERO state rows, ZERO probes and no timer: no
+    * band rows ⇒ no bucket entry, no shingle-store entry. The audited
+    * corpus pipe leans on exactly this — its quality-door drops ride
+    * the gate as PASSENGERS with their text emptied
     * ([[graft.sources.CorpusIO]] `qualityAudited`), so a dropped doc
     * influences no dedup decision and costs one stateless row through
-    * the chain (spec-pinned for both gates).
+    * the chain (spec-pinned under both policies).
     */
   def streamingNearDupVerdictsTagged[T](
       ds: org.apache.spark.sql.Dataset[T],
       threshold: Double, k: Int = 12, r: Int = 3,
-      hotBucketCap: Int = Int.MaxValue)(
+      hotBucketCap: Int = Int.MaxValue,
+      horizonMicros: Option[Long] = None)(
       text: T => String, ord: T => Long)(
       implicit enc: org.apache.spark.sql.Encoder[T])
     : org.apache.spark.sql.Dataset[(Long, String, Option[Long], T)] = {
@@ -1259,119 +1262,67 @@ object Dedup {
       s"band width $r must divide signature size $k (else hashes are silently dropped)")
     require(hotBucketCap > 0,
       s"hotBucketCap must be positive, got $hotBucketCap")
-    // fail at construction, not deep inside a micro-batch: the band
-    // op is transformWithState, which Spark only runs on the RocksDB
-    // state-store provider (the provider a crawl-cardinality gate
-    // needs regardless — SCALE §8d)
+    horizonMicros.foreach(h =>
+      require(h > 0, s"horizonMicros must be positive, got $h"))
+    // fail at construction, not deep inside a micro-batch
     require(ds.sparkSession.conf.get(
         "spark.sql.streaming.stateStore.providerClass", "")
       .contains("RocksDB"),
-      "streamingNearDupGate/Verdicts needs the RocksDB state-store " +
+      "streamingNearDupGate/VerdictsTagged needs the RocksDB state-store " +
         "provider: call Dedup.useRocksDbStateStore(session) before " +
         "building the stream (transformWithState supports no other)")
     import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.functions.{col, timestamp_micros}
+    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     import ds.sparkSession.implicits.newLongArrayEncoder
+    val shEnc: Encoder[Array[Long]] = implicitly
     val optEnc: Encoder[Option[T]] = optionEncoderOf(enc)
-    val rowEnc: Encoder[(String, Long, Array[Long], Option[T])] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        implicitly[Encoder[Array[Long]]], optEnc)
+    val bandEnc: Encoder[BandRow[T]] = Encoders.tuple(Encoders.STRING,
+      Encoders.scalaLong, shEnc, optEnc, Encoders.TIMESTAMP)
+    val probeEnc: Encoder[ProbeRow[T]] = Encoders.tuple(Encoders.scalaLong,
+      Encoders.scalaLong, shEnc, optEnc, Encoders.TIMESTAMP)
+    val voteEnc: Encoder[Vote[T]] = Encoders.tuple(Encoders.scalaLong,
+      optionEncoderOf(Encoders.scalaLong), Encoders.scalaBoolean, optEnc)
     val outEnc: Encoder[(Long, String, Option[Long], T)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.STRING,
         optionEncoderOf(Encoders.scalaLong), enc)
-    // probe/self rows: (group ord, doc ord, isSelf, shingles,
-    // payload) — the payload slot is Some on exactly one row per doc
-    // (its self row); probes and votes ship None, so a doc colliding
-    // with n priors no longer fans n copies of its text through the
-    // exchanges (round 13; the band-0 payload rule lives in
-    // [[bandRowsOf]])
-    val probeEnc: Encoder[(Long, Long, Boolean, Array[Long], Option[T])] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        Encoders.scalaBoolean, implicitly[Encoder[Array[Long]]], optEnc)
-    val voteEnc: Encoder[(Long, Option[Long], Boolean, Option[T])] =
-      Encoders.tuple(Encoders.scalaLong,
-        optionEncoderOf(Encoders.scalaLong), Encoders.scalaBoolean, optEnc)
-    val shinglesEnc: Encoder[Array[Long]] = implicitly
-    // op 1: band buckets hold ORDS only, in a ListState — absorbing a
-    // batch APPENDS the new ords (O(new) state write) instead of
-    // re-serializing the whole bucket (the round-12 Seq[Long] rewrite:
-    // O(bucket) per touched batch, which a million-ord boilerplate
-    // bucket turns into MBs of write amplification per batch).
-    // transformWithState requires the RocksDB state-store provider —
-    // the only provider that fits at crawl cardinality anyway
-    // (SCALE §8d), so the gate inherits that requirement explicitly.
-    val candidates = bandRowsOf(ds, k, r)(text, ord)(rowEnc)
-      .groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(new BandOrdsProcessor[T](hotBucketCap),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())(probeEnc)
-    // op 2: the doc-keyed shingle store — each set stored ONCE; probes
-    // verify against it and emit reject votes for their new doc (a
-    // vote carries the verified prior's ord, or the hot-bucket flag
-    // for the breaker's pre-verified sentinel probes)
+    val bandRows = bandRowsOf(ds, k, r)(text, ord)(bandEnc)
+    val band = new BandOrdsProcessor[T](horizonMicros, hotBucketCap)
+    // op 1; under a horizon the watermarked `_5` declaration is what
+    // re-watermarks op 1's output for op 2's timers
+    val candidates = horizonMicros match {
+      case None =>
+        bandRows.groupByKey(_._1)(Encoders.STRING)
+          .transformWithState(band, TimeMode.None(),
+            OutputMode.Append())(probeEnc)
+      case Some(_) =>
+        bandRows.toDF()
+          .withColumn("_5", timestamp_micros(col("_2") + TtlOrdLiftMicros))
+          .withWatermark("_5", "1 millisecond")
+          .as[BandRow[T]](bandEnc)
+          .groupByKey(_._1)(Encoders.STRING)
+          .transformWithState(band, "_5", OutputMode.Append())(probeEnc)
+    }
     val verdicts = candidates.groupByKey(_._1)(Encoders.scalaLong)
-      .flatMapGroupsWithState[Array[Long], (Long, Option[Long], Boolean, Option[T])](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (g: Long,
-         rows: Iterator[(Long, Long, Boolean, Array[Long], Option[T])],
-         state: GroupState[Array[Long]]) =>
-          val rs = rows.toSeq
-          val (selfRows, probes) = rs.partition(_._3)
-          // exactly one self row per doc by construction — a second
-          // one means two DISTINCT docs share an ord within this
-          // batch, which would merge their rows downstream: the
-          // previously-undetectable cross-bucket ord tie, now loud
-          if (selfRows.length > 1)
-            throw new IllegalStateException(
-              s"duplicate ord $g across documents — ord must uniquely " +
-                "identify a document (two docs' rows would merge in the " +
-                "per-doc reduce)")
-          val out = scala.collection.mutable.ArrayBuffer
-            .empty[(Long, Option[Long], Boolean, Option[T])]
-          selfRows.foreach { case (_, o, _, sh, docOpt) =>
-            // shingle-less docs create no state. An existing entry is
-            // EITHER a batch replay (state is the pre-batch snapshot
-            // on replay, so the same doc's write re-arrives — the
-            // arrays match and the write is skipped idempotently) OR
-            // a CROSS-BATCH ord tie between two distinct docs — the
-            // arrays differ, and admitting the second doc under the
-            // first's shingles would corrupt every later verdict on
-            // this ord, so it fails loudly instead. A tie between
-            // docs with IDENTICAL shingle sets is indistinguishable
-            // from a replay and flows through — harmless by
-            // construction: identical sets produce identical
-            // verdicts, and the payload emitted is this row's own.
-            if (sh.nonEmpty) state.getOption match {
-              case None => state.update(sh)
-              case Some(prev) =>
-                if (!java.util.Arrays.equals(prev, sh))
-                  throw new IllegalStateException(
-                    s"ord $g re-arrived with a DIFFERENT shingle set — " +
-                      "two distinct documents share an ord across " +
-                      "batches; ord must uniquely identify a document")
-            }
-            out += ((o, None, false, docOpt))
-          }
-          if (probes.nonEmpty) {
-            val mine = state.getOption
-              .orElse(selfRows.headOption.map(_._4))
-              .getOrElse(throw new IllegalStateException(
-                s"probe for ord $g found neither stored shingles nor a " +
-                  "self row — band state and the doc store have diverged"))
-            probes.foreach { case (_, f, _, sh, _) =>
-              // a probe against the doc's own group is the breaker's
-              // pre-verified sentinel (ordinary probes carry a PRIOR
-              // group — a same-ord prior is the guarded ord tie):
-              // hot-bucket vote, no Jaccard needed
-              if (f == g) out += ((f, None, true, None))
-              else if (jaccardSorted(mine, sh) >= threshold)
-                out += ((f, Some(g), false, None))
-            }
-          }
-          out.iterator
-      }(shinglesEnc, voteEnc)
+      .transformWithState(
+        new DocShinglesProcessor[T](threshold, horizonMicros, shEnc),
+        if (horizonMicros.isDefined) TimeMode.EventTime() else TimeMode.None(),
+        OutputMode.Append())(voteEnc)
     reduceByOrdTagged(verdicts)(outEnc)
   }
+
+  /** The gate's row layouts. A band row is `(bucket, ord, shingles,
+    * payload, event time)`; a probe row is `(group ord, doc ord,
+    * shingles, payload, event time)`; a vote is `(doc ord, verified
+    * prior, hot-bucket flag, payload)`. The payload slot is Some on
+    * exactly one row per doc. The event-time slot is null without a
+    * horizon.
+    */
+  private type BandRow[T] =
+    (String, Long, Array[Long], Option[T], java.sql.Timestamp)
+  private type ProbeRow[T] =
+    (Long, Long, Array[Long], Option[T], java.sql.Timestamp)
+  private type Vote[T] = (Long, Option[Long], Boolean, Option[T])
 
   /** Configure `session` for the streaming gates' required state
     * store: the RocksDB provider (the band op is transformWithState,
@@ -1402,15 +1353,15 @@ object Dedup {
     session
   }
 
-  /** Loud guard on the gates' documented ord-uniqueness contract: two
+  /** Loud guard on the gate's documented ord-uniqueness contract: two
     * DISTINCT docs sharing an ord would merge into one row in
-    * [[reduceByOrd]] — silent data loss plus a verdict contaminated
-    * by the lost doc's band votes. Checked per band bucket per batch
-    * (the realistic collision — the same fetch batch stamping one
-    * ms on two docs — shares buckets via identical/near-identical
-    * content, and shingle-less ties share the per-doc `e\|ord` key);
-    * ties whose docs share NO bucket are the one undetectable
-    * residual, documented on [[reduceByOrd]].
+    * [[reduceByOrdTagged]] — silent data loss plus a verdict
+    * contaminated by the lost doc's band votes. Checked per band
+    * bucket per batch (the realistic collision — the same fetch batch
+    * stamping one ms on two docs — shares buckets via
+    * identical/near-identical content, and shingle-less ties share the
+    * per-doc `e\|ord` key); ties whose docs share NO bucket are the one
+    * undetectable residual, documented on [[reduceByOrdTagged]].
     */
   private def assertUniqueOrds(sortedOrds: Seq[Long]): Unit = {
     var i = 1
@@ -1424,37 +1375,60 @@ object Dedup {
     }
   }
 
-  /** Op 1 of [[streamingNearDupVerdicts]] as a Spark 4
-    * StatefulProcessor: the band bucket's seen-ord set lives in a
-    * ListState, so absorbing a batch WRITES O(new ords) — an
-    * appendValue per new ord — where the retired
-    * flatMapGroupsWithState layout called `state.update(seq)` and
-    * re-serialized the WHOLE bucket on any growth. Probes stay
-    * O(priors) per new doc (the inherent candidate cost of bucket
-    * cohabitation); what this removes is the write amplification on
-    * hot buckets — StressProof plants one and measures the per-batch
-    * state-write bytes staying ∝ new ords. Emission rules are the
-    * round-12 op's, verbatim: one payload-free probe per (prior, new)
-    * cohabitation, one payload-carrying self row per doc from its
-    * band-0 / `e\|` bucket. Replay-safe like any stateful op: state
-    * is versioned per batch, so a replayed batch re-appends onto the
-    * pre-batch snapshot.
+  /** Op 1 of [[streamingNearDupVerdictsTagged]]: the band bucket's
+    * seen-ord set as a ListState. Emission rules: one payload-free
+    * probe per (live prior, new) cohabitation, one payload-carrying
+    * self row `(o, o, sh, Some(doc))` per doc from its band-0 / `e\|`
+    * bucket. Replay-safe like any stateful op: state is versioned per
+    * batch, so a replayed batch re-appends onto the pre-batch snapshot.
     *
-    * `cap` is the heavy-hitter circuit breaker (see
-    * [[streamingNearDupVerdicts]]): a shingled doc landing in a
-    * bucket already holding ≥ cap ords emits ONE self-probe —
-    * `(o, o, isSelf = false, sh, None)` — instead of O(bucket)
-    * probes; the doc store verifies it against the doc's own
-    * shingles (Jaccard 1 ≥ any threshold), producing the auto-reject
-    * vote through the ordinary verify path with no second code path
-    * to drift. The bucket's list is frozen at the cap (no append) —
-    * state stops growing exactly where the work stops being paid.
-    * Replay-safe: frozen means the replayed batch re-freezes.
+    * `cap` is the heavy-hitter circuit breaker: a shingled doc whose
+    * bucket holds ≥ cap live ords emits ONE sentinel row
+    * `(o, o, [], None)` instead of O(bucket) probes and is not
+    * appended. A sentinel is the one row with `group == ord`, no
+    * payload and no shingles: a self row always carries Some, and a
+    * probe always carries its shingled doc's set (even a probe of an
+    * ord tied with a prior), so the encoding holds for any Long ord.
+    * The doc store turns the sentinel into a `hot_bucket` vote.
+    *
+    * Without a horizon every prior is live, and a batch APPENDS its
+    * new ords (O(new) state write, never a bucket rewrite — StressProof
+    * plants a hot bucket and measures the per-batch state-write rows
+    * staying ∝ new ords); the list keeps arrival order.
+    *
+    * Under a horizon `h` the live priors of a doc `o` are those with
+    * `o − e ≤ h` — the one verdict-bearing predicate, evaluated on
+    * ords at probe time, so verdicts NEVER depend on eviction timing.
+    * The retained list is kept ASCENDING (ords arrive ordered; the
+    * rare ms-gap reordered admission is inserted in place and the list
+    * rewritten), so the live slice is a suffix and one binary search
+    * yields it — O(log bucket + live) per doc, never a scan of the
+    * retained bucket, which is exactly the boilerplate-storm workload
+    * the breaker exists for. The cap compares that HORIZON-LIVE
+    * occupancy (retained beyond-horizon entries awaiting eviction do
+    * not count), so the armed verdict is eviction-independent too.
+    * Eviction, in two paths:
+    *  - per-touch: entries whose [[ttlExpiryMs]] has passed the
+    *    current watermark — the SAME inequality the timer path evicts
+    *    on, so a pruned entry is provably beyond the horizon of every
+    *    row that can still pass the late filter (a newest-ord cutoff
+    *    would not be: Spark admits slightly-reordered rows above the
+    *    previous batch's watermark, and a doc in that ms-wide gap could
+    *    still match a newest-pruned entry). ListState has no partial
+    *    delete, so the bucket is REWRITTEN only when prunable entries
+    *    are at least half of it (amortized O(1) writes per ord), else
+    *    the batch appends O(new);
+    *  - timer: one pending event-time timer per bucket, armed LAZILY —
+    *    registered only when none is pending (re-arming per touch was
+    *    pure RocksDB churn on hot buckets). An early pending timer is
+    *    just as correct: on fire, entries whose expiry has passed the
+    *    watermark are dropped — the whole bucket in the idle case —
+    *    and the timer re-arms at the survivors' real expiry.
     */
-  private final class BandOrdsProcessor[T](cap: Int = Int.MaxValue)
+  private final class BandOrdsProcessor[T](horizonMicros: Option[Long],
+                                           cap: Int)
     extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, (String, Long, Array[Long], Option[T]),
-      (Long, Long, Boolean, Array[Long], Option[T])] {
+      String, BandRow[T], ProbeRow[T]] {
     @transient private var ords: org.apache.spark.sql.streaming.ListState[Long] = _
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode)
@@ -1465,27 +1439,34 @@ object Dedup {
     }
     override def handleInputRows(
         bucket: String,
-        rows: Iterator[(String, Long, Array[Long], Option[T])],
+        rows: Iterator[BandRow[T]],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Boolean, Array[Long], Option[T])] = {
+      : Iterator[ProbeRow[T]] = {
       val sorted = rows.toSeq.sortBy(_._2)
       assertUniqueOrds(sorted.map(_._2))
       val emitSelf = bucket.startsWith("0|") || bucket.startsWith("e|")
       val prior = scala.collection.mutable.ArrayBuffer.empty[Long]
       prior ++= ords.get()
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Boolean, Array[Long], Option[T])]
-      sorted.foreach { case (_, o, sh, docOpt) =>
+      val preExisting = prior.length
+      var reordered = false
+      val out = scala.collection.mutable.ArrayBuffer.empty[ProbeRow[T]]
+      sorted.foreach { case (_, o, sh, docOpt, ts) =>
         if (sh.nonEmpty) {
-          if (prior.length >= cap) {
-            // circuit breaker: boilerplate bucket — one self-probe
-            // (verifies trivially in the doc store) instead of
-            // O(bucket) probes; the frozen list is not appended
-            out += ((o, o, false, sh, None))
-          } else {
-            prior.foreach(e => out += ((e, o, false, sh, None)))
-            ords.appendValue(o) // O(new): append, never a bucket rewrite
-            prior += o
+          val from = horizonMicros.fold(0)(h => lowerBound(prior, o - h))
+          if (prior.length - from >= cap)
+            out += ((o, o, Array.emptyLongArray, None, ts))
+          else {
+            var i = from
+            while (i < prior.length) {
+              out += ((prior(i), o, sh, None, ts)); i += 1
+            }
+            if (horizonMicros.isDefined && prior.nonEmpty && o < prior.last) {
+              // an ms-gap reordered admission (above the previous
+              // batch's watermark, below an already-seen ord): insert
+              // in place so the ascending invariant holds
+              prior.insert(lowerBound(prior, o), o)
+              reordered = true
+            } else prior += o
           }
         }
         if (emitSelf) {
@@ -1493,44 +1474,76 @@ object Dedup {
             s"band-0 row for ord $o arrived without its payload — " +
               "bandRowsOf's payload rule and the self-row rule " +
               "have drifted")
-          out += ((o, o, true, sh, docOpt))
+          out += ((o, o, sh, docOpt, ts))
         }
+      }
+      // the new ords go in as ONE appendList: per-element appendValue
+      // pays a RocksDB read of the whole merged list for each ord (the
+      // state store's row tracking), quadratic on a hot bucket
+      if (prior.length > preExisting) horizonMicros match { // some shingled doc arrived
+        case None => ords.appendList(prior.drop(preExisting).toArray)
+        case Some(h) =>
+          val wm = timerValues.getCurrentWatermarkInMs()
+          val live = prior.filter(e => ttlExpiryMs(e, h) > wm)
+          // a reordered insert changed the list's interior: appending
+          // would persist the new ord at the END and break the
+          // ascending invariant the binary search needs on the next read
+          if (reordered || (prior.length - live.length) * 2 >= prior.length)
+            ords.put(live.toArray)
+          else ords.appendList(prior.drop(preExisting).toArray)
+          if (!getHandle.listTimers().hasNext)
+            getHandle.registerTimer(ttlTimerMs(prior.last, h, wm))
       }
       out.iterator
     }
+    override def handleExpiredTimer(
+        bucket: String,
+        timerValues: org.apache.spark.sql.streaming.TimerValues,
+        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
+      : Iterator[ProbeRow[T]] = {
+      horizonMicros.foreach { h =>
+        val wm = timerValues.getCurrentWatermarkInMs()
+        val live = ords.get().filter(e => ttlExpiryMs(e, h) > wm).toArray
+        if (live.isEmpty) ords.clear()
+        else {
+          // a clamped timer can fire before the bucket's true expiry —
+          // keep the still-live entries and re-arm at the real one
+          ords.put(live)
+          getHandle.registerTimer(ttlTimerMs(live.last, h, wm))
+        }
+      }
+      Iterator.empty
+    }
   }
 
-  /** Shared band-row fan-out of the streaming gates: one row per
-    * (doc, band); shingle-less docs get a per-doc key so they flow
-    * through (no band ⇒ no candidates ⇒ admitted) WITHOUT creating
-    * state. One definition for the unbounded and TTL gates — the
-    * candidate rule cannot drift between the two state machines.
+  /** Band-row fan-out of the streaming gate: one row per (doc, band);
+    * shingle-less docs get a per-doc key so they flow through (no band
+    * ⇒ no candidates ⇒ admitted) WITHOUT creating state.
     *
     * The doc payload rides EXACTLY ONE of a doc's rows — the band-0
     * row (every shingled doc has one; a shingle-less doc's single
     * `e\|` row stands in) — and the other k/r − 1 rows ship None:
     * the verify ops only ever need the payload once (to emit it on
     * the self/verdict path), so fanning a copy per band was pure
-    * shuffle weight — the dominant per-doc exchange term once the
-    * probe rows stopped carrying payloads too (round 13). Safe
-    * against partial arrival: all of a doc's band rows carry the
-    * same ord, so a watermark drops all of them or none.
+    * shuffle weight. Safe against partial arrival: all of a doc's band
+    * rows carry the same ord, so a watermark drops all of them or
+    * none. The event-time slot is left null; a horizon fills it.
     */
   private def bandRowsOf[T](ds: org.apache.spark.sql.Dataset[T],
                             k: Int, r: Int)(
       text: T => String, ord: T => Long)(
-      implicit rowEnc: org.apache.spark.sql.Encoder[(String, Long, Array[Long], Option[T])])
-    : org.apache.spark.sql.Dataset[(String, Long, Array[Long], Option[T])] =
+      implicit bandEnc: org.apache.spark.sql.Encoder[BandRow[T]])
+    : org.apache.spark.sql.Dataset[BandRow[T]] =
     ds.flatMap { d =>
       val (hashes, bands) = localShinglesAndBands(text(d), k, r)
       val o = ord(d)
-      if (bands.isEmpty) Seq(("e|" + o, o, hashes, Option(d)))
-      else bands.toSeq.map(b =>
-        (b, o, hashes, if (b.startsWith("0|")) Option(d) else None))
-    }(rowEnc)
+      if (bands.isEmpty) Seq[BandRow[T]](("e|" + o, o, hashes, Option(d), null))
+      else bands.toSeq.map(b => (b, o, hashes,
+        if (b.startsWith("0|")) Option(d) else None, null: java.sql.Timestamp))
+    }(bandEnc)
 
   /** Encoder[Option[T]] derived from the caller's Encoder[T] — the
-    * gates' payload-on-one-row layout needs an optional payload slot,
+    * gate's payload-on-one-row layout needs an optional payload slot,
     * and Spark's public implicits cannot compose Option around an
     * abstract T, so this reaches one level into Catalyst: every
     * session-derived encoder is an ExpressionEncoder wrapping an
@@ -1545,28 +1558,27 @@ object Dedup {
         org.apache.spark.sql.catalyst.encoders.AgnosticEncoders
           .agnosticEncoderFor(enc)))
 
-  /** Shared final reduce of the streaming gates: keyed on `ord`, a
-    * STATELESS per-batch fold (state is never written) — a doc is
-    * admitted iff no bucket voted reject, exactly one payload row
-    * emitted, reason-tagged per the label contract on
-    * [[ReasonAdmitted]]. Sound because every band row of a doc is produced
-    * within its own micro-batch. One definition for both gates.
-    * Relies on the documented ord-uniqueness contract: the verify
-    * ops throw loudly on a within-bucket ord tie
-    * ([[assertUniqueOrds]]), and BOTH gates' doc-keyed stores
-    * additionally detect cross-bucket ties — same-batch (two self
-    * rows on one ord) and cross-batch (an ord re-arriving with a
-    * different shingle set; in the TTL gate only within the horizon —
-    * beyond it the first doc's store entry is evicted, and a
-    * beyond-horizon tie collides with nothing). The residuals, all
-    * harmless: a cross-batch tie between docs with IDENTICAL shingle
-    * sets flows through (identical sets produce identical verdicts),
-    * and a cross-batch tie involving a SHINGLE-LESS doc flows through
-    * (no state on either side; the rows sit in different batches, so
-    * this per-batch reduce never merges them).
+  /** Final reduce of the streaming gate: keyed on `ord`, a STATELESS
+    * per-batch fold (state is never written) — a doc is admitted iff
+    * no bucket voted reject, exactly one payload row emitted,
+    * reason-tagged per the label contract on [[ReasonAdmitted]]. Sound
+    * because every band row of a doc is produced within its own
+    * micro-batch. Relies on the documented ord-uniqueness contract:
+    * the band op throws loudly on a within-bucket ord tie
+    * ([[assertUniqueOrds]]), and the doc store additionally detects
+    * cross-bucket ties — same-batch (two self rows on one ord) and
+    * cross-batch (an ord re-arriving with a different shingle set;
+    * under a horizon only within it — beyond it the first doc's store
+    * entry is evicted, and a beyond-horizon tie collides with
+    * nothing). The residuals, all harmless: a cross-batch tie between
+    * docs with IDENTICAL shingle sets flows through (the re-arrival
+    * probes its own stored set and reads `near_dup` of itself), and a
+    * cross-batch tie involving a SHINGLE-LESS doc flows through (no
+    * state on either side; the rows sit in different batches, so this
+    * per-batch reduce never merges them).
     */
   private def reduceByOrdTagged[T](
-      verdicts: org.apache.spark.sql.Dataset[(Long, Option[Long], Boolean, Option[T])])(
+      verdicts: org.apache.spark.sql.Dataset[Vote[T]])(
       implicit outEnc: org.apache.spark.sql.Encoder[(Long, String, Option[Long], T)])
     : org.apache.spark.sql.Dataset[(Long, String, Option[Long], T)] = {
     import org.apache.spark.sql.Encoders
@@ -1574,8 +1586,7 @@ object Dedup {
     verdicts.groupByKey(_._1)(Encoders.scalaLong)
       .flatMapGroupsWithState[Boolean, (Long, String, Option[Long], T)](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (o: Long, rows: Iterator[(Long, Option[Long], Boolean, Option[T])],
-         _: GroupState[Boolean]) =>
+        (o: Long, rows: Iterator[Vote[T]], _: GroupState[Boolean]) =>
           val rs = rows.toSeq
           // the payload arrives on exactly one row per doc (the
           // self/band-0 path); votes ship None — a missing payload
@@ -1597,263 +1608,38 @@ object Dedup {
       }(Encoders.scalaBoolean, outEnc)
   }
 
-  /** Horizon-bounded (TTL) variant of [[streamingNearDupGate]] — the
-    * state answer for an INFINITE crawl: the unbounded gate's state
-    * grows with every distinct band bucket forever, while a rolling
-    * crawl only needs near-dup rejection against the recent past. A
-    * doc f is REJECTED iff some earlier doc e with
-    * `ord(f) − ord(e) ≤ horizonMicros` shares an LSH band bucket and
-    * verifies at exact Jaccard ≥ `threshold`; an identical re-crawl
-    * arriving after the horizon is ADMITTED again (re-admission is
-    * the semantic point, not a leak — spec-pinned, and with a horizon
-    * wider than the corpus the gate ≡ [[streamingNearDupGate]], the
-    * drift pin between the two state machines).
-    *
-    * `ord` must be UNIQUE event-time MICROSECONDS (the per-doc reduce
-    * keys on it — both gates emit one row per ord) and arrival must
-    * be ord-ordered across batches (the crawl contract every other
-    * streaming op here assumes). Bounded state, mechanically:
-    *  - per-touch pruning — a bucket keeps only entries whose
-    *    [[ttlExpiryMs]] is still ahead of the watermark (an entry
-    *    behind it can never match any row the late filter still
-    *    admits);
-    *  - whole-bucket eviction — a watermark on the ord timestamp
-    *    drives `EventTimeTimeout`: a bucket silent past its newest
-    *    ord + horizon is REMOVED by the state store, so idle buckets
-    *    don't outlive the horizon either (the residual the per-touch
-    *    rule alone cannot reclaim; StressProof pins state rows ≪
-    *    docs seen).
-    * Neither eviction path can change a verdict: a pruned or
-    * timed-out entry is beyond the horizon of every non-late future
-    * doc by construction.
-    *
-    * Shape (round 14): the SAME three chained append-mode keyed-state
-    * ops as [[streamingNearDupGate]] — band buckets holding ORDS only
-    * (ListState, O(new) appends), the doc-keyed shingle store (each
-    * set stored EXACTLY ONCE), the stateless per-doc reduce — so the
-    * TTL gate now pays the unbounded gate's state constant
-    * (~336 B/doc) instead of the retired per-bucket-copy layout's
-    * k/r = 4×, plus horizon eviction. The horizon predicate
-    * `ord(f) − ord(e) ≤ horizonMicros` is evaluated on ORDS at probe
-    * time (op 1), so verdicts are a pure function of the data and
-    * NEVER depend on eviction timing; eviction is purely a state-size
-    * mechanism, in two paths per store:
-    *  - per-touch pruning (band op) — entries whose [[ttlExpiryMs]]
-    *    the watermark has passed: the SAME inequality the timers
-    *    evict on, so pruned entries are provably beyond the horizon
-    *    of every row that can still pass the late filter (a
-    *    newest-ord cutoff would not be — Spark admits slightly-
-    *    reordered rows above the previous batch's watermark, and a
-    *    doc in that ms-wide gap could still match a newest-pruned
-    *    entry). ListState has no partial delete, so the prune
-    *    rewrites the bucket only when stale entries are at least
-    *    HALF of it (each rewrite is charged to at least as many
-    *    dropped entries — amortized O(1) writes per ord, O(new) per
-    *    ordinary batch, the hotbucket discipline);
-    *  - event-time timers (both ops) — a bucket or doc silent past
-    *    `ord + horizon` is reclaimed by `handleExpiredTimer` once the
-    *    watermark passes its conservative ms-ceiling expiry, so idle
-    *    state doesn't outlive the horizon either. Timer expiries are
-    *    clamped to watermark + 1 (the round-13 reordered-arrival
-    *    lesson: Spark admits rows between its late-events watermark
-    *    and its eviction watermark, so an unclamped expiry can land
-    *    behind the clock).
-    * Neither path can change a verdict: an evicted entry is beyond
-    * the horizon of every row that can still pass the late filter
-    * (watermark monotonicity + the probe-time ord check — the
-    * eviction spec pins re-admission and the empty post-sweep store).
-    * With `hotBucketCap` ARMED the same property holds: the
-    * auto-reject triggers on the bucket's HORIZON-LIVE occupancy at
-    * the arriving doc's ord (beyond-horizon entries awaiting
-    * eviction do not count), so the armed verdict too is a pure
-    * function of the ords — a spec drives the cap margin under three
-    * eviction-lag schedules and pins identical verdicts.
-    * The watermark rides INTO op 2 via `transformWithState`'s
-    * event-time-column output contract (op 1 re-stamps each output
-    * row with its new doc's lifted ord, always ≥ the late-events
-    * watermark that row just passed), which is what lets the doc
-    * store run its own timers. Same candidate/verify rules and
-    * shingle-less pass-through as the unbounded gate.
-    *
-    * The chain starts under Spark's DEFAULT static correctness
-    * checker — no opt-out: the retired flatMapGroupsWithState layout
-    * tripped the watermark-plus-chained-stateful rule (the round-13
-    * `withChainedStatefulOverride` helper existed solely to scope
-    * that opt-out), but transformWithState chains declare their
-    * event-time flow explicitly (the "_5" output-column contract) and
-    * pass the checker as-is, so the helper is retired with the
-    * layout. A spec pins the property (a plain `.start()` with the
-    * checker at its default) so a future Spark version re-flagging
-    * the chain fails loudly, not silently.
-    *
-    * Checkpoint compatibility: round 14 changed the chain (2 → 3
-    * stateful ops, flatMapGroupsWithState → transformWithState, new
-    * state schemas) — a checkpoint written by the round-13 TTL gate
-    * cannot resume into this one; Spark refuses the operator mismatch
-    * loudly. Drain-and-restart with a fresh checkpoint, or replay the
-    * crawl window. Requires the RocksDB state-store provider, checked
-    * at construction ([[useRocksDbStateStore]]).
-    *
-    * Late arrivals: a band row whose (lifted) ord falls at or below
-    * the watermark is dropped by Spark BEFORE the verify op — the doc
-    * silently vanishes from the output, which is the documented
-    * ordered-arrival contract's failure mode. Operators see the
-    * volume instead of inferring it: the drop count rides each
-    * progress event's `stateOperators.numRowsDroppedByWatermark`,
-    * surfaced as `CorpusIngestStats.nLateDroppedRows` (spec-reconciled
-    * with a planted late doc).
+  /** The horizon's uniform ord → event-time lift (µs): ord 0 would sit
+    * exactly on the INITIAL watermark (epoch 0) and be dropped as
+    * late; a constant shift preserves every gap. One definition — the
+    * event-time column and both processors' expiry math derive from
+    * it.
     */
-  def streamingNearDupGateTtl[T](ds: org.apache.spark.sql.Dataset[T],
-                                 threshold: Double, horizonMicros: Long,
-                                 k: Int = 12, r: Int = 3,
-                                 hotBucketCap: Int = Int.MaxValue)(
-      text: T => String, ord: T => Long)(
-      implicit enc: org.apache.spark.sql.Encoder[T])
-    : org.apache.spark.sql.Dataset[T] =
-    streamingNearDupVerdictsTaggedTtl(ds, threshold, horizonMicros, k, r,
-        hotBucketCap)(text, ord)
-      .filter((v: (Long, String, Option[Long], T)) => v._2 == ReasonAdmitted)
-      .map((v: (Long, String, Option[Long], T)) => v._4)(enc)
+  private val TtlOrdLiftMicros = 1000000L
 
-  /** Reason-tagged audit variant of [[streamingNearDupGateTtl]] —
-    * the TTL sibling of [[streamingNearDupVerdictsTagged]]: every doc
-    * flows out as `(ord, reason, of_ord, doc)` under the horizon
-    * semantics (a near-dup of something BEYOND the horizon is
-    * `admitted`, the re-admission contract; within it, `near_dup`
-    * with the smallest verified in-horizon prior). The gate is this
-    * stream filtered to admitted — one state machine, two views. At
-    * the default cap = ∞ the whole stream has a closed batch form
-    * (x129's rule widened with the min-prior projection — the x162
-    * oracle); with the breaker ARMED the `hot_bucket` reason appears
-    * and the kept set stays deterministic (eviction-independent,
-    * spec-pinned), but bucket membership becomes a sequential
-    * recurrence (a capped doc is not appended, and entries age out),
-    * which plain SQL does not express — armed TTL runs are therefore
-    * spec-verified rather than oracle-hashed, EXCEPT at a degenerate
-    * horizon wider than the corpus span, where nothing ages out and
-    * the armed recurrence collapses to the unbounded armed rule
-    * (the x165 oracle row: hash-equal to x161's closed form).
-    *
-    * Shingle-less docs are stateless `admitted` passengers here too —
-    * no band rows, no shingle-store entry, no TIMER (nothing to
-    * evict): the audited pipe's emptied-text quality drops
-    * ([[graft.sources.CorpusIO]] `qualityAudited`) stay
-    * watermark-compatible on the clean branch at zero state cost
-    * (spec-pinned for both gates).
+  /** Conservative ms-ceiling expiry of an ord under horizon `h`:
+    * strictly greater than the µs instant `ord + lift + h`, so state
+    * evicted at a fired timer (watermark ≥ expiry) satisfies
+    * `watermarkMs · 1000 > ord + lift + h` — and any row still able to
+    * pass the late filter (`eventTime > watermarkMs`, watermarks
+    * monotone) has `ord' + lift > watermarkMs · 1000`, hence
+    * `ord' − ord > h`: beyond the horizon of everything evicted, so
+    * eviction can never change a verdict.
     */
-  def streamingNearDupVerdictsTaggedTtl[T](
-      ds: org.apache.spark.sql.Dataset[T],
-      threshold: Double, horizonMicros: Long,
-      k: Int = 12, r: Int = 3,
-      hotBucketCap: Int = Int.MaxValue)(
-      text: T => String, ord: T => Long)(
-      implicit enc: org.apache.spark.sql.Encoder[T])
-    : org.apache.spark.sql.Dataset[(Long, String, Option[Long], T)] = {
-    require(r > 0 && k % r == 0,
-      s"band width $r must divide signature size $k (else hashes are silently dropped)")
-    require(horizonMicros > 0, s"horizonMicros must be positive, got $horizonMicros")
-    require(hotBucketCap > 0,
-      s"hotBucketCap must be positive, got $hotBucketCap")
-    require(ds.sparkSession.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", "")
-      .contains("RocksDB"),
-      "streamingNearDupGateTtl/VerdictsTaggedTtl needs the RocksDB " +
-        "state-store provider: call Dedup.useRocksDbStateStore(session) " +
-        "before building the stream (transformWithState supports no other)")
-    import org.apache.spark.sql.{Encoder, Encoders}
-    import org.apache.spark.sql.functions.{col, timestamp_micros}
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    import ds.sparkSession.implicits.newLongArrayEncoder
-    val optEnc: Encoder[Option[T]] = optionEncoderOf(enc)
-    val rowEnc: Encoder[(String, Long, Array[Long], Option[T])] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        implicitly[Encoder[Array[Long]]], optEnc)
-    val outEnc: Encoder[(Long, String, Option[Long], T)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.STRING,
-        optionEncoderOf(Encoders.scalaLong), enc)
-    val voteEnc: Encoder[(Long, Option[Long], Boolean, Option[T])] =
-      Encoders.tuple(Encoders.scalaLong,
-        optionEncoderOf(Encoders.scalaLong), Encoders.scalaBoolean, optEnc)
-    val bandRows = bandRowsOf(ds, k, r)(text, ord)(rowEnc)
-    // the watermark drives the eviction timers. Delay 1 ms, not 0: the
-    // watermark is ms-floored, so under a 0 delay a doc whose lifted
-    // ord lands EXACTLY on the previous batch's watermark (ms-aligned
-    // ords) would be dropped as late and VANISH from the output; 1 ms
-    // of slack makes every non-decreasing arrival survive, and only
-    // delays eviction by that same 1 ms.
-    // The watermarked timestamp must survive INTO the stateful ops
-    // (event-time timers validate its presence), so it rides as tuple
-    // slot _5 rather than being projected away
-    val rowEnc5: Encoder[(String, Long, Array[Long], Option[T], java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.STRING, Encoders.scalaLong,
-        implicitly[Encoder[Array[Long]]], optEnc, Encoders.TIMESTAMP)
-    // probe/self rows between op 1 and op 2: (group ord, doc ord,
-    // shingles, payload, event time). A self row is `group == ord`
-    // (probes always have group < ord — priors are strictly earlier),
-    // so no separate flag is needed and the tuple stays within
-    // Encoders.tuple's 5-slot arity. The payload slot is Some on
-    // exactly one row per doc (its self row) — the unbounded gate's
-    // payload-on-one-row rule; the event-time slot carries the NEW
-    // doc's lifted ord so the watermark chain survives into op 2
-    // (each emitted row's stamp is the one its inputs just passed the
-    // late filter with, so the update-column check cannot fire).
-    val probeEnc: Encoder[(Long, Long, Array[Long], Option[T], java.sql.Timestamp)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
-        implicitly[Encoder[Array[Long]]], optEnc, Encoders.TIMESTAMP)
-    // constant +1 s lift: ord 0 would sit exactly on the INITIAL
-    // watermark (epoch 0) and be dropped as late; a uniform shift
-    // preserves every gap, so horizon semantics are untouched
-    val lift = TtlOrdLiftMicros
-    val withWm = bandRows.toDF() // keeps _1.._4 — the tuple encoder resolves by name
-      .withColumn("_5", timestamp_micros(col("_2") + lift))
-      .withWatermark("_5", "1 millisecond")
-      .as[(String, Long, Array[Long], Option[T], java.sql.Timestamp)](rowEnc5)
-    // op 1: band buckets hold ORDS only (ListState, O(new) appends +
-    // the amortized half-stale prune); probes are emitted ONLY for
-    // priors within the horizon — the one verdict-bearing predicate,
-    // on ords alone. The "_5" event-time-column declaration is what
-    // re-watermarks op 1's output for op 2's timers.
-    val candidates = withWm.groupByKey(_._1)(Encoders.STRING)
-      .transformWithState(
-        new BandOrdsTtlProcessor[T](horizonMicros, lift, hotBucketCap),
-        "_5", OutputMode.Append())(probeEnc)
-    // op 2: the doc-keyed shingle store (each set stored ONCE, a
-    // ValueState per doc) with a one-shot eviction timer at
-    // ord + horizon; probes verify exact Jaccard and emit
-    // payload-free reject votes
-    val verdicts = candidates.groupByKey(_._1)(Encoders.scalaLong)
-      .transformWithState(
-        new DocShinglesTtlProcessor[T](threshold, horizonMicros, lift,
-          implicitly[Encoder[Array[Long]]]),
-        TimeMode.EventTime(), OutputMode.Append())(voteEnc)
-    reduceByOrdTagged(verdicts)(outEnc)
-  }
+  private def ttlExpiryMs(ordMicros: Long, horizonMicros: Long): Long =
+    (ordMicros + TtlOrdLiftMicros + horizonMicros) / 1000L + 1L
 
-  /** The TTL gate's uniform ord → event-time lift (µs): ord 0 would
-    * sit exactly on the INITIAL watermark (epoch 0) and be dropped as
-    * late; a constant shift preserves every gap. One definition —
-    * the event-time column, both processors' expiry math and the
-    * specs' state reads all derive from it.
+  /** Timer instant for an ord's expiry, clamped to watermark + 1:
+    * Spark admits rows between its late-events watermark and its
+    * eviction watermark, so an unclamped expiry can land at or behind
+    * the clock.
     */
-  private[graft] val TtlOrdLiftMicros = 1000000L
-
-  /** Conservative ms-ceiling expiry of an ord under the TTL gate's
-    * horizon: strictly greater than the µs instant `ord + lift +
-    * horizon`, so state evicted at a fired timer (watermark ≥ expiry)
-    * satisfies `watermarkMs · 1000 > ord + lift + horizon` — and any
-    * row still able to pass the late filter (`eventTime >
-    * watermarkMs`, watermarks monotone) has `ord' + lift >
-    * watermarkMs · 1000`, hence `ord' − ord > horizon`: beyond the
-    * horizon of everything evicted, so eviction can never change a
-    * verdict.
-    */
-  private def ttlExpiryMs(ordMicros: Long, liftMicros: Long,
-                          horizonMicros: Long): Long =
-    (ordMicros + liftMicros + horizonMicros) / 1000L + 1L
+  private def ttlTimerMs(ordMicros: Long, horizonMicros: Long,
+                         watermarkMs: Long): Long =
+    math.max(ttlExpiryMs(ordMicros, horizonMicros), watermarkMs + 1L)
 
   /** First index in ascending `xs` whose value is ≥ `cut` (`xs.length`
-    * when none) — locates the horizon-live suffix of a TTL band
-    * bucket's retained ord list in O(log bucket).
+    * when none) — locates the horizon-live suffix of a band bucket's
+    * retained ord list in O(log bucket).
     */
   private def lowerBound(xs: scala.collection.mutable.ArrayBuffer[Long],
                          cut: Long): Int = {
@@ -1866,213 +1652,36 @@ object Dedup {
     lo
   }
 
-  /** Op 1 of [[streamingNearDupGateTtl]]: the band bucket's seen-ord
-    * set as a ListState (the unbounded gate's O(new)-write layout)
-    * plus horizon eviction. Probe emission applies the horizon
-    * predicate on ords — the verdict-bearing check, independent of
-    * any eviction timing. Eviction:
-    *  - per-touch: entries whose [[ttlExpiryMs]] has passed the
-    *    current watermark — the SAME inequality the timer path
-    *    evicts on, so a pruned entry is provably beyond the horizon
-    *    of every row that can still pass the late filter (a
-    *    newest-ord cutoff would not be: Spark admits slightly-
-    *    reordered rows above the previous batch's watermark, and a
-    *    doc in that ms-wide gap could still match a newest-pruned
-    *    entry). ListState has no partial delete, so the bucket is
-    *    REWRITTEN only when prunable entries are at least half of it
-    *    (amortized O(1) writes per ord — each rewrite is charged to
-    *    at least as many dropped entries), else the batch appends
-    *    O(new);
-    *  - timer: one pending event-time timer per bucket, armed LAZILY
-    *    — registered only when none is pending (re-arming per touch
-    *    was pure RocksDB churn on hot buckets). An early pending
-    *    timer is just as correct: on fire, entries whose expiry has
-    *    passed the watermark are dropped — the whole bucket in the
-    *    idle case — and the timer re-arms at the survivors' real
-    *    expiry, converging to the empty bucket in a bounded number
-    *    of fires.
-    * Timer expiries are clamped to watermark + 1: Spark admits rows
-    * between its late-events watermark and its eviction watermark, so
-    * an unclamped expiry can land at or behind the clock (the
-    * round-13 setTimeoutTimestamp crash, same mechanics).
+  /** Op 2 of [[streamingNearDupVerdictsTagged]]: the doc-keyed shingle
+    * store — each shingle set stored EXACTLY ONCE, in the ValueState
+    * `sh`. A self row stores the set and passes the payload through;
+    * a probe verifies exact Jaccard against the stored set (or the
+    * self row's, same batch) and emits a reject vote on a hit; a
+    * sentinel (`group == ord` without payload or shingles) is the
+    * band op's pre-verified hot-bucket reject.
     *
-    * `cap` is the heavy-hitter circuit breaker (see
-    * [[streamingNearDupVerdicts]]): a doc whose bucket holds ≥ cap
-    * HORIZON-LIVE ords (entries within `horizonMicros` of the doc's
-    * own ord — retained beyond-horizon entries awaiting eviction do
-    * not count, so the armed verdict is as eviction-independent as
-    * the unarmed one) auto-rejects WITHOUT probing the bucket and is
-    * not appended. Cost of the occupancy check: the retained list is
-    * kept ASCENDING (ords arrive ordered; the rare ms-gap reordered
-    * admission is re-inserted in place — see the handler), so the
-    * horizon-live slice is a suffix and one binary search yields its
-    * size — O(log bucket) per storm doc, not a full scan of the
-    * retained bucket, which is exactly the workload the breaker
-    * exists for. The TTL probe tuple has no self flag
-    * (`group == ord` IS the self row), so the auto-reject rides a
-    * NEGATIVE sentinel group `-ord - 1` the doc store turns into a
-    * reject vote — sound because TTL ords are event-time µs
-    * (non-negative, asserted on the capped path). Horizon interplay:
-    * the live count falling below the cap — entries aging out of the
-    * horizon — un-freezes the bucket, so a boilerplate STORM
-    * auto-rejects while it lasts and the bucket resumes normal
-    * verification afterwards, with no dependence on when eviction
-    * physically reclaims the aged entries.
+    * An existing entry met by a self row is EITHER a batch replay
+    * (state is the pre-batch snapshot on replay, so the same doc's
+    * write re-arrives — the arrays match and the write is skipped
+    * idempotently) OR a CROSS-BATCH ord tie between two distinct docs
+    * — the arrays differ, and admitting the second doc under the
+    * first's shingles would corrupt every later verdict on this ord,
+    * so it fails loudly instead. A tie between docs with IDENTICAL
+    * shingle sets is indistinguishable from a replay and flows
+    * through — harmless by construction.
+    *
+    * Under a horizon each stored set gets a one-shot event-time
+    * eviction timer at its [[ttlExpiryMs]]. A probe for a doc whose
+    * state was evicted is impossible by the expiry inequality: the
+    * probing doc would have to be beyond the horizon, and op 1 checks
+    * the horizon on ords before emitting. Without a horizon no timer
+    * is registered.
     */
-  private final class BandOrdsTtlProcessor[T](horizonMicros: Long,
-                                              liftMicros: Long,
-                                              cap: Int = Int.MaxValue)
+  private final class DocShinglesProcessor[T](threshold: Double,
+                                              horizonMicros: Option[Long],
+                                              shEnc: org.apache.spark.sql.Encoder[Array[Long]])
     extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, (String, Long, Array[Long], Option[T], java.sql.Timestamp),
-      (Long, Long, Array[Long], Option[T], java.sql.Timestamp)] {
-    @transient private var ords: org.apache.spark.sql.streaming.ListState[Long] = _
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode)
-      : Unit = {
-      ords = getHandle.getListState[Long]("ords",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-    override def handleInputRows(
-        bucket: String,
-        rows: Iterator[(String, Long, Array[Long], Option[T], java.sql.Timestamp)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Long, Array[Long], Option[T], java.sql.Timestamp)] = {
-      val sorted = rows.toSeq.sortBy(_._2)
-      assertUniqueOrds(sorted.map(_._2))
-      val emitSelf = bucket.startsWith("0|") || bucket.startsWith("e|")
-      val prior = scala.collection.mutable.ArrayBuffer.empty[Long]
-      prior ++= ords.get()
-      val preExisting = prior.length
-      // the ASCENDING invariant (maintained by the insert below and
-      // by append-in-ord-order everywhere else) is what makes the
-      // horizon-live slice a SUFFIX: `o - e <= horizonMicros` is
-      // `e >= o - horizonMicros`, so one binary search locates the
-      // slice for both the armed breaker's occupancy and the probe
-      // emission — O(log bucket + live) per doc, never a scan of the
-      // whole retained bucket (the boilerplate-storm workload the
-      // breaker exists for would otherwise pay O(bucket) per storm doc)
-      var reordered = false
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Long, Array[Long], Option[T], java.sql.Timestamp)]
-      sorted.foreach { case (_, o, sh, docOpt, ts) =>
-        if (sh.nonEmpty) {
-          // the cap compares the HORIZON-LIVE occupancy at this doc's
-          // ord — retained beyond-horizon entries awaiting eviction
-          // do not count — so the armed verdict is a pure function of
-          // the ords, independent of eviction lag, exactly like the
-          // unarmed gate
-          val from = lowerBound(prior, o - horizonMicros)
-          if (cap != Int.MaxValue && prior.length - from >= cap) {
-            // circuit breaker: boilerplate bucket — one sentinel row
-            // (the doc store's g < 0 vote path) instead of O(bucket)
-            // probes; the capped doc is not appended, and entries
-            // aging out of the horizon un-freeze the bucket
-            if (o < 0L) throw new IllegalStateException(
-              s"hotBucketCap needs non-negative ords (event-time µs), " +
-                s"got $o — the reject sentinel encodes as -ord - 1")
-            out += ((-o - 1L, o, sh, None, ts))
-          } else {
-            // the horizon predicate lives HERE, on ords — retained
-            // beyond-horizon entries (eviction lag, the prefix below
-            // `from`) emit nothing
-            var i = from
-            while (i < prior.length) {
-              out += ((prior(i), o, sh, None, ts)); i += 1
-            }
-            if (prior.nonEmpty && o < prior.last) {
-              // an ms-gap reordered admission (above the previous
-              // batch's watermark, below an already-seen ord): insert
-              // in place so the ascending invariant holds; rare by
-              // the ordered-arrival contract, and the storage rewrite
-              // below repairs the persisted order too
-              prior.insert(lowerBound(prior, o), o)
-              reordered = true
-            } else prior += o
-          }
-        }
-        if (emitSelf) {
-          if (docOpt.isEmpty) throw new IllegalStateException(
-            s"band-0 row for ord $o arrived without its payload — " +
-              "bandRowsOf's payload rule and the self-row rule " +
-              "have drifted")
-          out += ((o, o, sh, docOpt, ts))
-        }
-      }
-      if (prior.length > preExisting) { // some shingled doc arrived
-        // prune on the SAME watermark inequality as the timer path
-        // (see [[ttlExpiryMs]]): an entry is dropped only when every
-        // row that can still pass the late filter is provably beyond
-        // its horizon. A newest-ord cutoff is NOT that proof — Spark
-        // admits slightly-reordered rows above the previous batch's
-        // watermark (ms flooring + the 1 ms delay), and a reordered
-        // doc in that gap could still match an entry a newest-based
-        // prune had just dropped, silently ADMITTING a true near-dup.
-        val wm = timerValues.getCurrentWatermarkInMs()
-        val live = prior.filter(e =>
-          ttlExpiryMs(e, liftMicros, horizonMicros) > wm)
-        val stale = prior.length - live.length
-        if (reordered || stale * 2 >= prior.length)
-          // full rewrite when the prune amortizes it (drops ≥ half the
-          // bucket) OR when a reordered insert changed the list's
-          // interior — appendValue would persist the new ord at the
-          // END and break the ascending invariant the binary search
-          // needs on the next read (reorders are rare by the arrival
-          // contract, so this rewrite is not a steady-state cost)
-          ords.put(live.toArray)
-        else
-          prior.view.drop(preExisting).foreach(ords.appendValue)
-        // one PENDING timer per bucket, armed lazily: re-arming on
-        // every touch (delete + register per batch) was pure RocksDB
-        // churn on hot buckets — an EARLY pending timer is just as
-        // correct, because the expiry handler keeps still-live
-        // entries and re-arms at their real expiry, converging to
-        // the empty bucket in a bounded number of fires
-        if (!getHandle.listTimers().hasNext)
-          getHandle.registerTimer(math.max(
-            ttlExpiryMs(prior.last, liftMicros, horizonMicros),
-            wm + 1L))
-      }
-      out.iterator
-    }
-    override def handleExpiredTimer(
-        bucket: String,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[(Long, Long, Array[Long], Option[T], java.sql.Timestamp)] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val live = ords.get()
-        .filter(e => ttlExpiryMs(e, liftMicros, horizonMicros) > wm)
-        .toArray
-      if (live.isEmpty) ords.clear()
-      else {
-        // a clamped timer can fire before the bucket's true expiry —
-        // keep the still-live entries and re-arm at the real one
-        ords.put(live)
-        getHandle.registerTimer(math.max(
-          ttlExpiryMs(live.last, liftMicros, horizonMicros), wm + 1L))
-      }
-      Iterator.empty
-    }
-  }
-
-  /** Op 2 of [[streamingNearDupGateTtl]]: the doc-keyed shingle store
-    * — each shingle set stored EXACTLY ONCE (a ValueState per doc,
-    * the unbounded gate's 1× discipline) — with a one-shot event-time
-    * eviction timer at the doc's [[ttlExpiryMs]]. A probe for a doc
-    * whose state was evicted is impossible by the expiry inequality
-    * (see [[ttlExpiryMs]]): the probing doc would have to be beyond
-    * the horizon, and op 1 checks the horizon on ords before
-    * emitting. Same self-row idempotence/ord-tie detection as the
-    * unbounded gate's doc store.
-    */
-  private final class DocShinglesTtlProcessor[T](threshold: Double,
-                                                 horizonMicros: Long,
-                                                 liftMicros: Long,
-                                                 shEnc: org.apache.spark.sql.Encoder[Array[Long]])
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Long, Array[Long], Option[T], java.sql.Timestamp),
-      (Long, Option[Long], Boolean, Option[T])] {
+      Long, ProbeRow[T], Vote[T]] {
     @transient private var sh: org.apache.spark.sql.streaming.ValueState[Array[Long]] = _
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode)
@@ -2082,34 +1691,26 @@ object Dedup {
     }
     override def handleInputRows(
         g: Long,
-        rows: Iterator[(Long, Long, Array[Long], Option[T], java.sql.Timestamp)],
+        rows: Iterator[ProbeRow[T]],
         timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Long, Option[Long], Boolean, Option[T])] = {
-      // negative group = the band op's hot-bucket reject sentinel
-      // (-ord - 1): a pre-verified boilerplate rejection — emit the
-      // hot-bucket vote, touch no state (stateless key, nothing to
-      // evict)
-      if (g < 0L) return rows.map(r => (r._2, None, true, None))
-      val rs = rows.toSeq
-      val (selfRows, probes) = rs.partition(r => r._1 == r._2)
+      : Iterator[Vote[T]] = {
+      val (selfRows, probes) =
+        rows.toSeq.partition(p => p._1 == p._2 && p._4.isDefined)
+      // exactly one self row per doc by construction — a second one
+      // means two DISTINCT docs share an ord within this batch
       if (selfRows.length > 1)
         throw new IllegalStateException(
           s"duplicate ord $g across documents — ord must uniquely " +
             "identify a document (two docs' rows would merge in the " +
             "per-doc reduce)")
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Option[Long], Boolean, Option[T])]
+      val out = scala.collection.mutable.ArrayBuffer.empty[Vote[T]]
       selfRows.foreach { case (_, o, shArr, docOpt, _) =>
-        // shingle-less docs create no state (and need no timer). An
-        // existing entry is a batch replay (same array — skipped
-        // idempotently) or a cross-batch ord tie between distinct
-        // docs (different arrays — loud), as in the unbounded store.
+        // shingle-less docs create no state (and need no timer)
         if (shArr.nonEmpty) {
           if (!sh.exists()) {
             sh.update(shArr)
-            getHandle.registerTimer(math.max(
-              ttlExpiryMs(o, liftMicros, horizonMicros),
-              timerValues.getCurrentWatermarkInMs() + 1L))
+            horizonMicros.foreach(h => getHandle.registerTimer(
+              ttlTimerMs(o, h, timerValues.getCurrentWatermarkInMs())))
           } else if (!java.util.Arrays.equals(sh.get(), shArr))
             throw new IllegalStateException(
               s"ord $g re-arrived with a DIFFERENT shingle set — " +
@@ -2125,7 +1726,8 @@ object Dedup {
             s"probe for ord $g found neither stored shingles nor a " +
               "self row — band state and the doc store have diverged"))
         probes.foreach { case (_, f, shF, _, _) =>
-          if (jaccardSorted(mine, shF) >= threshold)
+          if (f == g && shF.isEmpty) out += ((f, None, true, None)) // sentinel
+          else if (jaccardSorted(mine, shF) >= threshold)
             out += ((f, Some(g), false, None))
         }
       }
@@ -2135,7 +1737,7 @@ object Dedup {
         g: Long,
         timerValues: org.apache.spark.sql.streaming.TimerValues,
         expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[(Long, Option[Long], Boolean, Option[T])] = {
+      : Iterator[Vote[T]] = {
       // past the horizon of every row the late filter can still
       // admit — reclaim the doc's one stored copy
       sh.clear()

@@ -2062,11 +2062,12 @@ object Similarity {
       .start()
   }
 
-  /** The index maintenance lock — the same [[graft.streaming
-    * .SinkLock]] mutual exclusion the metric store and corpus sink
-    * compactions use (the discipline exists once): every index WRITER
-    * (build, append, compact) takes the compact-token scope, so two
-    * writers can never race a version number or a staging dir.
+  /** The index maintenance lock — the same
+    * [[graft.streaming.SinkLock]] mutual exclusion the metric store
+    * and corpus sink compactions use (the discipline exists once):
+    * every index WRITER (build, append, compact) takes the
+    * compact-token scope, so two writers can never race a version
+    * number or a staging dir.
     * Searches are read-only, unlocked AND consistent — they pin the
     * newest published manifest, whose tree survives one full
     * maintenance cycle past its successor's publish.

@@ -305,15 +305,15 @@ object CorpusIO {
     * gate survivors on both sides), evaluating the SAME
     * `TextAnalysis.qualityScore` column as the batch gate.
     *
-    * `nearDupTtlMicros = Some(h)` (requires `nearDup`) swaps the
-    * unbounded near-dup gate for the horizon-bounded
-    * [[graft.operators.Dedup.streamingNearDupGateTtl]] — the state
-    * answer for an INFINITE crawl. Quarantine rows cannot ride
-    * THROUGH a watermarked gate (their minted negative ords would sit
-    * forever below any watermark and Spark would drop them as late
-    * before the state op; stamping them with processing time instead
-    * would drag the watermark around non-deterministically under
-    * replay), so the TTL mode routes them AROUND it: the typed stream
+    * `nearDupTtlMicros = Some(h)` (requires `nearDup`) runs the
+    * near-dup gate under horizon `h`
+    * ([[graft.operators.Dedup.streamingNearDupGate]]'s
+    * `horizonMicros`) — the state answer for an INFINITE crawl.
+    * Quarantine rows cannot ride THROUGH a watermarked gate (their
+    * minted negative ords would sit forever below any watermark and
+    * Spark would drop them as late before the state op; stamping them
+    * with processing time instead would drag the watermark around
+    * non-deterministically under replay), so the TTL mode routes them AROUND it: the typed stream
     * splits after the ord minting, only the clean branch is
     * watermarked and gated, and the quarantine branch unions back
     * before the sink — one QUERY, one checkpoint/offset ledger, the
@@ -353,15 +353,13 @@ object CorpusIO {
     * shape.
     *
     * `nearDupHotBucketCap = Some(n)` (requires `nearDup`) arms the
-    * gates' heavy-hitter circuit breaker: a doc landing in a band
-    * bucket already holding ≥ n (horizon-live, in the TTL layout)
-    * entries auto-rejects without probing the bucket — O(1) on the
-    * unbounded gate, O(log bucket) on the TTL one (the binary-searched
-    * live suffix) — and the bucket freezes — the
-    * boilerplate-storm bound a production crawl
-    * wants at the pipe level (semantics and closed form on
-    * [[graft.operators.Dedup.streamingNearDupVerdicts]]; the x158 row
-    * oracle-pins them). Unset = uncapped, today's behavior.
+    * gate's heavy-hitter circuit breaker: a doc landing in a band
+    * bucket already holding ≥ n live (horizon-live, under a horizon)
+    * entries auto-rejects without probing the bucket, and the bucket
+    * freezes — the boilerplate-storm bound a production crawl wants at
+    * the pipe level (semantics and closed form on
+    * [[graft.operators.Dedup.streamingNearDupVerdictsTagged]]; the x158
+    * row oracle-pins them). Unset = uncapped, today's behavior.
     */
   def streamCurated(raw: DataFrame, outPath: String, checkpointDir: String,
                     buckets: Int = 256,
@@ -379,7 +377,7 @@ object CorpusIO {
         "rejects into the quarantine sink with their reason")
     require(nearDupHotBucketCap.isEmpty || nearDup.isDefined,
       "nearDupHotBucketCap needs nearDup (it caps the near-dup gate's " +
-        "band buckets — see Dedup.streamingNearDupVerdicts)")
+        "band buckets — see Dedup.streamingNearDupVerdictsTagged)")
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = raw.sparkSession
     import spark.implicits._
@@ -520,8 +518,21 @@ object CorpusIO {
         q_reason = v._2,
         q_raw = s"""{"doc_id":${v._4.doc_id}""" +
           v._3.fold("")(e => s""","of_ord":$e""") + "}")
+    // the near-dup admission gate of both layouts: the reason-tagged
+    // view when rejects are audited, the filtered view otherwise
+    def nearDupGated(ds: org.apache.spark.sql.Dataset[PipeDoc], t: Double)
+      : org.apache.spark.sql.Dataset[PipeDoc] = {
+      val cap = nearDupHotBucketCap.getOrElse(Int.MaxValue)
+      if (auditGateRejects)
+        graft.operators.Dedup.streamingNearDupVerdictsTagged(ds, t,
+          hotBucketCap = cap, horizonMicros = nearDupTtlMicros)(
+          _.text, _.ord).map(rejectToQuarantine _)
+      else graft.operators.Dedup.streamingNearDupGate(ds, t,
+        hotBucketCap = cap, horizonMicros = nearDupTtlMicros)(
+        _.text, _.ord)
+    }
     val first: org.apache.spark.sql.Dataset[PipeDoc] = nearDupTtlMicros match {
-      case Some(horizon) =>
+      case Some(_) =>
         // TTL layout: the quarantine rows go AROUND the watermarked
         // gate (split after the ord minting, union before the sink) —
         // inside it their minted negative ords are forever-late. NO
@@ -570,17 +581,7 @@ object CorpusIO {
         }.observe("corpus_gated",
           sum(when(col("q_reason").isNull, 1L).otherwise(0L))
             .as("n_gate_pass"))
-        val admitted =
-          if (auditGateRejects)
-            graft.operators.Dedup.streamingNearDupVerdictsTaggedTtl(
-              cleanGated, nearDup.get, horizon,
-              hotBucketCap = nearDupHotBucketCap.getOrElse(Int.MaxValue))(
-              _.text, _.ord)
-              .map(rejectToQuarantine _)
-          else graft.operators.Dedup.streamingNearDupGateTtl(
-            cleanGated, nearDup.get, horizon,
-            hotBucketCap = nearDupHotBucketCap.getOrElse(Int.MaxValue))(
-            _.text, _.ord)
+        val admitted = nearDupGated(cleanGated, nearDup.get)
         val quar = typed.filter(col("q_reason").isNotNull)
           .observe("corpus_quar",
             sum(when(col("q_reason") === "malformed", 1L).otherwise(0L))
@@ -628,15 +629,7 @@ object CorpusIO {
         // gates without creating state (no shingles / explicit bypass
         // with a "q|" key a 32-hex md5 can never produce).
         nearDup match {
-          case Some(t) if auditGateRejects =>
-            graft.operators.Dedup.streamingNearDupVerdictsTagged(typed, t,
-              hotBucketCap = nearDupHotBucketCap.getOrElse(Int.MaxValue))(
-              _.text, _.ord)
-              .map(rejectToQuarantine _)
-          case Some(t) =>
-            graft.operators.Dedup.streamingNearDupGate(typed, t,
-              hotBucketCap = nearDupHotBucketCap.getOrElse(Int.MaxValue))(
-              _.text, _.ord)
+          case Some(t) => nearDupGated(typed, t)
           case None =>
             graft.operators.Dedup.streamingFirstOccurrenceBy(typed)(
               d => if (d.q_reason != null) "q|" + d.ord
@@ -646,7 +639,7 @@ object CorpusIO {
     }
     // the TTL plan (watermark + chained transformWithState) passes
     // Spark's static correctness checker as-is — no opt-out needed
-    // since the round-14 gate layout (see streamingNearDupGateTtl)
+    // (see Dedup.streamingNearDupGate)
     val q = lock.startGuarded(spark) {
       first.toDF()
         // the reject-reason counters ride the SAME observe node as

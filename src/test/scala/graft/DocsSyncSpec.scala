@@ -92,6 +92,39 @@ class DocsSyncSpec extends AnyFunSuite {
         stale.map { case (o, m) => s"$o.$m" }.toSeq.sorted.mkString(", "))
   }
 
+  test("every scaladoc [[link]] under src/main names a definition under src/main") {
+    import scala.jdk.CollectionConverters._
+    val sources = {
+      val stream = Files.walk(Paths.get("src/main"))
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => (p.toString, Files.readString(p))).toList
+      finally stream.close()
+    }
+    def q(name: String) = java.util.regex.Pattern.quote(name)
+    def defines(src: String, name: String): Boolean =
+      s"\\b(?:def|val|var|class|object|trait|type)\\s+${q(name)}\\b".r
+        .findFirstIn(src).isDefined
+    // `[[Object.name]]` resolves when one file defines both (the
+    // COVERAGE.md rule); a bare name or a `graft.`-qualified path
+    // resolves by its last segment anywhere under src/main. Links
+    // into the JDK, Scala or a dependency are not checked.
+    def resolves(target: String): Boolean = target.split('.').toList match {
+      case ("org" | "java" | "scala") :: _ => true
+      case "graft" :: path => sources.exists(f => defines(f._2, path.last))
+      case obj :: member :: Nil if obj.head.isUpper =>
+        sources.exists(f => defines(f._2, obj) && defines(f._2, member))
+      case path => sources.exists(f => defines(f._2, path.last))
+    }
+    val links = sources.flatMap { case (file, src) =>
+      "\\[\\[([^\\]\\s]+)".r.findAllMatchIn(src).map(m => (file, m.group(1)))
+    }
+    assert(links.nonEmpty, "no scaladoc links found under src/main")
+    val stale = links.filterNot(l => resolves(l._2)).distinct
+    assert(stale.isEmpty,
+      "scaladoc links to names src/main does not define: " +
+        stale.map { case (f, t) => s"$f: [[$t]]" }.mkString(", "))
+  }
+
   test("README headline counts equal the registry and the spec tree") {
     val readme = Files.readString(Paths.get("README.md"))
     val counts = "(\\d+) queries \\((\\d+) DuckDB-oracle-checked".r

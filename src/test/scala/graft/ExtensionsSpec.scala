@@ -1890,10 +1890,8 @@ class ExtensionsSpec extends AnyFunSuite {
       Dedup.useRocksDbStateStore(ss)
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)](ss)
-      val tagged =
-        if (ttl) Dedup.streamingNearDupVerdictsTaggedTtl(
-          ms.toDS(), 0.5, 1000000L)(_._2, _._1)
-        else Dedup.streamingNearDupVerdictsTagged(ms.toDS(), 0.5)(_._2, _._1)
+      val tagged = Dedup.streamingNearDupVerdictsTagged(ms.toDS(), 0.5,
+        horizonMicros = Option.when(ttl)(1000000L))(_._2, _._1)
       val q = tagged.map(v => (v._1, v._2)).toDF("doc_id", "reason")
         .writeStream.outputMode("append").format("memory")
         .queryName(s"gate_passengers_$ttl").start()
@@ -2033,27 +2031,9 @@ class ExtensionsSpec extends AnyFunSuite {
     ms.addData(texts.take(2)); q.processAllAvailable()
     ms.addData(texts.drop(2)); q.processAllAvailable()
     q.stop()
-    // operator ids are assigned by the planner, not plan order — read
-    // all three stores and classify by their measured shape (both
-    // array-state stores share the value schema, so shape IS the id)
-    def store(opId: Int) = {
-      def base = ss.read.format("statestore")
-        .option("path", ckpt.toString).option("operatorId", opId.toString)
-      scala.util.Try {
-        val st = base.load()
-        (st.count(),
-          st.select(coalesce(sum(size(col("value.groupState.value"))),
-            lit(0)).cast("long")).as[Long].head())
-      }.orElse(scala.util.Try {
-        // the transformWithState band op: a named ListState read back
-        // flattened — one row per (bucket, ord) element, so buckets =
-        // distinct keys and the ord-long payload = element count
-        val st = base.option("stateVarName", "ords").load()
-        (st.select(col("key")).distinct().count(), st.count())
-      }).getOrElse((0L, 0L))
-    }
-    val shapes = (0 to 2).map(i =>
-      scala.util.Try(store(i)).getOrElse((0L, 0L))).sorted
+    // operator ids are planner-assigned: the shared state reader
+    // classifies the three stores by their measured shape
+    val shapes = StressProof.gateStoreShapes(ss, ckpt.toString)
     // irreducible: each shingled doc's distinct-hash count, once
     val perDoc = texts.map { case (_, t) =>
       Dedup.localShinglesAndBands(t, 12, 3)._1.length.toLong
@@ -2075,13 +2055,13 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("gate TTL state is the unbounded gate's 1×-shingles + ords-only layout — measured") {
     import spark.implicits._
-    // the round-14 port: the TTL gate runs the SAME 3-op state layout
-    // as the unbounded gate (band buckets hold only ords, the
-    // doc-keyed store holds each shingle set exactly once, the reduce
-    // holds nothing) — k/r = 4× less state than the retired
-    // per-bucket-copy design. Horizon wider than the fixture so
-    // nothing evicts during the measurement; the eviction spec below
-    // pins the other half (state → 0 past the horizon).
+    // under a horizon the gate runs the SAME 3-op chain and state
+    // layout (band buckets hold only ords, the doc-keyed store holds
+    // each shingle set exactly once, the reduce holds nothing) —
+    // k/r = 4× less state than a per-bucket-copy design. Horizon
+    // wider than the fixture so nothing evicts during the
+    // measurement; the eviction spec below pins the other half
+    // (state → 0 past the horizon).
     val texts = Seq(
       (1L, (1 to 40).map(i => s"tok$i").mkString(" ")),
       (2L, (50 to 75).map(i => s"alt$i").mkString(" ")),
@@ -2093,8 +2073,8 @@ class ExtensionsSpec extends AnyFunSuite {
     Dedup.useRocksDbStateStore(ss)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(
-        ms.toDS(), 0.5, 1000000000L * 1000000L)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+        horizonMicros = Some(1000000000L * 1000000L))(_._2, _._1)
       .toDF("doc_id", "text")
       .writeStream.outputMode("append")
       .option("checkpointLocation", ckpt.toString)
@@ -2102,35 +2082,9 @@ class ExtensionsSpec extends AnyFunSuite {
     ms.addData(texts.take(2)); q.processAllAvailable()
     ms.addData(texts.drop(2)); q.processAllAvailable()
     q.stop()
-    // operator ids are planner-assigned — classify the three stores
-    // by measured shape, reading each through the spelling its
-    // operator type supports (Try cascade, as the unbounded spec)
-    def store(opId: Int): (Long, Long) = {
-      def base = ss.read.format("statestore")
-        .option("path", ckpt.toString).option("operatorId", opId.toString)
-      scala.util.Try {
-        // the stateless reduce (flatMapGroupsWithState, never writes)
-        val st = base.load()
-        (st.count(),
-          st.select(coalesce(sum(size(col("value.groupState.value"))),
-            lit(0)).cast("long")).as[Long].head())
-      }.orElse(scala.util.Try {
-        // the band op: named ListState, flattened one row per element
-        val st = base.option("stateVarName", "ords").load()
-        (st.select(col("key")).distinct().count(), st.count())
-      }).orElse(scala.util.Try {
-        // the doc store: named ValueState holding the hash array
-        val st = base.option("stateVarName", "sh").load()
-        val longs = scala.util.Try(
-          st.select(coalesce(sum(size(col("value.value"))), lit(0))
-            .cast("long")).as[Long].head())
-          .getOrElse(st.select(coalesce(sum(size(col("value"))), lit(0))
-            .cast("long")).as[Long].head())
-        (st.count(), longs)
-      }).getOrElse((0L, 0L))
-    }
-    val shapes = (0 to 2).map(i =>
-      scala.util.Try(store(i)).getOrElse((0L, 0L))).sorted
+    // operator ids are planner-assigned: the shared state reader
+    // classifies the three stores by their measured shape
+    val shapes = StressProof.gateStoreShapes(ss, ckpt.toString)
     val perDoc = texts.map { case (_, t) =>
       Dedup.localShinglesAndBands(t, 12, 3)._1.length.toLong
     }
@@ -2155,7 +2109,8 @@ class ExtensionsSpec extends AnyFunSuite {
     Dedup.useRocksDbStateStore(ss)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, horizon)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+        horizonMicros = Some(horizon))(_._2, _._1)
       .toDF("ord", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_ttl").start()
@@ -2209,7 +2164,8 @@ class ExtensionsSpec extends AnyFunSuite {
       s"fixture: the checker must be at its default, got ${ss.conf.get(key)}")
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, 1000000L)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+        horizonMicros = Some(1000000L))(_._2, _._1)
       .toDF("ord", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_default_checker").start()
@@ -2232,7 +2188,8 @@ class ExtensionsSpec extends AnyFunSuite {
     ss.streams.addListener(stats)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, 100L * sec)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+        horizonMicros = Some(100L * sec))(_._2, _._1)
       .toDF("ord", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_late").start()
@@ -2287,12 +2244,10 @@ class ExtensionsSpec extends AnyFunSuite {
       Dedup.useRocksDbStateStore(ss)
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)](ss)
-      val gated =
-        if (ttl) Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5,
-          1000000000L * 1000000L, hotBucketCap = 3)(_._2, _._1)
-        else Dedup.streamingNearDupGate(ms.toDS(), 0.5,
-          hotBucketCap = 3)(_._2, _._1)
-      val q = gated.toDF("ord", "text")
+      val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5, hotBucketCap = 3,
+          horizonMicros = Option.when(ttl)(1000000000L * 1000000L))(
+          _._2, _._1)
+        .toDF("ord", "text")
         .writeStream.outputMode("append").format("memory")
         .queryName("gate_breaker").start()
       ms.addData((0 until 10).map(i => (i.toLong, hot)) :+ (10L, cold))
@@ -2323,6 +2278,37 @@ class ExtensionsSpec extends AnyFunSuite {
         s"breaker (ttl=$ttl) band state grew past the frozen cap: " +
           s"$bandOrds rows")
     }
+  }
+
+  test("armed unbounded gate accepts negative ords: the breaker fixture shifted by -1000 keeps the shifted set") {
+    import spark.implicits._
+    // the corpus pipe mints negative ords for quarantine rows, and the
+    // unbounded gate promises any Long ord — so the breaker's sentinel
+    // must not encode through the ord's sign. The breaker fixture
+    // above with every ord moved 1000 below zero: the storm owner and
+    // the unrelated doc are kept, nothing else.
+    val hot = (1 to 40).map(i => s"hot$i").mkString(" ")
+    val cold = (100 to 140).map(i => s"cold$i").mkString(" ")
+    val shift = -1000L
+    val ss = spark.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    Dedup.useRocksDbStateStore(ss)
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)](ss)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5, hotBucketCap = 3)(
+        _._2, _._1)
+      .toDF("ord", "text")
+      .writeStream.outputMode("append").format("memory")
+      .queryName("gate_breaker_negative").start()
+    ms.addData((0 until 10).map(i => (i + shift, hot)) :+ (10L + shift, cold))
+    q.processAllAvailable()
+    ms.addData((20 until 25).map(i => (i + shift, hot)))
+    q.processAllAvailable()
+    q.stop()
+    val kept = ss.table("gate_breaker_negative").select("ord").as[Long]
+      .collect().toSet
+    assert(kept == Set(0L + shift, 10L + shift),
+      s"negative-ord breaker verdicts wrong: kept $kept")
   }
 
   test("TTL gate prune is watermark-sound: a reordered doc still rejects against an entry a newest-ord prune would have dropped") {
@@ -2360,8 +2346,8 @@ class ExtensionsSpec extends AnyFunSuite {
     Dedup.useRocksDbStateStore(ss)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, 5000L,
-        k = 3, r = 3)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5, k = 3, r = 3,
+        horizonMicros = Some(5000L))(_._2, _._1)
       .toDF("ord", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_ttl_reorder").start()
@@ -2404,8 +2390,8 @@ class ExtensionsSpec extends AnyFunSuite {
       Dedup.useRocksDbStateStore(ss)
       val ms = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)](ss)
-      val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, h,
-          hotBucketCap = 3)(_._2, _._1)
+      val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5, hotBucketCap = 3,
+          horizonMicros = Some(h))(_._2, _._1)
         .toDF("ord", "text")
         .writeStream.outputMode("append").format("memory")
         .queryName("gate_ttl_cap_lag").start()
@@ -3214,7 +3200,8 @@ class ExtensionsSpec extends AnyFunSuite {
     Dedup.useRocksDbStateStore(ss)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, 100L * sec)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+        horizonMicros = Some(100L * sec))(_._2, _._1)
       .toDF("ord", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_ttl_tie").start()
@@ -3250,7 +3237,8 @@ class ExtensionsSpec extends AnyFunSuite {
     Dedup.useRocksDbStateStore(ss)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(ms.toDS(), 0.5, 100L * sec)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+        horizonMicros = Some(100L * sec))(_._2, _._1)
       .toDF("ord", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_ttl_dup_ord").start()
@@ -3266,6 +3254,36 @@ class ExtensionsSpec extends AnyFunSuite {
       s"expected the ord-tie refusal, got: ${e.getMessage}")
   }
 
+  test("gate: an ord re-arriving with the same shingle set reads near_dup of itself under both policies") {
+    import spark.implicits._
+    // the identical-set tie the doc store lets through as a replay:
+    // the re-arrival probes its own stored ord and verifies at
+    // Jaccard 1 — near_dup with of_ord = itself — and must not be read
+    // as the breaker's sentinel, which shares `group == ord`
+    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
+    val sec = 1000000L
+    Seq(false, true).foreach { ttl =>
+      val ss = spark.newSession()
+      ss.conf.set("spark.sql.shuffle.partitions", "4")
+      Dedup.useRocksDbStateStore(ss)
+      val ms = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[(Long, String)](ss)
+      val q = Dedup.streamingNearDupVerdictsTagged(ms.toDS(), 0.5,
+          horizonMicros = Option.when(ttl)(100L * sec))(_._2, _._1)
+        .map(v => (v._1, v._2, v._3)).toDF("ord", "reason", "of_ord")
+        .writeStream.outputMode("append").format("memory")
+        .queryName(s"gate_same_ord_$ttl").start()
+      ms.addData(Seq((5L * sec, base))); q.processAllAvailable()
+      ms.addData(Seq((5L * sec, base))); q.processAllAvailable()
+      q.stop()
+      val got = ss.table(s"gate_same_ord_$ttl")
+        .as[(Long, String, Option[Long])].collect().toSet
+      assert(got == Set((5L * sec, Dedup.ReasonAdmitted, None),
+          (5L * sec, Dedup.ReasonNearDup, Some(5L * sec))),
+        s"ttl=$ttl: $got")
+    }
+  }
+
   test("gate TTL with a horizon wider than the corpus equals the unbounded gate") {
     import spark.implicits._
     val rows = docs.select("doc_id", "text").as[(Long, String)]
@@ -3275,8 +3293,8 @@ class ExtensionsSpec extends AnyFunSuite {
     Dedup.useRocksDbStateStore(ss)
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, String)](ss)
-    val q = Dedup.streamingNearDupGateTtl(
-      ms.toDS(), 0.5, Long.MaxValue / 4)(_._2, _._1)
+    val q = Dedup.streamingNearDupGate(ms.toDS(), 0.5,
+      horizonMicros = Some(Long.MaxValue / 4))(_._2, _._1)
       .toDF("doc_id", "text")
       .writeStream.outputMode("append").format("memory")
       .queryName("gate_ttl_wide").start()
@@ -3286,8 +3304,8 @@ class ExtensionsSpec extends AnyFunSuite {
     q.stop()
     val kept = ss.table("gate_ttl_wide").select("doc_id")
       .as[Long].collect().toSet
-    // the drift pin between the two state machines: with nothing ever
-    // beyond the horizon, TTL ≡ the x108 closed form
+    // the pin between the chain's two eviction policies: with nothing
+    // ever beyond the horizon, TTL ≡ the x108 closed form
     val rejected = Dedup.minhashNearDups(docs, 0.5)
       .select("doc_b").as[Long].collect().toSet
     assert(kept == rows.map(_._1).toSet -- rejected)

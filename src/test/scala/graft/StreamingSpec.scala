@@ -1013,7 +1013,8 @@ class StreamingSpec extends AnyFunSuite {
     import ss.implicits._
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(String, Long)](ss)
-    val q = graft.operators.Dedup.streamingFirstOccurrence(ms.toDS())
+    val q = graft.operators.Dedup.streamingFirstOccurrenceBy(ms.toDS())(
+      _._1, _._2)
       .toDF("fp", "id")
       .writeStream.outputMode("append")
       .format("memory").queryName("sfo_test").start()
